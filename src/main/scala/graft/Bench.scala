@@ -287,19 +287,8 @@ object Bench {
     f.delete(): Unit
   }
 
-  private def buildSession(cpus: String): SparkSession = {
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    tmpfsLocalDir.foreach(builder.config("spark.local.dir", _))
-    Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  private def buildSession(): SparkSession =
+    Session.build(confs = tmpfsLocalDir.map("spark.local.dir" -> _).toMap)
 
   /** Untimed JVM priming, run once per bench JVM before any timed query:
     * a few passes of representative work (parquet scan + hash join +
@@ -410,8 +399,7 @@ object Bench {
     }.mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = Session.sfDir
     // 4 reps since round 12: paired full-suite runs showed queries with
     // ~1.5-3 s warms still C2-compiling through rep 3 (monotone
     // 1.65→1.55→1.50 shapes, min always landing on the last rep) — a
@@ -428,9 +416,9 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val forkOff = sys.env.get("SPARK_GRAFT_BENCH_FORK").contains("0")
     if (!isChild && !forkOff && only.isEmpty)
-      mainForked(sfDir, cpus, timedRuns)
+      mainForked(sfDir, timedRuns)
     else
-      mainInProcess(sfDir, cpus, timedRuns, only, isChild)
+      mainInProcess(sfDir, timedRuns, only, isChild)
   }
 
   /** Suite-start settle with bounded backoff: wait in 20 s steps while
@@ -454,7 +442,7 @@ object Bench {
     * Forked-mode children land here (with their family as the subset), as
     * do SPARK_GRAFT_BENCH_ONLY dev runs and SPARK_GRAFT_BENCH_FORK=0
     * full-suite runs (the aging A/B lever). */
-  private def mainInProcess(sfDir: String, cpus: String, timedRuns: Int,
+  private def mainInProcess(sfDir: String, timedRuns: Int,
                             only: Option[Set[String]],
                             isChild: Boolean): Unit = {
     // bounded settle-backoff: a spike from the previous driver step
@@ -466,7 +454,7 @@ object Bench {
     // would dominate suite wall time.
     val loadBefore = if (isChild) loadavg() else settle()
     val loadTainted = !isChild && loadBefore.head > LoadTaint
-    val spark = buildSession(cpus)
+    val spark = buildSession()
     val selected = (only match {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None        => SparkEntry.queries
@@ -510,8 +498,7 @@ object Bench {
   /** Forked-mode orchestrator: split the suite into alphabetical families
     * of [[FamilySize]], run each in a fresh child JVM (same flags and
     * classpath as this one), merge the children's detail artifacts. */
-  private def mainForked(sfDir: String, cpus: String,
-                         timedRuns: Int): Unit = {
+  private def mainForked(sfDir: String, timedRuns: Int): Unit = {
     var loadBefore = loadavg()
     if (loadBefore.head > LoadTaint) {
       System.err.println(f"[bench] loadavg ${loadBefore.head}%.2f > $LoadTaint at start; settling 20s")
@@ -581,7 +568,7 @@ object Bench {
         env.put("SPARK_GRAFT_BENCH_ONLY", family.mkString(","))
         env.put("SPARK_GRAFT_BENCH_DETAIL", detailFile.getAbsolutePath)
         env.put("SPARK_GRAFT_SF_DIR", sfDir)
-        env.put("SPARK_GRAFT_CPUS", cpus)
+        env.put("SPARK_GRAFT_CPUS", Session.cores.toString)
         env.put("SPARK_GRAFT_BENCH_RUNS", timedRuns.toString)
         val exit = try pb.start().waitFor()
           catch { case e: Throwable =>
@@ -624,7 +611,7 @@ object Bench {
           // fail-open: this family runs in-process (carries aging bias for
           // at most FamilySize queries, flagged by its nonzero child_exit)
           System.err.println(s"[bench] family $i: every child sample failed; running in-process")
-          val spark = buildSession(cpus)
+          val spark = buildSession()
           // same priming every child JVM gets — without it the fallback
           // family would carry the fresh-JVM +50-150% early-position JIT
           // bias into the merged artifact (flagged only via child_exits)

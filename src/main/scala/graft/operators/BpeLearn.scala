@@ -462,7 +462,7 @@ object BpeLearn {
     * symbol-disjoint scan are byte-identical to [[learnBatched]],
     * including the adaptive ask.
     *
-    * MEASURED (BpeSizing, sf0.1 expand=2000, ~52k words, 30k merges at
+    * MEASURED (sizing probe, sf0.1 expand=2000, ~52k words, 30k merges at
     * batch 1024 — NOTES r13): batched 68 s, incremental 151 s, merge
     * sequences IDENTICAL across all 30k merges and 214 rounds. The
     * plain path wins at probe scale, and the r12 premise that delta

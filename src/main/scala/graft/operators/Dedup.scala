@@ -177,23 +177,13 @@ object Dedup {
     * prefix test), orders below the all-pairs join. The per-doc rank
     * windows partition by doc_id — bounded by a document's gram count,
     * never corpus-wide. */
-  /** The per-doc prefix frame of the PPJoin candidate stage:
-    * (doc_id, g, __n = doc's distinct-gram count, __rn = the gram's rank
-    * under the global (df, g) rarity order), restricted to each doc's
-    * first `n − ⌈t·n⌉ + 1` ranks and EAGERLY checkpointed (the candidate
-    * self-join reads it twice above its exchange). The 1e-9 slack guards
-    * an fp product landing just ABOVE an exact integer (which would
-    * shorten the prefix and could MISS a pair); landing below only
-    * lengthens it — more candidates, still exact. Shared with
-    * [[graft.tools.JpProbe]] so the diagnostic can never drift from the
-    * operator. */
   /** Every posting with its doc's size and the gram's rank under the
     * global (df, g) rarity order — the shared windowed core of the
     * prefix-filtered engines. One window exec: row_number and the
     * per-doc total share the same (partition, order) spec — different
     * frames, one exchange + sort. LAZY (no checkpoint): each caller
     * stages the subset it actually re-reads. */
-  private[graft] def withRarityRanks(postings: DataFrame): DataFrame = {
+  private def withRarityRanks(postings: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dfs = postings.groupBy(col("g")).agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("g"))
@@ -217,12 +207,17 @@ object Dedup {
     * guards an fp product landing just ABOVE an exact integer (which
     * would shorten the prefix and could MISS a pair); landing below only
     * lengthens it — more candidates, still exact. */
-  private[graft] def inPrefix(threshold: Double): Column =
+  private def inPrefix(threshold: Double): Column =
     col("__rn") <=
       col("__n") - ceil(lit(threshold) * col("__n") - lit(1e-9)) + 1
 
-  private[graft] def prefixFrame(postings: DataFrame,
-                                 threshold: Double): DataFrame =
+  /** The per-doc prefix frame of the PPJoin candidate stage:
+    * (doc_id, g, __n = doc's distinct-gram count, __rn = the gram's rank
+    * under the global (df, g) rarity order), restricted to each doc's
+    * [[inPrefix]] ranks and EAGERLY checkpointed (the candidate self-join
+    * reads it twice above its exchange). */
+  private def prefixFrame(postings: DataFrame,
+                          threshold: Double): DataFrame =
     withRarityRanks(postings)
       .filter(inPrefix(threshold))
       .localCheckpoint(true)
@@ -243,7 +238,7 @@ object Dedup {
     *    bound is tighter and the pair truly cannot reach the floor.
     * The 1e-9 slacks keep borderline fp products from excluding an
     * exactly-qualifying pair. */
-  private[graft] def prefixCandCondition(threshold: Double): Column =
+  private def prefixCandCondition(threshold: Double): Column =
     col("p1.g") === col("p2.g") && col("p1.doc_id") < col("p2.doc_id") &&
       col("p1.__n").cast("double") >=
         lit(threshold) * col("p2.__n") - lit(1e-9) &&
@@ -281,7 +276,6 @@ object Dedup {
     * corpus scale the gate is false and the plan is untouched. */
   private def fanOutSmall(gauge: DataFrame, df: DataFrame,
                           key: String): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_FANOUT").contains("0")) return df
     val cores = gauge.sparkSession.sparkContext.defaultParallelism
     if (gauge.rdd.getNumPartitions < cores) df.repartition(cores, col(key))
     else df
@@ -367,9 +361,8 @@ object Dedup {
     * unordered pair is generated exactly once with the probe as its min
     * side; the PPJoin positional bound against `t·n_probe` (valid for
     * the pair's FIRST common gram under the shared global order — later
-    * common rows only tighten it, so per-row filtering is exact). Shared
-    * with [[graft.tools.JpProbe]] so the diagnostic cannot drift. */
-  private[graft] def containmentCandCondition(threshold: Double): Column =
+    * common rows only tighten it, so per-row filtering is exact). */
+  private def containmentCandCondition(threshold: Double): Column =
     col("p1.g") === col("p2.g") &&
       (col("p1.__n") < col("p2.__n") ||
         (col("p1.__n") === col("p2.__n") &&

@@ -17,10 +17,11 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * that by planning the sub-frame as a separate query (`queryExecution
   * .toRdd`) — but under AQE, finalizing that nested adaptive plan
   * EXECUTES every exchange stage below the barrier at plan-construction
-  * time (DemoE2E measured `construct` = 8 s at 100k rows, 18 s at 1M:
-  * the visit-control window's shuffle ran inside what should be driver
-  * work), serializes upstream stages against downstream planning, and
-  * hides the upstream plan from one end-to-end AQE view.
+  * time (the demo-catalog end-to-end run measured `construct` = 8 s at
+  * 100k rows, 18 s at 1M: the visit-control window's shuffle ran inside
+  * what should be driver work), serializes upstream stages against
+  * downstream planning, and hides the upstream plan from one end-to-end
+  * AQE view.
   *
   * The fence keeps everything in ONE logical plan instead. Physically it
   * is a pass-through node ([[CodegenFenceExec]]) that simply does not

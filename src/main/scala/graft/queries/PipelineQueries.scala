@@ -142,7 +142,7 @@ object PipelineQueries extends QueryPack {
         col("o_orderkey").cast("string").as("uuid"),
         map(lit("o_orderkey"), col("o_orderkey").cast("string")).as("data"))
       // r16: fanOut — the 2-entry map build over the lineitems ran in the
-      // one-split scan stage (StageProfile: one 0.81 s task in a 3-task
+      // one-split scan stage (per-stage profile: one 0.81 s task in a 3-task
       // stage); same measured fix as a6_multiple_link's link payload
       val linked = Tables.fanOut(s, Tables.lineitem(s, dir), dir,
         "lineitem", col("l_orderkey")).select(
@@ -205,7 +205,7 @@ object PipelineQueries extends QueryPack {
     // chain, ≥14 cases in a 5-week window around the run. One detector run
     // per alert variable, as the reference loops over its alert list.
     "a3_double_doubling" -> ((s, dir) => {
-      // r16: fanOut PROBED AND REJECTED — the paired A/B (FANOUT=0) read
+      // r16: fanOut PROBED AND REJECTED — the paired A/B read
       // 1.21 s without vs 2.69 s with: five detector passes each pay the
       // exchange, and the per-row map build is cheap next to it.
       // r16: the five per-variable detector runs (the reference loops its

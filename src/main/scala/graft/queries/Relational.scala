@@ -118,7 +118,7 @@ object Relational extends QueryPack {
     // (bonus surface for downstream dashboards).
     "q_rollup" -> ((s, dir) => {
       // r16: fanOut — the 3-grouping-set partial aggregation (decimal
-      // sums) fused into the one-split scan (StageProfile: one 0.92 s
+      // sums) fused into the one-split scan (per-stage profile: one 0.92 s
       // task); spread it before the rollup
       Tables.fanOut(s, Tables.lineitem(s, dir), dir, "lineitem",
           col("l_orderkey"))

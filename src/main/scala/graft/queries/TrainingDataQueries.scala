@@ -2040,7 +2040,7 @@ object TrainingDataQueries extends QueryPack {
     // One corpus aggregation; the share rides a langs²-sized window.
     "langid_confusion" -> ((s, dir) => {
       // r16: fanOut — the langid token pass ran fused into the one-split
-      // scan (StageProfile: one 0.97 s task)
+      // scan (per-stage profile: one 0.97 s task)
       val cm = Tables.fanOut(s, Tables.documents(s, dir), dir,
           "documents", col("doc_id"))
         .select(col("lang"), TextAnalysis.predictedLangFromTokens(
@@ -2158,7 +2158,7 @@ object TrainingDataQueries extends QueryPack {
       // r16: the excess frame is a fan-out frame — selectByExcess consumes
       // it TWICE (histogram-quantile threshold, then the keep filter), and
       // the second consumer re-ran the post-shuffle join tail on ONE
-      // AQE-coalesced task (~1.3 s serial; StageProfile #121/#122). The
+      // AQE-coalesced task (~1.3 s serial; per-stage profile #121/#122). The
       // eager checkpoint is the standard discipline for two-consumer
       // frames: one materialization, both branches read narrow rows.
       graft.operators.DomainReweight.selectByExcess(
@@ -2254,7 +2254,7 @@ object TrainingDataQueries extends QueryPack {
       val vocab = WordPiece.vocabulary(docs, merges)
         .collect().map(_.getString(0)).toSet
       // r16: fanOut — the tokenize+MaxMatch serving pass ran fused into
-      // the one-split scan (StageProfile: one 0.63 s task)
+      // the one-split scan (per-stage profile: one 0.63 s task)
       val toks = TextAnalysis.explodeTokens(
         Tables.fanOut(s, docs, dir, "documents", col("doc_id")),
         col("text"), "word", Seq(col("doc_id")))
@@ -2277,7 +2277,7 @@ object TrainingDataQueries extends QueryPack {
       // r16 part 3: all six legs read ONE fanned documents frame — the
       // six identical scan+exchange subtrees dedupe via ReuseExchange,
       // each leg's kernel runs machine-wide instead of fused into its
-      // own one-split scan (StageProfile: two 0.7-0.8 s single-task
+      // own one-split scan (per-stage profile: two 0.7-0.8 s single-task
       // stages), and the doc_id hash partitioning feeds the six-way join
       // exchange-free (identity at scale: fanOut adds no exchange there)
       val docs = Tables.fanOut(s, Tables.documents(s, dir), dir,
@@ -2404,7 +2404,7 @@ object TrainingDataQueries extends QueryPack {
     // 15% noise density at mean span 3.
     "span_corruption" -> ((s, dir) => {
       // r16: fanOut — the corruption kernel ran in a 3-task scan stage
-      // (StageProfile: 0.58 s max task)
+      // (per-stage profile: 0.58 s max task)
       SpanCorruption.corrupt(Tables.fanOut(s, Tables.documents(s, dir),
           dir, "documents", col("doc_id")),
         spanStartProb = SpanCorrProb, spanLen = SpanCorrLen)
@@ -2687,7 +2687,7 @@ object TrainingDataQueries extends QueryPack {
 
     "dedup_simhash" -> ((s, dir) => {
       // r16: fanOut — the simhash signature pass ran fused into the
-      // one-split scan (StageProfile: one 0.87 s task)
+      // one-split scan (per-stage profile: one 0.87 s task)
       Dedup.simhashGroups(Tables.fanOut(s, Tables.documents(s, dir),
           dir, "documents", col("doc_id")))
         .select(col("sim"), col("n_docs"), col("keep_id"),
@@ -3746,7 +3746,7 @@ object TrainingDataQueries extends QueryPack {
       // one 0.64 s task); spread the scan first. Part 3: PROJECT BEFORE
       // THE EXCHANGE (guide §2.3) — the fan-out shuffle carried the full
       // document text for a gate that reads only (doc_id, source):
-      // StageProfile showed the exchange's one-task map side at 0.70 s,
+      // the per-stage profile showed the exchange's one-task map side at 0.70 s,
       // mostly serializing text bytes the select then dropped
       UrlOps.categorizeBroadcast(
           Tables.fanOut(s, Tables.documents(s, dir)

@@ -80,6 +80,16 @@ object UpsertWriter {
     if (old.exists()) rm(old)
   }
 
+  /** Whether a parquet file lies anywhere under `f` — a [[DataWriter]]
+    * store keeps its files in `type=…/epi_year=…` directories, not at the
+    * top. Hidden (`_`/`.`-prefixed) entries are skipped, as Spark's own
+    * listing skips them. */
+  private def hasParquet(f: java.io.File): Boolean =
+    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).exists { c =>
+      !c.getName.startsWith("_") && !c.getName.startsWith(".") && hasParquet(c)
+    }
+    else f.isFile && f.getName.endsWith(".parquet")
+
   def upsert(spark: SparkSession, batch: DataFrame, path: String,
              keys: Seq[String] = Seq("uuid", "type")): Unit = {
     val dir = new java.io.File(path)
@@ -87,7 +97,7 @@ object UpsertWriter {
     // restore it BEFORE the existence check or the merge would treat the
     // store as fresh and drop all history
     restoreInterrupted(dir)
-    val exists = dir.exists() && dir.listFiles().exists(_.getName.endsWith(".parquet"))
+    val exists = hasParquet(dir)
     val merged =
       if (!exists) batch
       else {

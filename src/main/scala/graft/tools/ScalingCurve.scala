@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.{SparkEntry, Tables}
+import graft.{Session, SparkEntry, Tables}
 
 /** Measured scaling curves across the three testdata decades
   * (sf0.001 → sf0.01 → sf0.1, 10× data each step) for the headline
@@ -12,7 +11,7 @@ import graft.{SparkEntry, Tables}
   * Method: one JVM, primed (same pass the bench uses), per (query, sf):
   * one warm construction+run, then `reps` timed runs, min reported.
   * Expect ratios well UNDER 10× per decade at these toy sizes — fixed
-  * per-job scheduling dominates small SFs on 32 cores; a ratio NEAR or
+  * per-job scheduling dominates small SFs; a ratio NEAR or
   * ABOVE 10× flags a super-linear stage (quadratic pair blowup, a
   * driver-side collect growing with the corpus, a skew hotspot).
   *
@@ -33,14 +32,7 @@ object ScalingCurve {
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val sfs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
       "/root/testdata/sf0.1")
-    val b = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    Tables.requiredConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build()
     // corpus sizes per SF, for the data-growth denominator
     sfs.foreach { dir =>
       val docs = Tables.documents(spark, dir).count()

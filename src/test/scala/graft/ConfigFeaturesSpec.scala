@@ -25,10 +25,12 @@ class ConfigFeaturesSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
   import spark.implicits._
 
-  private val paramDir =
-    "/root/reference/meerkat_abacus/country_config/calculation_parameters"
-  private lazy val params = CalculationParameters.load(Seq(
-    s"$paramDir/medicine_kits.json", s"$paramDir/vaccination_vials.json"))
+  // the two parameter files the specs assert against, from the test classpath
+  private lazy val params = CalculationParameters.load(
+    Seq("medicine_kits", "vaccination_vials").map { stem =>
+      new java.io.File(getClass.getResource(
+        s"/calculation_parameters/$stem.json").toURI).getPath
+    })
 
   test("parameter files load keyed by file stem with stringified leaves") {
     assert(params.keySet === Set("medicine_kits", "vaccination_vials"))

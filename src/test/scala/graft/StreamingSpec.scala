@@ -602,6 +602,27 @@ class StreamingSpec extends AnyFunSuite {
     assert(out === Map("u1" -> "new", "u2" -> "keep"))
   }
 
+  test("upsert into a DataWriter-partitioned store keeps every row the batch does not replace") {
+    import graft.sinks.DataWriter
+    val path = tmpDir() + "/data"
+    val cols = Seq("uuid", "type", "epi_year", "clinic", "date", "payload")
+    val history = Seq(
+      ("u1", "case", 2015, "c1", "2015-01-05", "old"),
+      ("u2", "case", 2015, "c1", "2015-01-06", "keep"),
+      ("u3", "case", 2016, "c2", "2016-02-01", "keep"),
+      ("u1", "alert", 2015, "c1", "2015-01-05", "keep")).toDF(cols: _*)
+    DataWriter.write(history, path)
+    val batch = Seq(
+      ("u1", "case", 2015, "c1", "2015-01-05", "new"),
+      ("u4", "case", 2016, "c2", "2016-02-02", "new")).toDF(cols: _*)
+    UpsertWriter.upsert(spark, batch, path)
+    val out = spark.read.parquet(path).select("uuid", "type", "payload")
+      .as[(String, String, String)].collect()
+    assert(out.sorted.toSeq === Seq(
+      ("u1", "alert", "keep"), ("u1", "case", "new"), ("u2", "case", "keep"),
+      ("u3", "case", "keep"), ("u4", "case", "new")))
+  }
+
   test("partitioned upsert rewrites only the touched partitions") {
     val path = tmpDir() + "/store"
     val v1 = Seq(("u1", "case", 2015, "a"), ("u2", "case", 2016, "b"))
