@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.config._
 import graft.functions.{EpiWeek, MapResolver, VariableCompiler}
 import graft.functions.EpiWeek.YearStartPolicy
@@ -15,8 +16,15 @@ import graft.functions.EpiWeek.YearStartPolicy
   * assembled as one DataFrame program per data type. The reference's three
   * write barriers exist because later steps read earlier tables back; in the
   * batch recompute the set-based operators (AddLinks, MultipleAlerts) consume
-  * the in-plan DataFrames directly, so barriers become optional
-  * checkpoints, not correctness requirements.
+  * the in-plan DataFrames directly, so no barrier cuts the plan.
+  *
+  * The per-type programs union into one frame of coded rows, which
+  * [[process]] persists: `data` and `disregarded` are two filters over that
+  * single evaluation. The first action on either output runs the pipeline
+  * once and fills the cache; every later action (the second sink, an
+  * `isEmpty` probe) reads the cached batches instead of re-planning and
+  * re-running QC, visit control, links, the code catalog and the location
+  * joins. The [[Result]] owns that cache until [[Result.release]].
   */
 object DataPipeline {
 
@@ -42,7 +50,30 @@ object DataPipeline {
         * pipeline output. */
       retainRawData: Boolean = true)
 
-  final case class Result(data: DataFrame, disregarded: DataFrame)
+  /** The outputs of one [[process]] call, both filters over the same
+    * persisted frame of coded rows (`MEMORY_AND_DISK`).
+    *
+    * Contract: the caller runs its actions on `data` and `disregarded`, in
+    * any order and as many as it likes, then calls [[release]] exactly once
+    * when it needs neither output any more (in a `finally` where the actions
+    * can throw). `release` unregisters the frame from the session's cache
+    * and frees its blocks. Do not run actions on either output after
+    * `release`: they would refill the cache outside the session's cache
+    * registry. Each `process` call persists its own frame: Spark's cache
+    * matches frames by plan, so the frame carries a per-call
+    * `__evaluation` number, and a later `process` over the same inputs
+    * evaluates afresh instead of reading an unreleased `Result`'s rows. An
+    * unreleased `Result` keeps its blocks until the session ends. */
+  final class Result private[DataPipeline] (shared: DataFrame) {
+    val data: DataFrame =
+      shared.filter(!col("disregard")).drop("disregard", "__evaluation")
+    val disregarded: DataFrame =
+      shared.filter(col("disregard")).drop("disregard", "__evaluation")
+    def release(): Unit = shared.unpersist()
+  }
+
+  /** Numbers the `process` calls; see [[Result]]. */
+  private val evaluations = new java.util.concurrent.atomic.AtomicLong
 
   /** Run the pipeline over raw form DataFrames `(uuid, data)`. */
   def process(spark: SparkSession, forms: Map[String, DataFrame],
@@ -79,11 +110,9 @@ object DataPipeline {
         buildDataRows(spark, withLinks, t, cfg)
       }
     }
-    val all = perType.reduce(_.unionByName(_))
-
-    val data = all.filter(!col("disregard")).drop("disregard")
-    val disregarded = all.filter(col("disregard")).drop("disregard")
-    Result(data, disregarded)
+    new Result(perType.reduce(_.unionByName(_))
+      .withColumn("__evaluation", lit(evaluations.incrementAndGet()))
+      .persist(StorageLevel.MEMORY_AND_DISK))
   }
 
   /** to_codes step wrapper (process_steps/to_codes.py:32-152): location

@@ -1,15 +1,20 @@
 package graft
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{CacheProbe, GraftColumnBridge, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import graft.config._
-import graft.operators.DataPipeline
+import graft.operators.{DataPipeline, ToCodes}
+import graft.plans.CodegenFenceExec
 
 /** End-to-end demo-pipeline test (SURVEY.md §7.2 step 5): raw forms →
   * QC → visit control → fan-out → codes → located, epi-tagged `data` rows,
   * including register multiple-row splitting and disregard routing.
   */
-class DataPipelineSpec extends AnyFunSuite {
+class DataPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkSpec.spark
   import spark.implicits._
 
@@ -53,7 +58,7 @@ class DataPipelineSpec extends AnyFunSuite {
     "SubmissionDate" -> "2016-04-18T10:00:00", "deviceid" -> device,
     "gender" -> gender, "icd_code" -> icd, "status" -> status)
 
-  private lazy val result = {
+  private def forms = {
     val caseForm = Seq(
       ("u1", caseRow("female", icd = "A80.9")),
       ("u2", caseRow("male", device = "d2")),
@@ -67,9 +72,19 @@ class DataPipelineSpec extends AnyFunSuite {
         "consultations$1" -> "10", "consultations$2" -> "20",
         "consultations$3" -> ""))
     ).toDF("uuid", "data")
-    DataPipeline.process(spark,
-      Map("demo_case" -> caseForm, "demo_register" -> registerForm), cfg)
+    Map("demo_case" -> caseForm, "demo_register" -> registerForm)
   }
+
+  private var processed = false
+  private lazy val result = {
+    processed = true
+    DataPipeline.process(spark, forms, cfg)
+  }
+
+  override def afterAll(): Unit =
+    try { if (processed) result.release() } finally super.afterAll()
+
+  private object Plans extends AdaptiveSparkPlanHelper
 
   test("location join resolves the hierarchy and drops unknown devices") {
     val rows = result.data.filter(col("type") === "case")
@@ -134,9 +149,10 @@ class DataPipelineSpec extends AnyFunSuite {
       ("g2", Map("lng" -> "25.0", "lat" -> "25.0", "d" -> "2016-01-01")),
       ("g3", Map("lng" -> "50.0", "lat" -> "50.0", "d" -> "2016-01-01"))
     ).toDF("uuid", "data")
-    val out = DataPipeline.process(spark, Map("geo_form" -> form), cfg2)
-      .data.select(col("uuid"), col("district"), col("region"))
+    val res = DataPipeline.process(spark, Map("geo_form" -> form), cfg2)
+    val out = try res.data.select(col("uuid"), col("district"), col("region"))
       .collect().map(r => r.getString(0) -> (r.getInt(1), r.getInt(2))).toMap
+      finally res.release()
     assert(out === Map("g1" -> ((3, 2)), "g2" -> ((6, 2)))) // g3 outside → dropped
   }
 
@@ -161,11 +177,12 @@ class DataPipelineSpec extends AnyFunSuite {
       ("f1", Map("pid" -> "101", "visit_date" -> "2016-01-05", "lab" -> "no")),
       ("f2", Map("pid" -> "101", "visit_date" -> "2016-01-02", "lab" -> "yes"))
     ).toDF("uuid", "data")
-    val out = DataPipeline.process(spark,
+    val res = DataPipeline.process(spark,
       Map("demo_case" -> caseForm, "demo_followup" -> followups), linkCfg)
-      .data.filter(col("type") === "case")
+    val out = try res.data.filter(col("type") === "case")
       .select(col("uuid"), col("variables"))
       .as[(String, Map[String, String])].collect().toMap
+      finally res.release()
     assert(out("c1")("fu_count") === "2")
     assert(out("c1")("fu_any_lab") === "1")     // some linked row has lab=yes
     assert(!out("c1").contains("fu_last_lab"))  // last (by date) row has lab=no
@@ -188,13 +205,15 @@ class DataPipelineSpec extends AnyFunSuite {
     val followups = Seq(
       ("f1", Map("pid" -> "101", "visit_date" -> "2016-01-05", "lab" -> "no"))
     ).toDF("uuid", "data")
-    val out = DataPipeline.process(spark,
+    val res = DataPipeline.process(spark,
       Map("demo_case" -> caseForm, "demo_followup" -> followups), linkCfg)
-      .data.filter(col("type") === "case")
-    assert(!out.columns.contains("data"))
-    val vars = out.select(col("variables"))
-      .as[Map[String, String]].head()
-    assert(vars("fu_count") === "1")
+    try {
+      val out = res.data.filter(col("type") === "case")
+      assert(!out.columns.contains("data"))
+      val vars = out.select(col("variables"))
+        .as[Map[String, String]].head()
+      assert(vars("fu_count") === "1")
+    } finally res.release()
   }
 
   test("register multiple_row splits into uuid-suffixed sub-records") {
@@ -205,5 +224,46 @@ class DataPipelineSpec extends AnyFunSuite {
     assert(regs.keySet === Set("r1:1", "r1:2")) // $3 empty → no third sub-row
     assert(regs("r1:1") === (("1", "10")))
     assert(regs("r1:2") === (("1", "20")))
+  }
+
+  test("data and disregarded read one cached evaluation until release()") {
+    // past ToCodes.StageBarrierThreshold the case catalog takes the fenced
+    // path, so every planning of the pipeline carries CodegenFenceExecs
+    val padded = cfg.copy(codes = cfg.codes ++
+      (1 to ToCodes.StageBarrierThreshold).map(i => CodeDef(id = s"pad_$i",
+        typ = "case", method = "match", dbColumn = "icd_code", condition = s"Z$i")))
+    val entriesBefore = CacheProbe.entries(spark)
+    val res = DataPipeline.process(spark, forms, padded)
+    val (dataRows, disregardedRows, shared) =
+      try {
+        val plan = res.disregarded.queryExecution.executedPlan
+        val scans = Plans.collect(plan) { case s: InMemoryTableScanExec => s }
+        assert(scans.size === 1)
+        assert(Plans.collect(plan) { case f: CodegenFenceExec => f }.isEmpty)
+        // the catalog projection was planned once, inside the cached relation
+        val relation = scans.head.relation
+        assert(Plans.collect(relation.cachedPlan) { case f: CodegenFenceExec => f }.nonEmpty)
+        val shared = relation.cacheBuilder.logicalPlan
+        assert(CacheProbe.holds(spark, shared))
+        // a second call over the same inputs gets its own frame: it does not
+        // read this unreleased result's rows
+        val again = DataPipeline.process(spark, forms, padded)
+        try assert(CacheProbe.entries(spark) === entriesBefore + 2)
+        finally again.release()
+        (res.data.collect().toSeq, res.disregarded.collect().toSeq, shared)
+      } finally res.release()
+    assert(!CacheProbe.holds(spark, shared))
+    assert(CacheProbe.entries(spark) === entriesBefore)
+
+    // content: the same routing as the uncached small-catalog run
+    assert(disregardedRows.map(_.getAs[String]("uuid")) === Seq("u4"))
+    assert(!dataRows.exists(_.getAs[String]("uuid") == "u4"))
+    // the two outputs partition exactly the rows of one unfiltered
+    // evaluation (run fresh, now that nothing caches it)
+    val unfiltered = GraftColumnBridge.ofRows(spark, shared)
+      .select(res.data.columns.map(col).toSeq: _*).collect().toSeq
+    def bag(rows: Seq[Row]) = rows.groupBy(identity).view.mapValues(_.size).toMap
+    assert(unfiltered.size === dataRows.size + disregardedRows.size)
+    assert(bag(unfiltered) === bag(dataRows ++ disregardedRows))
   }
 }

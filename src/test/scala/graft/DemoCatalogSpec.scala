@@ -6,28 +6,28 @@ import graft.config.CodesCsv
 import graft.functions.{EpiWeek, MapResolver, VariableCompiler}
 import graft.operators.ToCodes
 
-/** Fidelity test against the reference's REAL demo rule catalog: every row of
-  * country_config variable_codes CSVs must compile through the
-  * VariableCompiler and evaluate over a form row — the whole catalog becomes
-  * one wide projection, exactly what production would run.
+/** Fidelity test over a demo rule catalog in the AggregationVariables CSV
+  * format: every row must compile through the VariableCompiler and evaluate
+  * over a form row — the whole catalog becomes one wide projection, exactly
+  * what production would run.
   *
-  * (The CSVs are read from the reference checkout as config DATA — no code is
-  * taken from the reference.)
+  * The catalog (`variable_codes/demo_codes.csv` on the test classpath) is
+  * transcribed from the demo country config's schema and representative
+  * rows (FIXTURES.md §5): 76 case, 66 visit and 40 register codes, so the
+  * case catalog is large enough to take ToCodes' fenced path.
   */
 class DemoCatalogSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
   import spark.implicits._
 
-  private val codesDir =
-    "/root/reference/meerkat_abacus/country_config/variable_codes"
-
-  private lazy val catalog = CodesCsv.load(spark,
-    s"$codesDir/demo_codes.csv", s"$codesDir/demographic_codes.csv")
+  private lazy val catalog = CodesCsv.load(spark, new java.io.File(
+    getClass.getResource("/variable_codes/demo_codes.csv").toURI).getPath)
 
   test("the full demo catalog loads") {
-    assert(catalog.size >= 190) // 169 + 29 demographic
-    // duplicate string ids are legal in the catalog (id_pk is the real key)
-    assert(catalog.map(_.id).distinct.size >= 190)
+    assert(catalog.size === 182) // every row of the CSV
+    // duplicate string ids are legal in the catalog (id_pk is the real key);
+    // this one happens to have none
+    assert(catalog.map(_.id).distinct.size === 182)
   }
 
   test("every demo code compiles to a Column pair") {

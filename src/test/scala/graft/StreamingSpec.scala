@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.CacheProbe
 import org.apache.spark.sql.functions._
 import graft.config._
 import graft.operators.DataPipeline
@@ -769,28 +770,43 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming foreachBatch reuses the batch pipeline and upserts") {
     val inDir = tmpDir()
     val dataPath = tmpDir() + "/data"
+    val disregardedPath = tmpDir() + "/dis"
     val cfg = DataPipeline.EngineConfig(
       dataTypes = Seq(DataTypeDef("case", "demo_case", None, None,
         "pt./visit_date", "tot_1")),
       codes = Seq(CodeDef(id = "gen_1", typ = "case", method = "match",
-        dbColumn = "gender", condition = "female")),
+        dbColumn = "gender", condition = "female"),
+        // a test record that raises an individual alert is disregarded
+        CodeDef(id = "cmd_1", typ = "case", method = "match",
+          dbColumn = "icd_code", condition = "A80.9", alert = true,
+          alertType = "individual"),
+        CodeDef(id = "dis_1", typ = "case", method = "match",
+          dbColumn = "test_record", condition = "yes", disregard = true)),
       locations = Seq(
         LocationNode(1, "Demo", "country", 0),
         LocationNode(4, "Clinic 1", "clinic", 1, deviceIds = Seq("d1"))))
 
     Files.writeString(java.nio.file.Paths.get(s"$inDir/batch1.csv"),
-      "meta/instanceID,deviceid,gender,pt./visit_date\n" +
-        "uuid:1,d1,female,2016-04-17\nuuid:2,d1,male,2016-04-18\n")
+      "meta/instanceID,deviceid,gender,pt./visit_date,icd_code,test_record\n" +
+        "uuid:1,d1,female,2016-04-17,,\nuuid:2,d1,male,2016-04-18,,\n" +
+        "uuid:3,d1,male,2016-04-18,A80.9,yes\n")
     val schemaRef = spark.read.option("header", "true").csv(s"$inDir/batch1.csv")
     val stream = FormSource.csvStream(spark, inDir, schemaRef)
+    val cachedBefore = CacheProbe.entries(spark)
     val q = StreamingPipeline.start(spark, stream, "demo_case", cfg,
-      dataPath, tmpDir() + "/dis", tmpDir() + "/ckpt")
+      dataPath, disregardedPath, tmpDir() + "/ckpt")
     q.awaitTermination(60000)
+    assert(q.exception.isEmpty)
+    // every micro-batch released its shared pipeline frame
+    assert(CacheProbe.entries(spark) === cachedBefore)
 
     val out = spark.read.parquet(dataPath)
       .select(col("uuid"), element_at(col("variables"), "gen_1"))
       .as[(String, Option[String])].collect().toMap
     assert(out === Map("uuid:1" -> Some("1"), "uuid:2" -> None))
+    val disregarded = spark.read.parquet(disregardedPath)
+      .select("uuid").as[String].collect().toSeq
+    assert(disregarded === Seq("uuid:3"))
   }
 
   test("queue envelopes drive the full pipeline; bad messages quarantine") {
