@@ -5,33 +5,55 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.util.MapData
 import org.apache.spark.sql.types._
 
-/** Optimizer rule: statically resolve literal-key extractions over
-  * literal-keyed `CreateMap`s, across operator boundaries, and prune the
-  * dead map construction.
+/** Optimizer rule: statically resolve literal-key extractions over map
+  * expressions whose entries are known at plan time, across operator
+  * boundaries, and prune the dead map construction.
   *
   * Why: the engine's record interface is `(uuid, data: map<string,string>)`
   * — callers adapt columnar sources by building the map with literal keys
-  * (`map(lit("k"), col, …)`) and every operator consumes it via
-  * `element_at(data, "k")`. Catalyst's own `SimplifyExtractValueOps`
-  * rewrites `GetMapValue(CreateMap, key)` only when the map literal is
-  * INLINE in the same expression tree; once the map crosses an operator
-  * boundary as an attribute, `CollapseProject` refuses to inline it
-  * (multi-referenced, non-cheap), so the map is physically built per row
-  * just to be picked apart by the next projection. Measured at sf0.1 that
-  * adapter tax tripled a 600k-row link join (3.0 s vs 1.0 s plain columns).
+  * and every operator consumes it via `element_at(data, "k")` / `data["k"]`.
+  * Catalyst's own `SimplifyExtractValueOps` rewrites `GetMapValue(CreateMap,
+  * key)` only when the map literal is INLINE in the same expression tree;
+  * once the map crosses an operator boundary as an attribute,
+  * `CollapseProject` refuses to inline it (multi-referenced, non-cheap),
+  * so the map is physically built per row just to be picked apart by the
+  * next projection. Measured at sf0.1 that adapter tax tripled a 600k-row
+  * link join (3.0 s vs 1.0 s plain columns).
+  *
+  * Plan size matters as much as per-row cost. When a filter is pushed
+  * below the projection that builds the map, Catalyst substitutes the
+  * whole map expression into every extraction, so a CSV form with a
+  * hundred columns and a date check that reads its field ten times
+  * carries ten copies of the hundred-entry map build. `SortExec`'s
+  * generated code references the `SortExec` itself, so every task after
+  * a sort deserializes the whole upstream physical plan: unresolved, the
+  * demo pipeline's coded-rows tasks each shipped a 6.9 MB binary.
+  *
+  * Resolved map shapes (see [[resolve]]; each is all-or-nothing):
+  *  - `CreateMap` with literal, comparable keys and deterministic values
+  *    (`map(lit("k"), col, …)`), and a folded map `Literal`;
+  *  - [[graft.sources.FormSource.toFormShape]]'s null-dropping map,
+  *    exactly `map_from_entries(filter(array(struct(lit k, v)…),
+  *    e -> e.value IS NOT NULL))`: the key's last non-null value, i.e.
+  *    `coalesce` over its repeats, last first;
+  *  - a map-valued `CaseWhen` with deterministic conditions (QC's in-place
+  *    repair): the lookup is distributed into every branch;
+  *  - `map_concat` of non-null maps whose last child is static: it decides
+  *    whether it holds the key (even with a null value), otherwise the
+  *    lookup recurses into the remaining children.
   *
   * The rewrite: `element_at(m, "k")` where `m` is (or aliases, in the
-  * child projection) a CreateMap with foldable, deterministic, atomic-typed
-  * keys becomes the LAST matching value expression (the session runs
-  * `spark.sql.mapKeyDedupPolicy=LAST_WIN`, so duplicate literal keys keep
-  * the last entry) or a typed null when the key is provably absent — the
-  * non-ANSI `element_at` contract; ANSI-mode extractions (`failOnError`)
-  * are left untouched. Map aliases whose every consumer was rewritten are
-  * pruned from the child projection, so the map is never built at all.
-  * Plans where the map is genuinely dynamic (read from storage,
-  * `map_from_entries`, non-literal keys) are untouched.
+  * child projection) such a map becomes the selected value expression
+  * (the session runs `spark.sql.mapKeyDedupPolicy=LAST_WIN`, so duplicate
+  * literal keys keep the last entry) or a typed null when the key is
+  * provably absent — the non-ANSI `element_at` contract; ANSI-mode
+  * extractions (`failOnError`) are left untouched. Map aliases whose every
+  * consumer was rewritten are pruned from the child projection, so the map
+  * is never built at all. Maps that do not fully resolve (read from
+  * storage, non-literal keys, a shape not listed above) are untouched.
   *
   * Registered via [[GraftExtensions]] (`spark.sql.extensions`), so every
   * engine session — Verify, Bench, tests — plans with it.
@@ -47,50 +69,95 @@ object InlineMapExtracts extends Rule[LogicalPlan] {
     case _                                                   => false
   }
 
-  private def isStaticMap(cm: CreateMap): Boolean =
-    cm.keys.nonEmpty &&
-      cm.keys.forall(k => k.foldable && k.deterministic &&
-        comparableKeyType(k.dataType)) &&
-      cm.values.forall(_.deterministic)
+  private def staticKey(k: Expression): Boolean =
+    k.foldable && k.deterministic && comparableKeyType(k.dataType)
 
-  /** The value expression `key` selects from a static CreateMap: last
-    * matching entry (LAST_WIN dedup), or typed null when provably absent. */
-  private def staticLookup(cm: CreateMap, key: Expression): Option[Expression] = {
+  /** The value expression `key` selects from `map`, or None when `map` does
+    * not fully resolve. `defs` are the map aliases of the projection below
+    * the extraction; their definitions resolve without further aliases. */
+  private def resolve(map: Expression, key: Expression,
+                      defs: Map[ExprId, Expression]): Option[Expression] = {
+    val valueType = map.dataType match {
+      case mt: MapType => mt.valueType
+      case _           => return None
+    }
     if (!key.foldable || !key.deterministic) return None
     val keyVal = key.eval()
     if (keyVal == null) return None
-    val hits = cm.keys.zip(cm.values).filter { case (k, _) => k.eval() == keyVal }
-    hits.lastOption.map(_._2)
-      .orElse(Some(Literal.create(null,
-        cm.dataType.asInstanceOf[MapType].valueType)))
-  }
+    val absent = Literal.create(null, valueType)
 
-  /** Rewrite map extractions in `e`: over inline static CreateMaps, and
-    * over attribute references that `defs` maps to static CreateMaps. */
-  private def rewriteExtracts(e: Expression,
-                              defs: Map[ExprId, CreateMap]): Expression =
-    e.transformUp {
-      case ea: ElementAt if !ea.failOnError =>
-        ea.left match {
-          case cm: CreateMap if isStaticMap(cm) =>
-            staticLookup(cm, ea.right).getOrElse(ea)
-          case ar: AttributeReference if defs.contains(ar.exprId) =>
-            staticLookup(defs(ar.exprId), ea.right).getOrElse(ea)
-          case _ => ea
-        }
-      case gm: GetMapValue =>
-        gm.child match {
-          case cm: CreateMap if isStaticMap(cm) =>
-            staticLookup(cm, gm.key).getOrElse(gm)
-          case ar: AttributeReference if defs.contains(ar.exprId) =>
-            staticLookup(defs(ar.exprId), gm.key).getOrElse(gm)
-          case _ => gm
-        }
+    // a map whose entries are all known: Some(the key's value, if present)
+    def static(m: Expression): Option[Option[Expression]] = m match {
+      case cm: CreateMap if cm.keys.nonEmpty && cm.keys.forall(staticKey) &&
+          cm.values.forall(_.deterministic) =>
+        Some(cm.keys.zip(cm.values).findLast(_._1.eval() == keyVal).map(_._2))
+      case Literal(md: MapData, MapType(kt, vt, _)) if comparableKeyType(kt) =>
+        Some((0 until md.numElements())
+          .findLast(i => md.keyArray().get(i, kt) == keyVal)
+          .map(i => Literal(md.valueArray().get(i, vt), vt)))
+      case _ => None
     }
 
-  private def mapDefs(p: Project): Map[ExprId, CreateMap] =
+    def lookup(m: Expression, defs: Map[ExprId, Expression]): Option[Expression] =
+      m match {
+        case ar: AttributeReference =>
+          defs.get(ar.exprId).flatMap(lookup(_, Map.empty))
+        case MapFromEntries(ArrayFilter(CreateArray(entries, _),
+            LambdaFunction(IsNotNull(GetStructField(v: NamedLambdaVariable, 1, _)),
+              Seq(arg), _)))
+            if arg.exprId == v.exprId && entries.forall {
+              case CreateNamedStruct(Seq(_, k, _, value)) =>
+                staticKey(k) && k.eval() != null && value.deterministic
+              case _ => false
+            } =>
+          val hits = entries.collect {
+            case CreateNamedStruct(Seq(_, k, _, value)) if k.eval() == keyVal => value
+          }
+          Some(hits match {
+            case Seq()      => absent
+            case Seq(value) => value
+            case _          => Coalesce(hits.reverse)
+          })
+        case CaseWhen(branches, elseValue) if branches.forall(_._1.deterministic) =>
+          val values = branches.map(b => lookup(b._2, defs))
+          val otherwise = elseValue.map(lookup(_, defs)).getOrElse(Some(absent))
+          // when every branch reads the same value the CASE is dropped: a
+          // key a chain of repairs never touches then costs one copy, not
+          // one per branch per repair
+          if (!(otherwise +: values).forall(_.isDefined)) None
+          else if (values.forall(_.get.semanticEquals(otherwise.get))) otherwise
+          else Some(CaseWhen(branches.map(_._1).zip(values.map(_.get)), otherwise))
+        // map_concat is null when any child is; all non-null, the last
+        // child holding the key decides
+        case mc: MapConcat if !mc.nullable =>
+          def fromLast(children: Seq[Expression]): Option[Expression] =
+            children match {
+              case Seq(only)     => lookup(only, defs)
+              case init :+ last  => static(last).flatMap(_.orElse(fromLast(init)))
+              case _             => Some(absent)
+            }
+          fromLast(mc.children)
+        case _ => static(m).map(_.getOrElse(absent))
+      }
+
+    lookup(map, defs)
+  }
+
+  /** Rewrite the map extractions in `e` that [[resolve]] resolves. */
+  private def rewriteExtracts(e: Expression,
+                              defs: Map[ExprId, Expression]): Expression =
+    e.transformUp {
+      case ea: ElementAt if !ea.failOnError =>
+        resolve(ea.left, ea.right, defs).getOrElse(ea)
+      case gm: GetMapValue =>
+        resolve(gm.child, gm.key, defs).getOrElse(gm)
+    }
+
+  /** The map-typed aliases of `p`; extractions of them resolve when
+    * their definitions do. */
+  private def mapDefs(p: Project): Map[ExprId, Expression] =
     p.projectList.collect {
-      case a @ Alias(cm: CreateMap, _) if isStaticMap(cm) => a.exprId -> cm
+      case a @ Alias(m, _) if m.dataType.isInstanceOf[MapType] => a.exprId -> m
     }.toMap
 
   /** Inline `defs` into the parent expressions (+ optional filter between),

@@ -10,7 +10,13 @@ import org.apache.spark.sql.functions._
 object FormSource {
 
   /** Collapse a flat (all-string) DataFrame into the canonical form shape.
-    * Null cells are dropped from the map (absent key ≡ missing column). */
+    * Null cells are dropped from the map (absent key ≡ missing column).
+    *
+    * [[graft.plans.InlineMapExtracts]] matches this exact map expression,
+    * `map_from_entries(filter(array(struct(lit key, value)…), e ->
+    * e.value IS NOT NULL))`, and resolves `element_at(data, "k")` to the
+    * column at plan time; change the two together, or every pushed-down
+    * field read goes back to carrying its own copy of the map build. */
   def toFormShape(df: DataFrame, uuidField: String = "meta/instanceID"): DataFrame = {
     // ODK columns contain dots (`pt./visit_date`); backtick-quote so col()
     // doesn't parse them as struct field access

@@ -12,14 +12,19 @@ import graft.{Session, SparkEntry}
 /** Where a declared query (a `SparkEntry.queries` key) spends its time.
   *
   *  - `--jobs` (default): one warm run, then one measured run under a
-  *    listener — wall, jobs, stages, tasks, summed task time, shuffle
-  *    read and write, and spill (memory + disk), all summed over the run;
+  *    listener — wall, jobs, stages, tasks, summed task time, summed task
+  *    deserialization time, summed task GC time, shuffle read and write,
+  *    and spill (memory + disk), all summed over the run. Task time is
+  *    `executorRunTime`, which excludes deserialization: a task binary
+  *    that ships a large plan shows up in `deser=` (and `gc=`) only;
   *  - `--stages`: the same measured run broken down per stage, the 30
   *    slowest stages with the first `graft.` frame of their call site. A
   *    stage AQE submits from its own thread has no such frame; it is
   *    credited to the frame that started the measured run;
   *  - `--plan`: the formatted executed plan with its count of shuffle
-  *    exchanges, broadcast exchanges and whole-stage codegen spans. It is
+  *    exchanges, broadcast exchanges, whole-stage codegen spans and
+  *    expression nodes (summed over every operator, subqueries included,
+  *    a proxy for the size of the task binaries). It is
   *    planned with AQE off, because an adaptive plan hides its codegen
   *    spans until it has run. A gate ending in `.localCheckpoint(true)`
   *    runs its pipeline while the plan is built, so its plan shows only
@@ -32,35 +37,41 @@ object Profile {
   sealed trait Report { def render: String }
 
   final case class Jobs(query: String, wallS: Double, jobs: Int, stages: Int,
-                        tasks: Int, taskS: Double, shuffleReadMb: Double,
-                        shuffleWriteMb: Double, spillMb: Double) extends Report {
+                        tasks: Int, taskS: Double, deserS: Double, gcS: Double,
+                        shuffleReadMb: Double, shuffleWriteMb: Double,
+                        spillMb: Double) extends Report {
     def render: String =
       f"JOBS $query%-28s wall=$wallS%.2fs jobs=$jobs stages=$stages tasks=$tasks " +
-        f"task=$taskS%.2fs shuffle_read=$shuffleReadMb%.1fMB " +
+        f"task=$taskS%.2fs deser=$deserS%.2fs gc=$gcS%.2fs " +
+        f"shuffle_read=$shuffleReadMb%.1fMB " +
         f"shuffle_write=$shuffleWriteMb%.1fMB spill=$spillMb%.1fMB"
   }
 
   final case class Stage(id: Int, wallMs: Long, tasks: Int, taskMs: Long,
-                         maxTaskMs: Long, callSite: String)
+                         deserMs: Long, gcMs: Long, maxTaskMs: Long,
+                         callSite: String)
 
   final case class Stages(query: String, wallS: Double, total: Int,
                           top: Seq[Stage]) extends Report {
     def render: String =
       (f"STAGES $query wall=$wallS%.2fs ($total stages)" +: top.map { s =>
         f"  wall=${s.wallMs / 1000.0}%6.2fs task=${s.taskMs / 1000.0}%7.2fs " +
+          f"deser=${s.deserMs / 1000.0}%6.2fs gc=${s.gcMs / 1000.0}%6.2fs " +
           f"max=${s.maxTaskMs / 1000.0}%5.2fs tasks=${s.tasks}%4d #${s.id} ${s.callSite}"
       }).mkString("\n")
   }
 
   final case class Plan(query: String, shuffles: Int, broadcasts: Int,
-                        codegenSpans: Int, formatted: String) extends Report {
+                        codegenSpans: Int, expressionNodes: Int,
+                        formatted: String) extends Report {
     def render: String =
       s"$formatted\nPLAN $query shuffles=$shuffles broadcasts=$broadcasts " +
-        s"codegenSpans=$codegenSpans"
+        s"codegenSpans=$codegenSpans expressionNodes=$expressionNodes"
   }
 
   private final class Acc {
-    var tasks = 0; var taskMs = 0L; var maxTaskMs = 0L
+    var tasks = 0; var taskMs = 0L; var deserMs = 0L; var gcMs = 0L
+    var maxTaskMs = 0L
     var shuffleRead = 0L; var shuffleWrite = 0L; var spill = 0L
     var wallMs = 0L; var callSite = ""; var done = false
   }
@@ -85,6 +96,8 @@ object Profile {
       val m = e.taskMetrics
       if (m != null) {
         s.taskMs += m.executorRunTime
+        s.deserMs += m.executorDeserializeTime
+        s.gcMs += m.jvmGCTime
         s.maxTaskMs = math.max(s.maxTaskMs, m.executorRunTime)
         s.shuffleRead += m.shuffleReadMetrics.totalBytesRead
         s.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
@@ -138,6 +151,8 @@ object Profile {
         plan.collectWithSubqueries { case e: ShuffleExchangeExec => e }.size,
         plan.collectWithSubqueries { case e: BroadcastExchangeExec => e }.size,
         plan.collectWithSubqueries { case e: WholeStageCodegenExec => e }.size,
+        plan.collectWithSubqueries { case p =>
+          p.expressions.map(_.collect { case e => e }.size).sum }.sum,
         qe.explainString(FormattedMode))
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
@@ -155,13 +170,15 @@ object Profile {
       val ss = r.stages.values.toSeq
       def mb(f: Acc => Long) = ss.map(f).sum / 1048576.0
       Jobs(query, wall, r.jobs, ss.count(_.done), ss.map(_.tasks).sum,
-        ss.map(_.taskMs).sum / 1000.0, mb(_.shuffleRead), mb(_.shuffleWrite),
+        ss.map(_.taskMs).sum / 1000.0, ss.map(_.deserMs).sum / 1000.0,
+        ss.map(_.gcMs).sum / 1000.0, mb(_.shuffleRead), mb(_.shuffleWrite),
         mb(_.spill))
     case "--stages" =>
       val (wall, r) = measure(spark, sfDir, query)
       val done = r.stages.toSeq.filter(_._2.done)
       Stages(query, wall, done.size, done.sortBy(-_._2.wallMs).take(30).map {
-        case (id, s) => Stage(id, s.wallMs, s.tasks, s.taskMs, s.maxTaskMs, s.callSite)
+        case (id, s) => Stage(id, s.wallMs, s.tasks, s.taskMs, s.deserMs, s.gcMs,
+          s.maxTaskMs, s.callSite)
       })
     case other =>
       throw new IllegalArgumentException(s"unknown mode $other (--jobs|--stages|--plan)")

@@ -3,12 +3,15 @@ package graft
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{CacheProbe, GraftColumnBridge, Row}
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Expression, MapFromEntries}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import graft.config._
 import graft.operators.{DataPipeline, ToCodes}
 import graft.plans.CodegenFenceExec
+import graft.sources.FormSource
 
 /** End-to-end demo-pipeline test (SURVEY.md §7.2 step 5): raw forms →
   * QC → visit control → fan-out → codes → located, epi-tagged `data` rows,
@@ -265,5 +268,45 @@ class DataPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     def bag(rows: Seq[Row]) = rows.groupBy(identity).view.mapValues(_.size).toMap
     assert(unfiltered.size === dataRows.size + disregardedRows.size)
     assert(bag(unfiltered) === bag(dataRows ++ disregardedRows))
+  }
+
+  test("CSV forms: QC and date filters read the columns, not a map build") {
+    // pushed below FormSource's map and QC's repair, every filter would
+    // otherwise carry its own copy of the map build; the rule must resolve
+    // each field read to its column
+    val dir = java.nio.file.Files.createTempDirectory("graft_csv_forms")
+    java.nio.file.Files.writeString(dir.resolve("demo_case.csv"),
+      "meta/instanceID,intro./visit,pt./visit_date,SubmissionDate,deviceid," +
+        "gender,age,icd_code,status\n" +
+        "u1,new,2016-04-17,2016-04-18T10:00:00,d1,female,30,A80.9,\n" +
+        "u2,new,2016-04-17,2016-04-18T10:00:00,d2,male,300,,\n" +
+        "u3,new,garbage,2016-04-18T10:00:00,d1,male,40,,\n" +
+        "u4,new,2016-04-17,2016-04-18T10:00:00,d1,,50,,\n")
+    val qc = QualityControlDef(qcCodes = Seq(
+      CodeDef(id = "qc_age", method = "between", condition = "0,120",
+        calculation = "age", dbColumn = "age"),
+      CodeDef(id = "qc_gender", method = "not_null", condition = "None",
+        dbColumn = "gender", category = Seq("discard"))))
+    val res = DataPipeline.process(spark,
+      Map("demo_case" -> FormSource.csv(spark, dir.resolve("demo_case.csv").toString)),
+      cfg.copy(dataTypes = cfg.dataTypes.take(1), qc = Map("demo_case" -> qc)))
+    try {
+      val cached = Plans.collect(res.data.queryExecution.executedPlan) {
+        case s: InMemoryTableScanExec => s.relation.cachedPlan
+      }
+      assert(cached.size === 1)
+      val filters: Seq[Expression] = Plans.collect(cached.head) {
+        case f: FilterExec => Seq(f.condition)
+        case s: FileSourceScanExec => s.dataFilters
+      }.flatten
+      assert(filters.nonEmpty)
+      val mapBuilds = filters.filter(_.exists(e =>
+        e.isInstanceOf[ArrayFilter] || e.isInstanceOf[MapFromEntries]))
+      assert(mapBuilds.isEmpty, mapBuilds.mkString("\n"))
+      // u3: unparseable visit date; u4: no gender (discarded)
+      val ages = res.data.select(col("uuid"), element_at(col("data"), "age"))
+        .as[(String, Option[String])].collect().toMap
+      assert(ages === Map("u1" -> Some("30"), "u2" -> None))
+    } finally res.release()
   }
 }

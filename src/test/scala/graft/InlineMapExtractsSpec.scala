@@ -1,8 +1,13 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+import java.nio.file.Files
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, CaseWhen,
+  CreateMap, ElementAt, Expression, GetMapValue, MapConcat, MapFromEntries}
 import org.apache.spark.sql.functions._
+import graft.plans.InlineMapExtracts
+import graft.sources.FormSource
 
 /** The InlineMapExtracts planner rule: literal-key extractions over
   * literal-keyed map adapters must be resolved statically (no CreateMap
@@ -10,14 +15,45 @@ import org.apache.spark.sql.functions._
   * cross-projection case where the inlined value expressions reference
   * scan attributes the child projection didn't output (the p2 regression:
   * pass-through attributes must be added, or analysis fails with
-  * ATTRIBUTE_NOT_FOUND at execution). */
+  * ATTRIBUTE_NOT_FOUND at execution). The raw-form shapes — FormSource's
+  * null-dropping `map_from_entries`, QC's map-valued `CASE WHEN` repair and
+  * its `map_concat` — resolve the same way, all-or-nothing. */
 class InlineMapExtractsSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
   import spark.implicits._
 
-  private def hasCreateMap(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.expressions.exists(
-      _.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.CreateMap]))
+  /** Every expression node of every operator of the optimized plan. */
+  private def optimized(df: DataFrame): Seq[Expression] =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+
+  private def hasCreateMap(df: DataFrame): Boolean = has[CreateMap](df)
+
+  private def has[T: scala.reflect.ClassTag](df: DataFrame): Boolean =
+    optimized(df).exists(implicitly[scala.reflect.ClassTag[T]].runtimeClass.isInstance)
+
+  private def hasExtract(df: DataFrame): Boolean =
+    optimized(df).exists(e => e.isInstanceOf[ElementAt] || e.isInstanceOf[GetMapValue])
+
+  /** The rows of `df` planned without this rule: the reference answer. */
+  private def withoutRule(df: => DataFrame): Seq[Row] = {
+    val key = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(key, InlineMapExtracts.ruleName)
+    try {
+      val d = df
+      assert(hasExtract(d), "excluding the rule leaves the extractions")
+      d.collect().toSeq
+    } finally spark.conf.unset(key)
+  }
+
+  private def sameRows(df: => DataFrame): Unit =
+    assert(df.collect().toSeq.sortBy(_.toString) ===
+      withoutRule(df).sortBy(_.toString))
+
+  // FormSource.toFormShape's map over two columns with the same key
+  private def entries(kvs: (String, Column)*): Column =
+    map_from_entries(filter(array(kvs.map { case (k, v) =>
+      struct(lit(k).as("key"), v.as("value")) }: _*),
+      e => e.getField("value").isNotNull))
 
   // a non-local source so map values reference real scan attributes
   private def src = spark.range(100).select(
@@ -130,5 +166,99 @@ class InlineMapExtractsSpec extends AnyFunSuite {
     val out = mapped.select(element_at(col("data"), col("which")).as("x"))
     assert(out.filter(col("x") === "even").count() === 50)
     assert(out.filter(col("x") === "odd").count() === 50)
+  }
+
+  test("FormSource.csv reads resolve to the columns, null cells included") {
+    val dir = Files.createTempDirectory("graft_inline").toString
+    Files.writeString(java.nio.file.Paths.get(s"$dir/form.csv"),
+      "meta/instanceID,pt./visit_date,gender\nu1,2016-04-17,female\n" +
+        "u2,,male\nu3,2016-04-19,\n")
+    def reads = FormSource.csv(spark, s"$dir/form.csv")
+      .filter(element_at(col("data"), "gender") =!= "x" ||
+        element_at(col("data"), "pt./visit_date").isNotNull)
+      .select(col("uuid"), element_at(col("data"), "pt./visit_date").as("d"),
+        col("data")("gender").as("g"), element_at(col("data"), "nope").as("x"))
+    assert(!hasExtract(reads) && !has[ArrayFilter](reads) && !has[MapFromEntries](reads),
+      reads.queryExecution.optimizedPlan.toString)
+    assert(reads.collect().map(r => (r.getString(0), Option(r.getString(1)),
+      Option(r.getString(2)), Option(r.getString(3)))).toSet === Set(
+      ("u1", Some("2016-04-17"), Some("female"), None),
+      ("u2", None, Some("male"), None),
+      ("u3", Some("2016-04-19"), None, None)))
+    sameRows(reads)
+  }
+
+  test("repeated map_from_entries keys: the last non-null value wins") {
+    def reads = src.select(col("id"),
+      entries(
+        "k" -> when(col("id") % 2 === 0, col("id").cast("string")),
+        "j" -> col("v").cast("string"),
+        "k" -> when(col("id") % 3 === 0, lit("three"))).as("data"))
+      .select(col("id"), element_at(col("data"), "k").as("k"),
+        element_at(col("data"), "j").as("j"))
+    assert(!hasExtract(reads) && !has[MapFromEntries](reads))
+    reads.collect().foreach { r =>
+      val id = r.getLong(0)
+      val k = if (id % 3 == 0) Some("three") else if (id % 2 == 0) Some(id.toString) else None
+      assert(Option(r.getString(1)) === k && r.getString(2) === (id * 2).toString)
+    }
+    sameRows(reads)
+  }
+
+  // QualityControl's in-place repair of column k
+  private def repaired(pred: Column) = src
+    .select(col("id"), entries("k" -> col("grp").cast("string"),
+      "j" -> col("v").cast("string")).as("data"))
+    .withColumn("data", when(pred, col("data"))
+      .otherwise(map_concat(col("data"), map(lit("k"), lit(null).cast("string")))))
+
+  test("a CASE WHEN repair distributes: k reads null, other keys pass through") {
+    // the filter is pushed below both projections, so it reads through the
+    // CASE WHEN and the map_concat; each select collapses onto the CASE WHEN
+    def read(key: String) = repaired(element_at(col("data"), "k") =!= "3")
+      .filter(element_at(col("data"), "k").isNull ||
+        element_at(col("data"), "j") =!= "4")
+      .select(col("id"), element_at(col("data"), key).as("v"))
+    for (key <- Seq("k", "j")) {
+      val reads = read(key)
+      assert(!hasExtract(reads) && !has[MapFromEntries](reads) && !has[MapConcat](reads),
+        reads.queryExecution.optimizedPlan.toString)
+      val got = reads.collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+      assert(got.keySet === (0L until 100L).toSet - 2L)
+      got.foreach { case (id, v) =>
+        assert(v === (if (key == "j") Some((id * 2).toString)
+          else Some((id % 10).toString).filter(_ != "3")))
+      }
+      sameRows(read(key))
+    }
+  }
+
+  test("a non-deterministic CASE WHEN condition is not distributed") {
+    def reads = repaired(rand(7) > 0.5)
+      .select(col("id"), element_at(col("data"), "k").as("k"))
+    assert(hasExtract(reads) && has[CaseWhen](reads), reads.queryExecution.optimizedPlan.toString)
+    val nulls = reads.filter(col("k").isNull).count()
+    assert(nulls > 0 && nulls < 100)
+  }
+
+  test("partly resolvable CASE WHEN and map_concat stay as they were") {
+    val stored = map_from_arrays(array(lit("k"), lit("s")),
+      array(col("id").cast("string"), lit("stored")))
+    def caseRead = src
+      .select(col("id"), entries("k" -> col("grp").cast("string")).as("data"),
+        stored.as("stored"))
+      .select(col("id"), when(col("id") < 50, col("data"))
+        .otherwise(col("stored")).as("m"))
+      .select(col("id"), element_at(col("m"), "k").as("k"))
+    assert(hasExtract(caseRead) && has[CaseWhen](caseRead) && has[MapFromEntries](caseRead))
+    sameRows(caseRead)
+    // the static last child resolves "k"; "s" needs the dynamic first child
+    def concatRead = src
+      .select(col("id"), map_concat(stored, map(lit("k"), col("grp").cast("string")))
+        .as("m"))
+      .select(element_at(col("m"), "k").as("k"), element_at(col("m"), "s").as("s"))
+    assert(hasExtract(concatRead) && has[MapConcat](concatRead))
+    assert(concatRead.filter(col("s") === "stored").count() === 100)
+    sameRows(concatRead)
   }
 }
