@@ -40,8 +40,7 @@ object Tables {
     * repartition to the default parallelism puts the projection work on
     * the whole machine; at production scale the condition is false and
     * this is the identity (no exchange in the plan). Row SETS are
-    * identical either way; callers are responsible for their own ordering
-    * (every gate's dump tail sorts).
+    * identical either way; row order is not preserved.
     *
     * Used by MEASURED per-row-compute-heavy call sites only (never the
     * loaders blanket): the exchange moves the raw payload once and makes

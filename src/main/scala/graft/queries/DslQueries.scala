@@ -62,7 +62,6 @@ object DslQueries extends QueryPack {
       val out = ToCodes(df, partCatalog, new FlatResolver(df.columns.toSet))
       out.select(col("p_partkey"), explode(col("variables")).as(Seq("code", "value")))
         .select(col("p_partkey"), col("code"))
-        .localCheckpoint(true).orderBy(col("p_partkey"), col("code"))
     }),
 
     "dsl_calc" -> ((s, dir) => {
@@ -77,7 +76,6 @@ object DslQueries extends QueryPack {
       df.filter(c.applicable)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
           c.value.as("calc_value"))
-        .localCheckpoint(true).orderBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
     }),
 
     "dsl_value_date" -> ((s, dir) => {
@@ -93,7 +91,6 @@ object DslQueries extends QueryPack {
       val c = VariableCompiler.compile(code, new FlatResolver(Set("datestr")))
       df.filter(c.applicable)
         .select(col("o_orderkey"), c.value.as("iso_date"))
-        .localCheckpoint(true).orderBy(col("o_orderkey"))
     }),
 
     "dsl_to_date_between" -> ((s, dir) => {
@@ -111,7 +108,6 @@ object DslQueries extends QueryPack {
         EpiWeek.StartDay(0))
       df.filter(c.applicable)
         .select(col("o_orderkey"))
-        .localCheckpoint(true).orderBy(col("o_orderkey"))
     }),
 
     // The reference's canonical downstream query (docs/source/index.rst:75-77):
@@ -132,7 +128,6 @@ object DslQueries extends QueryPack {
         .groupBy(col("epi_year"), col("epi_week"))
         .agg(count(lit(1)).as("n_cases"),
           countDistinct(col("l_orderkey")).as("n_orders"))
-        .orderBy(col("epi_year"), col("epi_week"))
     }),
 
     // Priority-group fidelity (to_codes.py:260-309): the variables map is
@@ -159,23 +154,13 @@ object DslQueries extends QueryPack {
           element_at(col("categories"), "band").as("band_src"),
           element_at(col("categories"), "seen").as("seen_src"))
         .filter(col("var_winner").isNotNull)
-        .localCheckpoint(true).orderBy(col("p_partkey"))
     }),
 
     "dsl_to_codes_alert" -> ((s, dir) => {
-      // SORT-FREE: the engine's flagship coding gate is scan → ONE hash
-      // repartition → coding projection → explode (spec-pinned in "plan
-      // shape: the flagship coding gate"). Earlier rounds carried a
-      // deterministic-dump global SORT — first above the explode
-      // (range-sorted 2.75M exploded entries and ran the coding pipeline
-      // twice via range-partition sampling: 8.2 s at sf0.1), then at the
-      // scan (1.4-1.5 s; still a sampling job + a sorted shuffle). The
-      // sort only ever ordered the DUMP: every output value is a
-      // deterministic function of its input row, and the driver's compare
-      // sorts rows before hashing (as tools/parity.py does — ten rounds
-      // of green gates over the old sort's 13.7k equal-key ambiguous
-      // pairs prove order-insensitivity). In-row entry order stays
-      // deterministic via array_sort over the map entries.
+      // The engine's flagship coding gate is scan → ONE hash repartition →
+      // coding projection → explode (spec-pinned in "plan shape: the
+      // flagship coding gate"). In-row entry order stays deterministic via
+      // array_sort over the map entries.
       //
       // Why an exchange at all: the driver's single-file testdata has ONE
       // parquet row group, so the scan is irreducibly one task and every

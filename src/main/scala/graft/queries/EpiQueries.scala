@@ -21,7 +21,6 @@ object EpiQueries extends QueryPack {
                 yw.getField("epi_week").as("epi_week"))
         .groupBy(col("epi_year"), col("epi_week"))
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint(true).orderBy(col("epi_year"), col("epi_week"))
     }),
 
     // Policy "international" + week-53 strategy include_in_1: week 53 rolls
@@ -33,7 +32,6 @@ object EpiQueries extends QueryPack {
                 yw.getField("epi_week").as("epi_week"))
         .groupBy(col("epi_year"), col("epi_week"))
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint(true).orderBy(col("epi_year"), col("epi_week"))
     }),
 
     // Same policy with include_in_52: week 53 folds back into week 52 of
@@ -45,7 +43,6 @@ object EpiQueries extends QueryPack {
                 yw.getField("epi_week").as("epi_week"))
         .groupBy(col("epi_year"), col("epi_week"))
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint(true).orderBy(col("epi_year"), col("epi_week"))
     }),
 
     // Policy "day:6" (epi year starts the first Sunday on/after Jan 1) with
@@ -60,7 +57,6 @@ object EpiQueries extends QueryPack {
         .agg(count(lit(1)).as("n"))
         .withColumn("week_start",
           EpiWeek.weekStartDate(col("epi_year"), col("epi_week"), pol))
-        .localCheckpoint(true).orderBy(col("epi_year"), col("epi_week"))
     })
   )
 

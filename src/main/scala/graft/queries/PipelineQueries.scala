@@ -91,7 +91,6 @@ object PipelineQueries extends QueryPack {
           d(col("data"), "user_id").cast("long").as("user_id"),
           d(col("data"), "event_type").as("event_type"),
           d(col("data"), "value").cast("double").as("value_r"))
-        .localCheckpoint(true).orderBy(col("event_id"))
     }),
 
     // P2 through InitialVisitControl: earliest visit per identifier tuple
@@ -107,7 +106,6 @@ object PipelineQueries extends QueryPack {
           d(col("data"), "user_id").cast("long").as("user_id"),
           d(col("data"), "event_type").as("event_type"),
           d(col("data"), "visit").as("visit"))
-        .localCheckpoint(true).orderBy(col("event_id"))
     }),
 
     // P3 through ToDataType: conditional multicast — equality conditions only,
@@ -130,7 +128,6 @@ object PipelineQueries extends QueryPack {
       ToDataType.union(formDf, "orders", types)
         .select(col("type"),
           d(col("data"), "o_orderkey").cast("long").as("o_orderkey"))
-        .localCheckpoint(true).orderBy(col("type"), col("o_orderkey"))
     }),
 
     // P4 "to-links" through AddLinks.linkMatches: equality link, matches
@@ -157,7 +154,6 @@ object PipelineQueries extends QueryPack {
         .select(col("uuid").cast("long").as("o_orderkey"),
           size(col("__linked")).cast("long").as("n_links"),
           concat_ws(",", col("__linked")).as("items"))
-        .localCheckpoint(true).orderBy(col("o_orderkey"))
     }),
 
     // P4 "alert_match" through AddLinks: linked value == last-N chars of the
@@ -181,7 +177,6 @@ object PipelineQueries extends QueryPack {
         .agg(count(lit(1)).as("n_matches"),
           min(col("o_orderkey")).as("first_match"),
           max(col("o_orderkey")).as("last_match"))
-        .localCheckpoint(true).orderBy(col("c_custkey"))
     }),
 
     // A1 through MultipleAlerts.dailyThreshold.
@@ -189,7 +184,6 @@ object PipelineQueries extends QueryPack {
       MultipleAlerts.dailyThreshold(eventsData(s, dir), "any", 5)
         .select(col("clinic").as("user_id"), col("day"), col("n"),
           concat_ws(",", col("uuids")).as("uuids"))
-        .localCheckpoint(true).orderBy(col("user_id"), col("day"))
     }),
 
     // A2 through MultipleAlerts.weeklyThreshold (international epi weeks).
@@ -197,7 +191,6 @@ object PipelineQueries extends QueryPack {
       MultipleAlerts.weeklyThreshold(eventsData(s, dir), "any", 20)
         .select(col("clinic").as("user_id"), col("epi_year"), col("epi_week"),
           col("n"), concat_ws(",", col("uuids")).as("uuids"))
-        .localCheckpoint(true).orderBy(col("user_id"), col("epi_year"), col("epi_week"))
     }),
 
     // A3 through MultipleAlerts.doubleDoubling — the reference spec: three
@@ -217,8 +210,6 @@ object PipelineQueries extends QueryPack {
         .select(col("clinic").as("user_id"), col("var_id").as("event_type"),
           col("epi_year"), col("epi_week"), col("n"),
           concat_ws(",", col("uuids")).as("uuids"))
-        .localCheckpoint(true).orderBy(col("user_id"), col("event_type"), col("epi_year"),
-          col("epi_week"))
     }),
 
     // A4 through MultipleAlerts.promote: rep gains the full alert_* key set,
@@ -240,7 +231,6 @@ object PipelineQueries extends QueryPack {
         .select(col("uuid").cast("long").as("event_id"),
           explode(col("variables")).as(Seq("code", "value")))
         .filter(col("code") =!= "evt")
-        .localCheckpoint(true).orderBy(col("event_id"), col("code"), col("value"))
     }),
 
     // Analytic window-function surface: running totals, ranks, quartiles —
@@ -259,7 +249,6 @@ object PipelineQueries extends QueryPack {
         .withColumn("quartile", ntile(4).over(wOrder))
         .select(col("event_id"), col("user_id"), col("running_value"),
           col("value_rank"), col("quartile"))
-        .localCheckpoint(true).orderBy(col("event_id"))
     }),
 
     // A5: hierarchical population rollup through the SHIPPED
@@ -296,7 +285,6 @@ object PipelineQueries extends QueryPack {
           liveRegions(nd.id - 1000))
         .map(nd => (nd.level, nd.name, rolled.getOrElse(nd.id, 0L) / 100.0))
         .toDF("level", "name", "pop")
-        .orderBy(col("level"), col("name"))
     }),
 
     // A6: multiple_link aggregation over linked rows — count / any / all /
@@ -368,7 +356,6 @@ object PipelineQueries extends QueryPack {
           map_contains_key(vars, "all_early").as("all_early"),
           element_at(vars, "first_part").cast("long").as("first_part"),
           element_at(vars, "last_part").cast("long").as("last_part"))
-        .localCheckpoint(true).orderBy(col("o_orderkey"))
     })
   )
 

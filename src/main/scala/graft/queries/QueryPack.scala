@@ -9,27 +9,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * over the same parquet tables, after sorting columns by name. Column names
   * must therefore agree exactly between the two sides. Keys present only in
   * `queries` get a weaker rows-only check (non-SQL-expressible operators).
+  *
+  * A gate returns its plain result: row order is unspecified, and nothing
+  * stays pinned after the call returns. Consumers canonicalize: parity
+  * sorts rows itself, and the goldens hash rows without regard to order.
   */
 trait QueryPack {
   def queries: Map[String, (SparkSession, String) => DataFrame]
   def oracles: Map[String, String]
-}
-
-object QueryPack {
-  /** Deterministic dump ordering WITHOUT the hidden 2× pipeline tax: a
-    * global `orderBy` placed directly above an expensive plan executes the
-    * whole child twice, because range partitioning first runs a sampling
-    * job over every child partition and then the real shuffle re-executes
-    * the child (measured: the to_codes gate spent 6 of its 8.2 s there).
-    * An eager localCheckpoint materializes the pipeline ONCE; the sample
-    * pass and the sort both read the cached blocks. Use for gate-level
-    * ordering above anything heavier than a scan — plain `orderBy` remains
-    * right when the child is trivial or the order can be established
-    * BEFORE a narrow pipeline (see the to_codes gate).
-    *
-    * Trade: the barrier stops cross-sort optimization (nothing useful
-    * crosses a final dump sort anyway) and pins the frame's blocks until
-    * the DataFrame is GC'd. */
-  def sortedDump(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
-    df.localCheckpoint(true).orderBy(keys: _*)
 }

@@ -33,7 +33,6 @@ object Relational extends QueryPack {
             (lit(1).cast("decimal(4,2)") - col("l_discount").cast("decimal(4,2)")))
             .cast("double").as("sum_disc_price"),
           count(lit(1)).as("count_order"))
-        .localCheckpoint(true).orderBy(col("l_returnflag"), col("l_linestatus"))
     }),
 
     "q3_top_orders" -> ((s, dir) => {
@@ -86,7 +85,6 @@ object Relational extends QueryPack {
         .agg(sum(dec(col("l_extendedprice")) *
             (lit(1).cast("decimal(4,2)") - col("l_discount").cast("decimal(4,2)")))
           .cast("double").as("revenue"))
-        .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
     }),
 
     // TPC-H q5 shape: the deep join chain with dimension broadcasts — the
@@ -111,7 +109,6 @@ object Relational extends QueryPack {
         .agg(sum(dec(col("l_extendedprice")) *
             (lit(1).cast("decimal(4,2)") - col("l_discount").cast("decimal(4,2)")))
           .cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
     }),
 
     // ROLLUP/CUBE — grouping-set aggregations the reference lacks entirely
@@ -125,16 +122,12 @@ object Relational extends QueryPack {
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"),
           sum(dec(col("l_quantity"))).cast("double").as("sum_qty"))
-        .localCheckpoint(true).orderBy(col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)
     }),
 
     "q_cube" -> ((s, dir) => {
       Tables.orders(s, dir)
         .cube(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint(true).orderBy(col("o_orderstatus").asc_nulls_first,
-          col("o_orderpriority").asc_nulls_first)
     }),
 
     "q_region_rollup" -> ((s, dir) => {
@@ -148,7 +141,6 @@ object Relational extends QueryPack {
         .groupBy(col("r_name"), col("n_name"))
         .agg(count(lit(1)).as("n_customers"),
              sum(dec(col("c_acctbal"))).cast("double").as("sum_acctbal"))
-        .localCheckpoint(true).orderBy(col("r_name"), col("n_name"))
     })
   )
 

@@ -377,13 +377,8 @@ object TrainingDataQueries extends QueryPack {
         .otherwise(lit(0.0)).as("divr"))
   }
 
-  // ---- unsorted builders shared by the six signal gates and the
-  // quality_signals composition (r16 optimization) -----------------------
-  // Each gate adds its own `.localCheckpoint(true).orderBy(doc_id)` dump
-  // tail; quality_signals joins the RAW frames — the join destroys order,
-  // so the six per-leg range sorts (each a checkpoint + sample pass +
-  // range exchange) were pure overhead inside the composition. Rows are
-  // unchanged: the tails never changed content, only order.
+  // ---- builders shared by the six signal gates and the
+  // quality_signals composition, which joins their frames -----------------
   private def qualityFrame(docs: DataFrame): DataFrame = {
     val withToks = docs
       .select(col("doc_id"), col("text"),
@@ -1308,26 +1303,10 @@ object TrainingDataQueries extends QueryPack {
   private[queries] val SaPreamble =
     "alpha beta gamma delta epsilon zeta eta theta"
 
-  /** Suite-local fit-once cache for the three [[saCorpus]] gates
-    * (`suffix_array`, `sa_longest_dup`, `dedup_substring_sa`): the
-    * prefix-doubling construction is deterministic and its Model frames
-    * are localCheckpoint-pinned, so ONE fit per (session, sfDir) feeds
-    * all three — the production shape (fit once, run many analyses) and
-    * the suite shape (each per-gate refit was pure recompute). Keyed by
-    * session: a fresh JVM/session refits, so every gate stays standalone-
-    * correct; `spark.catalog.clearCache()` between bench reps does not
-    * touch checkpoint RDDs, so the cache survives exactly as the shared
-    * dedup postings do. */
-  private val saFitCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), SuffixArray.Model]()
-  private def saFit(s: SparkSession, dir: String): SuffixArray.Model = {
-    // evict dead sessions first: a stopped session's Model (and its
-    // checkpoint blocks) must not stay strongly reachable for the JVM's
-    // life — the cache is bounded by LIVE (session, sfDir) pairs
-    saFitCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    saFitCache.computeIfAbsent((s, dir),
-      _ => SuffixArray.fit(saCorpus(s, dir), maxPrefix = 64))
-  }
+  /** The suffix array over [[saCorpus]] behind the `suffix_array`,
+    * `sa_longest_dup` and `dedup_substring_sa` gates; each gate fits it. */
+  private def saFit(s: SparkSession, dir: String): SuffixArray.Model =
+    SuffixArray.fit(saCorpus(s, dir), maxPrefix = 64)
 
   /** Union corpus for the `decontaminate_sa` gate: TRAIN = [[saCorpus]];
     * EVAL = (a) every %40 train doc's tokens 10..25 verbatim plus a novel
@@ -1353,45 +1332,20 @@ object TrainingDataQueries extends QueryPack {
       (col("doc_id") < 1000000000L).as("is_train")))
   }
 
-  /** Fit-once cache for the `decontaminate_sa` union-corpus suffix array
-    * — the [[saFit]] discipline extended to the one SA consumer that
-    * refit from scratch per call (it fits train ∪ eval, a DIFFERENT
-    * corpus than [[saCorpus]], so it cannot share [[saFitCache]]'s
-    * entries; it shares the contract instead). Same keying, same
-    * dead-session eviction, same standalone correctness: a fresh
-    * session refits. */
-  private val deconSaFitCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), SuffixArray.Model]()
-  private def deconSaFit(s: SparkSession, dir: String): SuffixArray.Model = {
-    deconSaFitCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    deconSaFitCache.computeIfAbsent((s, dir),
-      _ => SuffixArray.fit(deconSaCorpus(s, dir)._1, maxPrefix = 64))
-  }
-
-  /** Fit-once cache for the trained quality classifier (the [[saFit]]
-    * discipline, third application): `quality_lr` and
-    * `classifier_calibration` gate the SAME 8-step full-batch GD
-    * trajectory — one scores per-document, the other rolls the scored
-    * frame up into the reliability report. The fit is deterministic and
-    * the scored frame is localCheckpoint-pinned, so ONE (features →
-    * train → score) chain per (session, sfDir) feeds both — exactly the
-    * production shape (train once, score once, audit the same scores).
-    * Standalone correctness: a fresh session/JVM refits. */
-  private val qualityScoredCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  /** The trained quality classifier's per-document scores: the 8-step
+    * full-batch GD trajectory behind `quality_lr`, which outputs them, and
+    * `classifier_calibration`, which rolls them up into the reliability
+    * report. */
   private def qualityScored(s: SparkSession, dir: String): DataFrame = {
-    qualityScoredCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    qualityScoredCache.computeIfAbsent((s, dir), { _ =>
-      import graft.operators.QualityModel
-      val docs = Tables.documents(s, dir)
-      val label = size(filter(
-        graft.operators.TextAnalysis.tokens(col("text")),
-        _ === "spark")) >= 2
-      val feats = QualityModel.features(docs, buckets = 8, labelExpr = label)
-        .localCheckpoint(true) // train loop + scoring reuse, one build
-      val w = QualityModel.train(feats, buckets = 8, iters = 8, lr = 4.0)
-      QualityModel.score(feats, w, buckets = 8).localCheckpoint(true)
-    })
+    import graft.operators.QualityModel
+    val docs = Tables.documents(s, dir)
+    val label = size(filter(
+      graft.operators.TextAnalysis.tokens(col("text")),
+      _ === "spark")) >= 2
+    val feats = QualityModel.features(docs, buckets = 8, labelExpr = label)
+      .localCheckpoint(true) // train loop + scoring reuse, one build
+    val w = QualityModel.train(feats, buckets = 8, iters = 8, lr = 4.0)
+    QualityModel.score(feats, w, buckets = 8)
   }
 
   /** Synthesized 16×16 luma rasters for the perceptual-hash gates (the
@@ -1448,20 +1402,8 @@ object TrainingDataQueries extends QueryPack {
   /** The L160 web-curation chain (broadcast blocklist → langid →
     * Gopher over the survivors) as a reusable frame — the
     * `web_pipeline` gate body, also the text leg of `web_pipeline_mm`.
-    * Blocklist survivors checkpoint ONCE and feed both content stages.
-    * Build-once cache (the [[saFit]] discipline, fourth application):
-    * both consuming gates read the SAME deterministic curation result,
-    * so one checkpointed build per (session, sfDir) feeds both —
-    * exactly the production shape (curate once, analyze many ways). */
-  private val webPipelineCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+    * Blocklist survivors checkpoint ONCE and feed both content stages. */
   private def webPipelineFrame(s: SparkSession, dir: String): DataFrame = {
-    webPipelineCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    webPipelineCache.computeIfAbsent((s, dir),
-      _ => webPipelineBuild(s, dir).localCheckpoint(true))
-  }
-
-  private def webPipelineBuild(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.UrlOps
     import s.implicits._
     val url = concat(
@@ -1499,19 +1441,8 @@ object TrainingDataQueries extends QueryPack {
   /** The L161 image keep list (phash near-dup pairs → connected
     * components → canonical min-id survives) as a reusable frame —
     * the `dedup_phash_keep` gate body, also the image leg of the
-    * composed `web_pipeline_mm` curation gate. Build-once cache, same
-    * contract as [[webPipelineFrame]]: deterministic result, one
-    * checkpointed build per (session, sfDir) feeds both consumers;
-    * a fresh session rebuilds, so every gate stays standalone-correct. */
-  private val phashKeepCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+    * composed `web_pipeline_mm` curation gate. */
   private def phashKeepIds(s: SparkSession, dir: String): DataFrame = {
-    phashKeepCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    phashKeepCache.computeIfAbsent((s, dir),
-      _ => phashKeepBuild(s, dir).localCheckpoint(true))
-  }
-
-  private def phashKeepBuild(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.PerceptualHash
     val imgs = phashPixels(s, dir).select(col("doc_id"),
       graft.functions.PhashExprs
@@ -1997,7 +1928,6 @@ object TrainingDataQueries extends QueryPack {
           graft.functions.SubwordTokenCount
             .subwordTokenCount(col("text"), SubwordVocab)
             .cast("long").as("n_subword"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Tokenizer fertility / compression evaluation (L80): per language,
@@ -2005,7 +1935,6 @@ object TrainingDataQueries extends QueryPack {
     // fixture vocabulary — the report a vocabulary-size decision reads.
     "tokenizer_fertility" -> ((s, dir) => {
       TextAnalysis.tokenizerFertility(Tables.documents(s, dir), SubwordVocab)
-        .orderBy(col("lang"))
     }),
 
     // The segmentation twin: the pieces themselves, space-joined so the
@@ -2015,7 +1944,6 @@ object TrainingDataQueries extends QueryPack {
         .select(col("doc_id"),
           concat_ws(" ", graft.functions.SubwordTokenCount
             .subwordTokens(col("text"), SubwordVocab)).as("segments"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     "text_token_count" -> ((s, dir) => {
@@ -2023,15 +1951,14 @@ object TrainingDataQueries extends QueryPack {
         .select(col("doc_id"),
           TextAnalysis.tokenCount(col("text")).as("n_tokens"),
           TextAnalysis.regexTokenCount(col("text")).as("n_regex_tokens"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     "text_quality" -> ((s, dir) => {
-      qualityFrame(Tables.documents(s, dir)).localCheckpoint(true).orderBy(col("doc_id"))
+      qualityFrame(Tables.documents(s, dir))
     }),
 
     "text_langid" -> ((s, dir) => {
-      langidFrame(Tables.documents(s, dir)).localCheckpoint(true).orderBy(col("doc_id"))
+      langidFrame(Tables.documents(s, dir))
     }),
 
     // Language-id confusion matrix (L109): declared vs predicted counts
@@ -2051,15 +1978,14 @@ object TrainingDataQueries extends QueryPack {
       cm.withColumn("lang_total", sum(col("n")).over(w))
         .withColumn("share",
           col("n").cast("double") / col("lang_total").cast("double"))
-        .localCheckpoint(true).orderBy(col("lang"), col("predicted"))
     }),
 
     "text_fingerprint" -> ((s, dir) => {
-      fingerprintFrame(Tables.documents(s, dir)).localCheckpoint(true).orderBy(col("doc_id"))
+      fingerprintFrame(Tables.documents(s, dir))
     }),
 
     "dedup_exact" -> ((s, dir) => {
-      Dedup.exact(Tables.documents(s, dir)).localCheckpoint(true).orderBy(col("keep_id"))
+      Dedup.exact(Tables.documents(s, dir))
     }),
 
     // Deterministic Lloyd k-means: trained centroids (flattened to one row
@@ -2067,14 +1993,12 @@ object TrainingDataQueries extends QueryPack {
     "kmeans_centroids" -> ((s, dir) => {
       KMeans.fit(Tables.embeddings(s, dir), k = KmeansK, iters = KmeansIters)
         .select(col("cell"), posexplode(col("centroid")).as(Seq("pos", "mean")))
-        .orderBy(col("cell"), col("pos"))
     }),
 
     "kmeans_assign" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
       KMeans.assign(e, KMeans.fit(e, k = KmeansK, iters = KmeansIters))
         .select(col("vec_id"), col("cell"))
-        .localCheckpoint(true).orderBy(col("vec_id"))
     }),
 
     // One representative per semantic cluster (round 14): the member
@@ -2087,7 +2011,6 @@ object TrainingDataQueries extends QueryPack {
       KMeans.representatives(e,
           KMeans.fit(e, k = KmeansK, iters = KmeansIters))
         .select(col("cell"), col("representative_id"), col("n_members"))
-        .localCheckpoint(true).orderBy(col("cell"))
     }),
 
     // DSIR importance weights: hashed unigram+bigram distributions on the
@@ -2100,7 +2023,6 @@ object TrainingDataQueries extends QueryPack {
       val docs = Tables.documents(s, dir)
       graft.operators.Dsir.importanceWeights(docs,
         docs.filter(col("lang") === "en"), numBuckets = DsirBuckets)
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // BM25 top-k retrieval: posting-table scoring of the fixture query
@@ -2111,7 +2033,7 @@ object TrainingDataQueries extends QueryPack {
       val q = s.createDataFrame(Bm25QuerySet).toDF("query_id", "text")
       val out = Retrieval.bm25TopK(Tables.documents(s, dir), q, k = Bm25K,
         subPartitions = 4)
-        .localCheckpoint(true).orderBy(col("query_id"), col("rank"))
+        .localCheckpoint(true)
       graft.operators.Dedup.releaseIntermediateCaches()
       out
     }),
@@ -2137,7 +2059,7 @@ object TrainingDataQueries extends QueryPack {
         .select(col("query_id"), col("doc_id"))
       val out = Retrieval.hardNegatives(docs, q, positives, k = Bm25K,
         subPartitions = 4)
-        .localCheckpoint(true).orderBy(col("query_id"), col("rank"))
+        .localCheckpoint(true)
       graft.operators.Dedup.releaseIntermediateCaches()
       out
     }),
@@ -2165,7 +2087,6 @@ object TrainingDataQueries extends QueryPack {
           graft.operators.DomainReweight.docExcess(proxy, ref)
             .localCheckpoint(true),
           keepFraction = 0.25)
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // SemDeDup: k-means cells + in-cell cosine prune — kept=0 iff a
@@ -2173,7 +2094,6 @@ object TrainingDataQueries extends QueryPack {
     "semdedup_prune" -> ((s, dir) => {
       SemDedup.prune(Tables.embeddings(s, dir), k = KmeansK,
         iters = KmeansIters, threshold = SemDedupTau)
-        .localCheckpoint(true).orderBy(col("vec_id"))
     }),
 
     // Product quantization: per-subspace codebooks (KMeans) + corpus codes,
@@ -2185,7 +2105,6 @@ object TrainingDataQueries extends QueryPack {
       ProductQuantization.encode(e, books, m = PqM)
         .select(col("vec_id"),
           posexplode(col("codes")).as(Seq("subspace", "code")))
-        .localCheckpoint(true).orderBy(col("vec_id"), col("subspace"))
     }),
 
     // IVF-PQ composed ANN: trained coarse router + per-subspace codebooks,
@@ -2198,14 +2117,13 @@ object TrainingDataQueries extends QueryPack {
         m = PqM, coarseK = IvfPqCoarseK, pqK = PqK, iters = IvfPqIters)
       ProductQuantization.ivfPqTopK(e, e.filter(col("vec_id") < 5), coarse,
         books, m = PqM, k = IvfPqTopK, nProbe = IvfPqNProbe)
-        .localCheckpoint(true).orderBy(col("query_id"), col("rank"))
     }),
 
     // BPE vocabulary learning: first 8 merges over the corpus's word
     // frequencies (deterministic — ties break lexicographically).
     "bpe_merges" -> ((s, dir) => {
       BpeLearn.learnTable(s, Tables.documents(s, dir),
-        numMerges = BpeMergeCount).localCheckpoint(true).orderBy(col("rank"))
+        numMerges = BpeMergeCount)
     }),
 
     // The BATCHED production path (numMerges/batchSize driver round-trips
@@ -2218,7 +2136,6 @@ object TrainingDataQueries extends QueryPack {
       import s.implicits._
       BpeLearn.learnBatched(Tables.documents(s, dir),
         numMerges = BpeMergeCount, batchSize = BpeBatchSize).toDF()
-        .localCheckpoint(true).orderBy(col("rank"))
     }),
 
     // WordPiece vocabulary learning (L78): 8 likelihood-argmax merges
@@ -2226,7 +2143,7 @@ object TrainingDataQueries extends QueryPack {
     // trainer, completing the BPE/unigram/WordPiece family.
     "wordpiece_merges" -> ((s, dir) => {
       WordPiece.learnTable(s, Tables.documents(s, dir),
-        numMerges = WpMergeCount).localCheckpoint(true).orderBy(col("rank"))
+        numMerges = WpMergeCount)
     }),
 
     // BATCHED WordPiece learning (L111, round 13): the production path
@@ -2239,7 +2156,6 @@ object TrainingDataQueries extends QueryPack {
     "wordpiece_merges_batched" -> ((s, dir) => {
       WordPiece.learnBatchedTable(s, Tables.documents(s, dir),
         numMerges = WpMergeCount, batchSize = WpBatchSize)
-        .localCheckpoint(true).orderBy(col("rank"))
     }),
 
     // WordPiece serving side (L78): MaxMatch tokenization of every word
@@ -2262,17 +2178,13 @@ object TrainingDataQueries extends QueryPack {
         .select(col("doc_id"), explode(col("pieces")).as("piece"))
         .groupBy(col("doc_id"), col("piece"))
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint(true).orderBy(col("doc_id"), col("piece"))
     }),
 
     // COMPOSED quality-signals table (L85): the Dolma-style per-document
     // attributes artifact — six signal gates joined on doc_id, each the
     // REAL gate builder (zero drift: the gates and this composition call
-    // the same builder functions). r16 optimization: the legs compose RAW
-    // (no per-leg checkpoint + range sort — the join destroys order, so
-    // the six dump tails were six wasted sample passes + range exchanges);
-    // one checkpoint before the final sort keeps the sampling pass off
-    // the composed plan. Same rows, one job instead of thirteen.
+    // the same builder functions), composed as one plan with no per-leg
+    // barrier.
     "quality_signals" -> ((s, dir) => {
       // r16 part 3: all six legs read ONE fanned documents frame — the
       // six identical scan+exchange subtrees dedupe via ReuseExchange,
@@ -2293,7 +2205,6 @@ object TrainingDataQueries extends QueryPack {
       val f = fingerprintFrame(docs)
       e.join(q, Seq("doc_id")).join(r, Seq("doc_id")).join(l, Seq("doc_id"))
         .join(g, Seq("doc_id")).join(f, Seq("doc_id"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // COMPOSED tokenizer pipeline (L84): learn BPE merges on the corpus
@@ -2329,7 +2240,6 @@ object TrainingDataQueries extends QueryPack {
           .as("ids_text"))
       Packing.concatSlice(ids, seqLen = 32, textCol = "ids_text",
         numBuckets = 8)
-        .localCheckpoint(true).orderBy(col("bucket"), col("seq_id"))
     }),
 
     // Unigram-LM tokenizer (L77), seed stage: candidate substrings
@@ -2340,7 +2250,6 @@ object TrainingDataQueries extends QueryPack {
       UnigramLm.seedCandidates(words, maxPieceLen = 4)
         .filter(col("w") >= 2)
         .orderBy(col("w").desc, col("piece").asc).limit(200)
-        .localCheckpoint(true).orderBy(col("w").desc, col("piece").asc)
     }),
 
     // Unigram-LM tokenizer, serving stage: per-document piece counts
@@ -2366,14 +2275,12 @@ object TrainingDataQueries extends QueryPack {
         .select(col("doc_id"), explode(col("pieces")).as("piece"))
         .groupBy(col("doc_id"), col("piece"))
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint(true).orderBy(col("doc_id"), col("piece"))
     }),
 
     // Fill-in-the-middle transform (L83): PSM rearrangement of a
     // deterministic doc slice — pure projection, zero shuffle.
     "fill_in_middle" -> ((s, dir) => {
       FillInMiddle.transform(Tables.documents(s, dir), fimRate = FimRate)
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // GPT-style concat-and-slice sequences (L82): per-bucket document
@@ -2382,7 +2289,6 @@ object TrainingDataQueries extends QueryPack {
     "concat_slice" -> ((s, dir) => {
       Packing.concatSlice(Tables.documents(s, dir), seqLen = 32,
         numBuckets = 8)
-        .localCheckpoint(true).orderBy(col("bucket"), col("seq_id"))
     }),
 
     // Packing-efficiency sweep (L114, round 13): the "choose your
@@ -2396,7 +2302,6 @@ object TrainingDataQueries extends QueryPack {
           .cast("long").as("len"))
       Packing.packingEfficiency(lens, "len", PackSweepLens,
           keyCol = "doc_id", numBuckets = 8)
-        .localCheckpoint(true).orderBy(col("seq_len"))
     }),
 
     // T5-style span corruption (L81): sentinel-masked input/target pairs
@@ -2408,7 +2313,6 @@ object TrainingDataQueries extends QueryPack {
       SpanCorruption.corrupt(Tables.fanOut(s, Tables.documents(s, dir),
           dir, "documents", col("doc_id")),
         spanStartProb = SpanCorrProb, spanLen = SpanCorrLen)
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // CCNet-shaped LM scoring: train an add-1 bigram model on the corpus,
@@ -2421,7 +2325,6 @@ object TrainingDataQueries extends QueryPack {
       // fan-out exchange costs more than the cheap explode it frees
       val docs = Tables.documents(s, dir)
       LanguageModel.scoreDocuments(docs, LanguageModel.ngramCounts(docs))
-        .orderBy(col("doc_id"))
     }),
 
     // DoReMi-style domain reweighting (L118): one exponentiated-gradient
@@ -2447,7 +2350,6 @@ object TrainingDataQueries extends QueryPack {
           LanguageModel.ngramCounts(docs))
         .select(col("doc_id"), col("n_trans"), col("lm_score"))
       graft.operators.DomainReweight.excessWeights(docs, proxy, ref)
-        .localCheckpoint(true).orderBy(col("domain"))
     }),
 
     // Interpolated MODIFIED Kneser-Ney bigram scoring (L79): the KenLM/
@@ -2459,7 +2361,6 @@ object TrainingDataQueries extends QueryPack {
       // KN stages profile machine-wide already)
       val docs = Tables.documents(s, dir)
       LanguageModel.scoreDocumentsKn(docs, LanguageModel.ngramCounts(docs))
-        .orderBy(col("doc_id"))
     }),
 
     // the trigram tier of the same machinery — contexts are opaque
@@ -2470,14 +2371,12 @@ object TrainingDataQueries extends QueryPack {
       val docs = Tables.documents(s, dir)
       LanguageModel.scoreDocumentsKn(docs,
         LanguageModel.ngramCounts(docs, n = 3), n = 3)
-        .orderBy(col("doc_id"))
     }),
 
     // Exact substring dedup (ExactSubstr, Lee et al. 2022): maximal token
     // spans whose 5-grams occur at least twice corpus-wide, merged per doc.
     "dedup_substring_spans" -> ((s, dir) => {
       SubstringDedup.duplicatedSpans(Tables.documents(s, dir), k = 5)
-        .localCheckpoint(true).orderBy(col("doc_id"), col("span_start"))
     }),
 
     // Distributed suffix array by prefix doubling (L119): global dense
@@ -2490,7 +2389,6 @@ object TrainingDataQueries extends QueryPack {
     "suffix_array" -> ((s, dir) => {
       saFit(s, dir).sa
         .select(col("doc_id"), col("pos"), col("rank"))
-        .localCheckpoint(true).orderBy(col("doc_id"), col("pos"))
     }),
 
     // Longest duplicated passages (L120): top-10 adjacent-suffix LCPs
@@ -2498,8 +2396,6 @@ object TrainingDataQueries extends QueryPack {
     // the retained doubling tables, clamped at full ties.
     "sa_longest_dup" -> ((s, dir) => {
       SuffixArray.longestDuplicated(saFit(s, dir), topK = 10)
-        .localCheckpoint(true)
-        .orderBy(col("lcp").desc, col("d1"), col("p1"), col("d2"), col("p2"))
     }),
 
     // ExactSubstr spans from the suffix array (L121): neighbor-LCP ≥ 5
@@ -2508,7 +2404,6 @@ object TrainingDataQueries extends QueryPack {
     // equivalence proof (and the spec pins it on random corpora).
     "dedup_substring_sa" -> ((s, dir) => {
       SuffixArray.duplicatedSpans(saFit(s, dir), minLen = 5)
-        .localCheckpoint(true).orderBy(col("doc_id"), col("span_start"))
     }),
 
     // ExactSubstr spans from the generalized suffix AUTOMATON (round-14
@@ -2519,7 +2414,6 @@ object TrainingDataQueries extends QueryPack {
     "dedup_substring_sam" -> ((s, dir) => {
       graft.operators.SuffixAutomaton
         .duplicatedSpans(saCorpus(s, dir), minLen = 5)
-        .localCheckpoint(true).orderBy(col("doc_id"), col("span_start"))
     }),
 
     // Cross-corpus ExactSubstr decontamination (L122): suffix array over
@@ -2531,11 +2425,9 @@ object TrainingDataQueries extends QueryPack {
     // LCP against its nearest train suffix above/below in direct
     // token-list comparison — the PROPERTY, not the algorithm.
     "decontaminate_sa" -> ((s, dir) => {
-      // union fit comes from the fit-once cache (deconSaFit); the tags
-      // frame is a pure projection of the same lazy corpus — cheap
-      val tags = deconSaCorpus(s, dir)._2
-      SuffixArray.leakageReport(deconSaFit(s, dir), tags, minLen = 5)
-        .localCheckpoint(true).orderBy(col("doc_id"))
+      val (docs, tags) = deconSaCorpus(s, dir)
+      SuffixArray.leakageReport(
+        SuffixArray.fit(docs, maxPrefix = 64), tags, minLen = 5)
     }),
 
     // The scrubbed corpus: duplicated spans removed, every document kept
@@ -2544,7 +2436,6 @@ object TrainingDataQueries extends QueryPack {
       val docs = Tables.documents(s, dir)
       SubstringDedup.scrubSpans(docs,
         SubstringDedup.duplicatedSpans(docs, k = 5))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     "dedup_jaccard" -> ((s, dir) => {
@@ -2553,7 +2444,6 @@ object TrainingDataQueries extends QueryPack {
       // stop-shingle defense)
       Dedup.jaccardPairs(Tables.documents(s, dir), threshold = 0.3,
         maxShingleDf = Some(1000))
-        .localCheckpoint(true).orderBy(col("doc_a"), col("doc_b"))
     }),
 
     // Same pair set through the prefix-filtered candidate engine
@@ -2562,7 +2452,6 @@ object TrainingDataQueries extends QueryPack {
     // needs no stop-shingle DF cap. Shares dedup_jaccard's oracle.
     "dedup_jaccard_prefix" -> ((s, dir) => {
       Dedup.jaccardPairsPrefix(Tables.documents(s, dir), threshold = 0.3)
-        .localCheckpoint(true).orderBy(col("doc_a"), col("doc_b"))
     }),
 
     "dedup_minhash_lsh" -> ((s, dir) => {
@@ -2570,7 +2459,6 @@ object TrainingDataQueries extends QueryPack {
       // exercise-without-effect here, the hot-bucket defense at scale)
       Dedup.minhashLshPairs(Tables.documents(s, dir), numHashes = 8,
         bandSize = 2, maxBucketSize = Some(1000))
-        .orderBy(col("doc_a"), col("doc_b"))
     }),
 
     // Blocked-Levenshtein near-dup pairs (L130): record linkage over a
@@ -2583,7 +2471,6 @@ object TrainingDataQueries extends QueryPack {
           1, 4)).as("title"))
       Dedup.levenshteinPairs(titled, keyCol = "title", blockLen = 6,
           maxDistance = 2, maxBlockSize = Some(64))
-        .localCheckpoint(true).orderBy(col("id_a"), col("id_b"))
     }),
 
     // All-but-the-top (L132, Mu & Viswanath 2018): the embedding set's
@@ -2594,7 +2481,6 @@ object TrainingDataQueries extends QueryPack {
     "embedding_top_pc" -> ((s, dir) => {
       graft.operators.EmbeddingPca
         .topComponent(Tables.embeddings(s, dir), iters = 4)
-        .localCheckpoint(true).orderBy(col("pos"))
     }),
 
     // the per-vector removal coefficients under the same fitted
@@ -2608,7 +2494,6 @@ object TrainingDataQueries extends QueryPack {
       val u = EmbeddingPca.centeredInt(e).localCheckpoint(true)
       EmbeddingPca.projectionsCentered(u,
           EmbeddingPca.topComponentCentered(u, iters = 4))
-        .localCheckpoint(true).orderBy(col("vec_id"))
     }),
 
     // Margin-based bitext mining (L131): embeddings split into two
@@ -2625,7 +2510,6 @@ object TrainingDataQueries extends QueryPack {
           e.filter(col("vec_id") % 2 === 0),
           e.filter(col("vec_id") % 2 === 1),
           k = 4, thresholdMicro = BitextThresholdMicro)
-        .localCheckpoint(true).orderBy(col("vec_id_a"))
     }),
 
     // Mutual-best bitext pairs (L146): the CCMatrix precision tier —
@@ -2638,7 +2522,6 @@ object TrainingDataQueries extends QueryPack {
           e.filter(col("vec_id") % 2 === 0),
           e.filter(col("vec_id") % 2 === 1),
           k = 4, thresholdMicro = BitextThresholdMicro)
-        .localCheckpoint(true).orderBy(col("vec_id_a"))
     }),
 
     // Winnowing fingerprint matches (L123, Schleimer et al. 2003 / MOSS):
@@ -2651,7 +2534,6 @@ object TrainingDataQueries extends QueryPack {
       Winnow.matchPairs(
           Winnow.fingerprints(Tables.documents(s, dir), k = 3, w = 4),
           minShared = 2, maxBucketSize = Some(64))
-        .localCheckpoint(true).orderBy(col("doc_a"), col("doc_b"))
     }),
 
     // Dedup summary report (L110): the component-size histogram a
@@ -2671,7 +2553,6 @@ object TrainingDataQueries extends QueryPack {
         .select(col("a"), col("doc_id").as("b"))
       Dedup.componentSizeReport(
           Dedup.connectedComponents(jp.unionByName(ep)), keepK = ReportKeepK)
-        .localCheckpoint(true).orderBy(col("component_size"))
     }),
 
     // Cross-source duplication matrix (L106): the LSH near-dup pairs
@@ -2682,7 +2563,6 @@ object TrainingDataQueries extends QueryPack {
         maxBucketSize = Some(1000))
       Dedup.pairGroupMatrix(pairs, docs.select(col("doc_id"), col("source")),
           idCol = "doc_id", groupCol = "source")
-        .localCheckpoint(true).orderBy(col("group_a"), col("group_b"))
     }),
 
     "dedup_simhash" -> ((s, dir) => {
@@ -2692,12 +2572,10 @@ object TrainingDataQueries extends QueryPack {
           dir, "documents", col("doc_id")))
         .select(col("sim"), col("n_docs"), col("keep_id"),
           concat_ws(",", col("doc_ids")).as("doc_ids"))
-        .localCheckpoint(true).orderBy(col("sim"))
     }),
 
     "text_repetition" -> ((s, dir) => {
       TextAnalysis.repetition(Tables.documents(s, dir))
-        .orderBy(col("doc_id"))
     }),
 
     // Line-level repetition battery (L116): the Gopher line rules over the
@@ -2713,7 +2591,6 @@ object TrainingDataQueries extends QueryPack {
             when(col("doc_id") % 4 === 0, trailer).otherwise(lit("")))
             .as("text"))
       TextAnalysis.lineRepetition(lined)
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Within-doc duplicated 5-gram coverage (L117): Gopher's duplicate
@@ -2725,7 +2602,6 @@ object TrainingDataQueries extends QueryPack {
           when(col("doc_id") % 7 === 0, concat(col("text"), lit(" "), col("text")))
             .otherwise(col("text")).as("text"))
       TextAnalysis.dupNgramCoverage(derived, k = 5)
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Detector consolidation: exact-dup pairs ∪ jaccard near-dup pairs →
@@ -2746,7 +2622,6 @@ object TrainingDataQueries extends QueryPack {
         .select(col("id").cast("long").as("doc_id"),
           col("component").cast("long").as("component"),
           col("is_canonical"))
-        .orderBy(col("doc_id"))
     }),
 
     // Same pair graph through the O(log² n)-round star-contraction
@@ -2767,7 +2642,6 @@ object TrainingDataQueries extends QueryPack {
         .select(col("id").cast("long").as("doc_id"),
           col("component").cast("long").as("component"),
           col("is_canonical"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // The terminal dedup artifact: the corpus with non-canonical cluster
@@ -2786,7 +2660,6 @@ object TrainingDataQueries extends QueryPack {
       val comps = Dedup.connectedComponents(jp.unionByName(ep))
       Dedup.applyKeepList(docs, comps)
         .select(col("doc_id"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Quality keep rule over the same detector chain: per duplicate
@@ -2807,7 +2680,6 @@ object TrainingDataQueries extends QueryPack {
       Dedup.applyKeepListBest(docs, comps,
         TextAnalysis.tokenCount(col("text")).cast("long"))
         .select(col("doc_id"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // KEEP-K policy over the same detector chain (L112, round 13): per
@@ -2830,7 +2702,6 @@ object TrainingDataQueries extends QueryPack {
       Dedup.applyKeepListK(docs, comps,
         TextAnalysis.tokenCount(col("text")).cast("long"), k = ReportKeepK)
         .select(col("doc_id"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Incremental dedup of an ingest batch against corpus history: the
@@ -2848,19 +2719,16 @@ object TrainingDataQueries extends QueryPack {
         expectedItems = 100000L)
       IncrementalDedup.filterUnseenExact(batch, history, "digest", sk)
         .select(col("doc_id"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     "dedup_embedding" -> ((s, dir) => {
       Similarity.embeddingDupPairs(Tables.embeddings(s, dir),
         threshold = 0.4, blockCol = "label")
-        .localCheckpoint(true).orderBy(col("vec_a"), col("vec_b"))
     }),
 
     "ann_bruteforce" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
       Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 10), k = 5)
-        .localCheckpoint(true).orderBy(col("query_id"), col("rank"))
     }),
 
     // Eval-set embedding-NN leakage report (L113, round 13): per
@@ -2874,7 +2742,6 @@ object TrainingDataQueries extends QueryPack {
           e.filter(col("vec_id") % 23 =!= 0),
           e.filter(col("vec_id") % 23 === 0),
           threshold = NnLeakThreshold)
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // IVF ANN: fixed seed-vector coarse quantizer, nProbe nearest cells
@@ -2883,13 +2750,11 @@ object TrainingDataQueries extends QueryPack {
       val e = Tables.embeddings(s, dir)
       Similarity.ivfTopK(e, e.filter(col("vec_id") < 10), k = 3,
         numCells = 16, nProbe = 4)
-        .localCheckpoint(true).orderBy(col("query_id"), col("rank"))
     }),
 
     "ann_lsh" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
       Similarity.lshTopK(e, e.filter(col("vec_id") < 10), k = 3, bits = 8)
-        .localCheckpoint(true).orderBy(col("query_id"), col("rank"))
     }),
 
     // Recall@k of the IVF index against brute-force ground truth — the
@@ -2901,7 +2766,6 @@ object TrainingDataQueries extends QueryPack {
       Similarity.recallAtK(
         Similarity.ivfTopK(e, q, k = 3, numCells = 16, nProbe = 4),
         Similarity.bruteForceTopK(e, q, k = 3), k = 3)
-        .localCheckpoint(true).orderBy(col("query_id"))
     }),
 
     // the recall CURVE behind the nProbe choice (round 14): one search
@@ -2912,7 +2776,6 @@ object TrainingDataQueries extends QueryPack {
       val e = Tables.embeddings(s, dir)
       Similarity.ivfRecallSweep(e, e.filter(col("vec_id") < 10), k = 3,
           numCells = 16, nProbes = Seq(1, 2, 4, 8))
-        .localCheckpoint(true).orderBy(col("n_probe"))
     }),
 
     // gap-based sessionization via Spark's native session_window. Boundary
@@ -2922,7 +2785,6 @@ object TrainingDataQueries extends QueryPack {
     "sessionize" -> ((s, dir) => {
       import graft.operators.Sessionize
       Sessionize.sessions(Tables.events(s, dir), "user_id", "ts", "30 minutes")
-        .localCheckpoint(true).orderBy(col("user_id"), col("session_start"))
     }),
 
     // Word2vec negative sampling (L89): k deterministic draws per
@@ -2933,7 +2795,6 @@ object TrainingDataQueries extends QueryPack {
       val out = TextAnalysis.negativeSamples(
         TextAnalysis.skipGramPairs(docs, window = 2), docs, k = 2)
         .localCheckpoint(true)
-        .orderBy(col("center"), col("context"), col("dist"), col("j"))
       Dedup.releaseIntermediateCaches()
       out
     }),
@@ -2944,7 +2805,7 @@ object TrainingDataQueries extends QueryPack {
     "token_subsample" -> ((s, dir) => {
       val out = TextAnalysis.subsampleTokens(Tables.documents(s, dir),
         t = 1e-3)
-        .localCheckpoint(true).orderBy(col("doc_id"), col("pos"))
+        .localCheckpoint(true)
       Dedup.releaseIntermediateCaches()
       out
     }),
@@ -2954,8 +2815,6 @@ object TrainingDataQueries extends QueryPack {
     // self-join anywhere.
     "skipgram_pairs" -> ((s, dir) => {
       TextAnalysis.skipGramPairs(Tables.documents(s, dir), window = 2)
-        .localCheckpoint(true)
-        .orderBy(col("center"), col("context"), col("dist"))
     }),
 
     // Session event-sequence corpus (L86): the behavioral documents a
@@ -2966,7 +2825,6 @@ object TrainingDataQueries extends QueryPack {
       import graft.operators.Sessionize
       Sessionize.sessionSequences(Tables.events(s, dir), "user_id", "ts",
         "30 minutes")
-        .localCheckpoint(true).orderBy(col("user_id"), col("session_start"))
     }),
 
     "multimodal_decode" -> ((s, dir) => {
@@ -2978,7 +2836,6 @@ object TrainingDataQueries extends QueryPack {
       Multimodal.resize(feats, maxDim = 512)
         .select(col("doc_id"), col("byte_len"), col("width"), col("height"),
           col("n_frames"), col("digest"), col("out_width"), col("out_height"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Per-image perceptual hashes (L158): aHash + dHash band values over
@@ -3000,7 +2857,6 @@ object TrainingDataQueries extends QueryPack {
       hashed.select(col("doc_id") +:
           (0 until 4).map(i => element_at(col("__a"), i + 1).as(s"a$i")) ++:
           (0 until 4).map(i => element_at(col("__d"), i + 1).as(s"d$i")): _*)
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Perceptual-hash image near-dup pairs (L159): aHash banded into
@@ -3024,7 +2880,6 @@ object TrainingDataQueries extends QueryPack {
         .localCheckpoint(true) // hash once; the pair engine re-reads bands
       PerceptualHash.nearDupPairs(imgs, numBands = 4, maxHamming = 3,
           maxBucketSize = Some(1000), failOnHotBucket = true)
-        .localCheckpoint(true).orderBy(col("doc_a"), col("doc_b"))
     }),
 
     // aHash-candidate ∧ dHash-verify conjunction (the production
@@ -3049,7 +2904,6 @@ object TrainingDataQueries extends QueryPack {
       PerceptualHash.nearDupPairsAnd(imgs, numBands = 4, maxHamming = 3,
           maxHammingVerify = 3, maxBucketSize = Some(1000),
           failOnHotBucket = true)
-        .localCheckpoint(true).orderBy(col("doc_a"), col("doc_b"))
     }),
 
     // The keep list image dedup exists FOR (L161): phash near-dup pairs
@@ -3060,7 +2914,7 @@ object TrainingDataQueries extends QueryPack {
     // components machinery; the oracle replays pairs + the recursive
     // min-label walk + the NOT IN drop.
     "dedup_phash_keep" -> ((s, dir) =>
-      phashKeepIds(s, dir).orderBy(col("doc_id"))), // frame is cache-checkpointed
+      phashKeepIds(s, dir)),
 
     // Corpus scrub pass: tag strip + email/URL redaction + whitespace
     // collapse, plus per-doc redaction counts. md5 of the scrubbed text
@@ -3073,7 +2927,6 @@ object TrainingDataQueries extends QueryPack {
         .select(Seq(col("doc_id"),
           md5(TextNormalize.scrub(col("text")).cast("binary")).as("scrub_md5")) ++
           counts: _*)
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Full PII scrub (emails, URLs, IPv4, phones). The corpus carries no
@@ -3095,7 +2948,6 @@ object TrainingDataQueries extends QueryPack {
         .select(Seq(col("doc_id"),
           md5(TextNormalize.scrubPii(pii).cast("binary")).as("scrub_md5")) ++
           counts: _*)
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Unicode NFC canonicalization (native codegen'd expression) — the
@@ -3111,7 +2963,6 @@ object TrainingDataQueries extends QueryPack {
           md5(NfcNormalize.nfc(t).cast("binary")).as("nfc_md5"),
           (length(t) - length(NfcNormalize.nfc(t))).cast("long")
             .as("n_composed"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Per-label embedding centroids (clustering/reporting surface):
@@ -3119,7 +2970,6 @@ object TrainingDataQueries extends QueryPack {
     "embedding_centroids" -> ((s, dir) => {
       import graft.operators.Similarity
       Similarity.centroids(Tables.embeddings(s, dir), "label", "embedding")
-        .localCheckpoint(true).orderBy(col("label"), col("pos"))
     }),
 
     // Sequence packing: documents assigned to fixed-token-budget training
@@ -3134,7 +2984,6 @@ object TrainingDataQueries extends QueryPack {
         keyCol = "doc_id", numBuckets = 8)
         .select(col("doc_id"), col("bucket"), col("example_id"),
           col("n_tokens"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Fixed-token-window chunking with overlap: long documents split into
@@ -3145,7 +2994,6 @@ object TrainingDataQueries extends QueryPack {
         overlap = 8)
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"),
           col("chunk_tokens"))
-        .localCheckpoint(true).orderBy(col("doc_id"), col("chunk_id"))
     }),
 
     // Deterministic stratified sampling: downsample English, keep German
@@ -3157,14 +3005,12 @@ object TrainingDataQueries extends QueryPack {
         Map("en" -> 0.1, "de" -> 1.0, "fr" -> 0.5),
         keyCol = "doc_id", defaultFraction = 0.25, salt = "s1")
         .select(col("doc_id"), col("lang"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Gopher heuristic battery (Rae et al. 2021): per-doc rule metrics and
     // the composite keep flag.
     "quality_gopher" -> ((s, dir) => {
       TextAnalysis.gopherRules(Tables.documents(s, dir))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Per-source quota cap (CommonCrawl-style per-domain cap): at most 10
@@ -3175,7 +3021,6 @@ object TrainingDataQueries extends QueryPack {
       Sampling.groupCap(Tables.documents(s, dir), "source",
         maxPerGroup = 10, keyCol = "doc_id", salt = "gc", subPartitions = 4)
         .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
     }),
 
     // Deterministic train/val/test assignment by cumulative hash ranges —
@@ -3187,7 +3032,6 @@ object TrainingDataQueries extends QueryPack {
         Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
         keyCol = "doc_id", salt = "sp")
         .select(col("doc_id"), col("split"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // SQ reconstruction-error report (L151): per vector the nano-cosine
@@ -3196,7 +3040,6 @@ object TrainingDataQueries extends QueryPack {
     "embedding_sq_error" -> ((s, dir) => {
       import graft.operators.ScalarQuant
       ScalarQuant.reconstructionReport(Tables.embeddings(s, dir))
-        .localCheckpoint(true).orderBy(col("vec_id"))
     }),
 
     // Embedding-space hard negatives (L150): per query vector the top-5
@@ -3206,7 +3049,6 @@ object TrainingDataQueries extends QueryPack {
       val e = Tables.embeddings(s, dir)
       Similarity.embeddingHardNegatives(e,
           e.filter(col("vec_id") < 10), k = 5)
-        .localCheckpoint(true).orderBy(col("query_id"), col("rank"))
     }),
 
     // Contrastive independent crops (L149): two deterministic 12-token
@@ -3215,7 +3057,6 @@ object TrainingDataQueries extends QueryPack {
     "contrastive_crops" -> ((s, dir) => {
       import graft.operators.SpanCorruption
       SpanCorruption.contrastiveCrops(Tables.documents(s, dir))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Per-domain quality prior + blend (L148): the REAL ensemble rank
@@ -3237,7 +3078,6 @@ object TrainingDataQueries extends QueryPack {
         .domainPriorBlend(withDomain, "lang", "ensemble_micro")
         .select(col("doc_id"), col("lang"), col("ensemble_micro"),
           col("domain_prior_micro"), col("blend_micro"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Size-balanced sharding (L147): sorted round-robin by token count
@@ -3251,7 +3091,6 @@ object TrainingDataQueries extends QueryPack {
           TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
       Packing.shardBalancedBySize(d, numShards = 8, sizeCol = "n_tokens",
           keyCol = "doc_id", salt = "bal")
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // The balance rollup of L147: per-shard doc/token totals + the
@@ -3265,7 +3104,6 @@ object TrainingDataQueries extends QueryPack {
           Packing.shardBalancedBySize(d, numShards = 8,
             sizeCol = "n_tokens", keyCol = "doc_id", salt = "bal"),
           "n_tokens")
-        .localCheckpoint(true).orderBy(col("shard"))
     }),
 
     // Vocabulary-growth / Heaps-curve report (L145): per 50-doc ingest
@@ -3276,7 +3114,6 @@ object TrainingDataQueries extends QueryPack {
       val batched = Tables.documents(s, dir)
         .select(expr("doc_id div 50").as("batch"), col("text"))
       CorpusStats.vocabGrowth(batched, "batch")
-        .localCheckpoint(true).orderBy(col("bucket"))
     }),
 
     // SFT-pair heuristic curation (L144): the Alpaca-cleaning rule
@@ -3307,7 +3144,6 @@ object TrainingDataQueries extends QueryPack {
       Curation.filterWithProvenance(pairs, sftRules)
         .select(col("pair_id"), col("itok"), col("rtok"), col("keep"),
           col("n_fails"), col("fail_reasons"), col("first_fail"))
-        .localCheckpoint(true).orderBy(col("pair_id"))
     }),
 
     // KV-cache prefix-sharing report (L143): template-rendered prompts
@@ -3324,7 +3160,6 @@ object TrainingDataQueries extends QueryPack {
       val prompts = Tables.documents(s, dir)
         .select(concat(tpl, col("text")).as("text"))
       SftPrep.prefixCacheReport(prompts, prefixTokens = 4)
-        .localCheckpoint(true).orderBy(col("prefix"))
     }),
 
     // Mergeable-sketch group similarity matrix (L142): per 100-doc
@@ -3336,7 +3171,7 @@ object TrainingDataQueries extends QueryPack {
         concat(lit("s"), expr("doc_id div 100").cast("string")).as("grp"),
         col("text"))
       val out = Dedup.minhashMatrix(grouped, "grp")
-        .localCheckpoint(true).orderBy(col("src_a"), col("src_b"))
+        .localCheckpoint(true)
       Dedup.releaseIntermediateCaches()
       out
     }),
@@ -3346,7 +3181,6 @@ object TrainingDataQueries extends QueryPack {
     "collocations" -> ((s, dir) => {
       TextAnalysis.collocations(Tables.documents(s, dir),
           topK = 30, minCount = 5)
-        .localCheckpoint(true).orderBy(col("rank"))
     }),
 
     // Consistent pseudonymization (L140): injected emails (shared across
@@ -3363,7 +3197,6 @@ object TrainingDataQueries extends QueryPack {
           TextNormalize.pseudonymize(col("text")).as("text"),
           regexp_count(col("text"), lit(TextNormalize.EmailPattern))
             .cast("long").as("n_entities"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // TextTiling-shaped topic segmentation (L139): integer
@@ -3375,7 +3208,6 @@ object TrainingDataQueries extends QueryPack {
       // documents scan (paired A/B win, see OPTIMIZATION_r16.md)
       TopicTiling.gapScores(Tables.fanOut(s, Tables.documents(s, dir),
           dir, "documents", col("doc_id")))
-        .localCheckpoint(true).orderBy(col("doc_id"), col("gap_idx"))
     }),
 
     // The consumer view of L139: every token block labeled with its
@@ -3386,7 +3218,6 @@ object TrainingDataQueries extends QueryPack {
       // topic_gap_scores (segments re-runs gapScores plus the block walk)
       TopicTiling.segments(Tables.fanOut(s, Tables.documents(s, dir),
           dir, "documents", col("doc_id")))
-        .localCheckpoint(true).orderBy(col("doc_id"), col("block"))
     }),
 
     // Vocabulary coverage / OOV report (L138): per language, type and
@@ -3397,7 +3228,6 @@ object TrainingDataQueries extends QueryPack {
       val docs = Tables.documents(s, dir)
       TextAnalysis.vocabCoverage(docs,
           TextAnalysis.vocabulary(docs, topK = 50))
-        .localCheckpoint(true).orderBy(col("lang"))
     }),
 
     // MinHash estimator calibration (L137): the reliability table the
@@ -3407,7 +3237,7 @@ object TrainingDataQueries extends QueryPack {
     // that landed there.
     "dedup_minhash_calibration" -> ((s, dir) => {
       val out = Dedup.minhashCalibration(Tables.documents(s, dir))
-        .localCheckpoint(true).orderBy(col("n_agree"))
+        .localCheckpoint(true)
       Dedup.releaseIntermediateCaches()
       out
     }),
@@ -3432,8 +3262,6 @@ object TrainingDataQueries extends QueryPack {
           Tables.documents(s, dir).select(col("doc_id"), url.as("url")),
           "url", "doc_id", langs = Seq("en", "de", "fr", "es", "zh"),
           maxPerKey = 16)
-        .localCheckpoint(true)
-        .orderBy(col("site_key"), col("doc_a"), col("doc_b"))
     }),
 
     // Conversation-tree flattening (L135): ShareGPT-style branching turns
@@ -3450,7 +3278,6 @@ object TrainingDataQueries extends QueryPack {
             expr("((doc_id % 16) - 1) div 2")).as("parent_id"),
         substring(col("text"), 1, 12).as("text"))
       ConvTree.leafConversations(turns, maxDepth = 8)
-        .localCheckpoint(true).orderBy(col("leaf_id"))
     }),
 
     // Weighted sampling WITHOUT replacement (L134, Efraimidis & Spirakis
@@ -3467,7 +3294,6 @@ object TrainingDataQueries extends QueryPack {
       Sampling.weightedSample(docs, k = 100, weightCol = "w",
         keyCol = "doc_id", salt = "es", buckets = 64)
         .select(col("rank"), col("doc_id"), col("w"), col("es_micro"))
-        .localCheckpoint(true).orderBy(col("rank"))
     }),
 
     // Benchmark decontamination: training docs sharing any 3-gram with the
@@ -3479,7 +3305,6 @@ object TrainingDataQueries extends QueryPack {
       val bench = docs.filter(col("doc_id") % 97 === 0)
       val train = docs.filter(col("doc_id") % 97 =!= 0)
       Decontaminate.overlap(train, bench, k = 3)
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Fuzzy decontamination: MinHash-LSH candidates across train × bench,
@@ -3491,7 +3316,6 @@ object TrainingDataQueries extends QueryPack {
       val bench = docs.filter(col("doc_id") % 5 === 3)
       val train = docs.filter(col("doc_id") % 5 =!= 3)
       Decontaminate.fuzzyOverlap(train, bench, threshold = 0.5)
-        .localCheckpoint(true).orderBy(col("doc_id"), col("bench_id"))
     }),
 
     // Reverse decontamination report: per benchmark item, how much of the
@@ -3503,7 +3327,6 @@ object TrainingDataQueries extends QueryPack {
       val bench = docs.filter(col("doc_id") % 97 === 0)
       val train = docs.filter(col("doc_id") % 97 =!= 0)
       Decontaminate.evalReport(train, bench, k = 3)
-        .orderBy(col("doc_id"))
     }),
 
     // Corpus-level duplicated-line removal (CCNet pass). The corpus has no
@@ -3515,27 +3338,23 @@ object TrainingDataQueries extends QueryPack {
         .select(col("doc_id"),
           expr("replace(text, ' table ', '\n')").as("text"))
       TextNormalize.dedupLines(lined, maxDocFrequency = 5)
-        .orderBy(col("doc_id"))
     }),
 
     // Hashed-feature linear quality score (fasttext-shaped scoring pass).
     "quality_classifier" -> ((s, dir) => {
       TextAnalysis.classifierScores(Tables.documents(s, dir), buckets = 4096)
-        .orderBy(col("doc_id"))
     }),
 
     // Corpus vocabulary: top-50 tokens by term frequency with document
     // frequency, token-ascending tiebreak.
     "vocab_topk" -> ((s, dir) => {
       TextAnalysis.vocabulary(Tables.documents(s, dir), topK = 50)
-        .localCheckpoint(true).orderBy(col("term_freq").desc, col("token").asc)
     }),
 
     // Per-language top-5 tokens (group-wise heavy hitters).
     "vocab_per_lang" -> ((s, dir) => {
       TextAnalysis.vocabularyPerGroup(Tables.documents(s, dir), "lang",
         topK = 5)
-        .localCheckpoint(true).orderBy(col("lang"), col("rank"))
     }),
 
     // Multi-signal quality ensemble (L133): blended exact-percentile
@@ -3549,7 +3368,6 @@ object TrainingDataQueries extends QueryPack {
         ("n_distinct",
           size(array_distinct(TextAnalysis.tokens(col("text")))).cast("long")),
         ("n_chars", length(col("text")).cast("long"))))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Corpus-level top-30 repeated 5-grams (L129): the boilerplate-mining
@@ -3557,7 +3375,6 @@ object TrainingDataQueries extends QueryPack {
     // for the winners only.
     "corpus_top_ngrams" -> ((s, dir) => {
       TextAnalysis.topNgrams(Tables.documents(s, dir), n = 5, topK = 30)
-        .localCheckpoint(true).orderBy(col("rank"))
     }),
 
     // Per-language corpus report: doc count, token volume, source
@@ -3568,7 +3385,6 @@ object TrainingDataQueries extends QueryPack {
         .withColumn("n_tokens",
           TextAnalysis.tokenCount(col("text")).cast("long"))
       CorpusStats.stats(docs, "lang", "n_tokens", "source")
-        .localCheckpoint(true).orderBy(col("lang"))
     }),
 
     // Per-language length-band outlier filter: keep docs inside their own
@@ -3581,7 +3397,6 @@ object TrainingDataQueries extends QueryPack {
       CorpusStats.lengthBandFilter(docs, "lang", "n_tokens",
         loQ = 0.1, hiQ = 0.9)
         .select(col("doc_id"), col("lang"), col("n_tokens"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Weighted training mix under per-language token budgets: hash-ordered
@@ -3595,7 +3410,6 @@ object TrainingDataQueries extends QueryPack {
         Map("en" -> 2000L, "de" -> 1000L, "fr" -> 800L),
         tokenCountCol = "n_tokens", keyCol = "doc_id", salt = "m1")
         .select(col("doc_id"), col("lang"), col("n_tokens"))
-        .orderBy(col("doc_id"))
     }),
 
     // Temperature-flattened multilingual mix (alpha = 0.5, token-weighted):
@@ -3609,7 +3423,6 @@ object TrainingDataQueries extends QueryPack {
       Sampling.temperatureMix(docs, "lang", alpha = 0.5, keyCol = "doc_id",
         weightCol = Some("n_tokens"), salt = "tm")
         .select(col("doc_id"), col("lang"), col("n_tokens"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Deterministic global shuffle -> round-robin shard assignment; the
@@ -3620,7 +3433,6 @@ object TrainingDataQueries extends QueryPack {
       Packing.shardAssign(Tables.documents(s, dir), numShards = 4,
         keyCol = "doc_id", salt = "sh")
         .select(col("doc_id"), col("shard"), col("pos_in_shard"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Scalar int8 quantization: per-dimension min-max codes, flattened to
@@ -3629,7 +3441,6 @@ object TrainingDataQueries extends QueryPack {
       import graft.operators.ScalarQuant
       ScalarQuant.quantize(Tables.embeddings(s, dir))
         .select(col("vec_id"), posexplode(col("codes")).as(Seq("pos", "code")))
-        .localCheckpoint(true).orderBy(col("vec_id"), col("pos"))
     }),
 
     // Unicode-script profile over a mixed-script view (the ASCII corpus is
@@ -3645,14 +3456,12 @@ object TrainingDataQueries extends QueryPack {
       val cols = TextAnalysis.scriptColumns(col("__aug"))
         .map { case (n, c) => c.as(n) }
       withAug.select(col("doc_id") +: cols: _*)
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Per-document TF-IDF keywords: top-5 distinguishing terms, micro-nat
     // quantized idf, exact integer scores.
     "tfidf_keywords" -> ((s, dir) => {
       Retrieval.tfidfKeywords(Tables.documents(s, dir), k = 5)
-        .localCheckpoint(true).orderBy(col("doc_id"), col("rank"))
     }),
 
     // Containment near-dup pairs: |A∩B| / min(|A|,|B|) — the subset-pair
@@ -3660,7 +3469,7 @@ object TrainingDataQueries extends QueryPack {
     "dedup_containment" -> ((s, dir) => {
       val out = Dedup.containmentPairs(Tables.documents(s, dir),
         threshold = 0.6, maxShingleDf = Some(1000))
-        .localCheckpoint(true).orderBy(col("doc_a"), col("doc_b"))
+        .localCheckpoint(true)
       Dedup.releaseIntermediateCaches()
       out
     }),
@@ -3673,14 +3482,12 @@ object TrainingDataQueries extends QueryPack {
     "dedup_containment_prefix" -> ((s, dir) => {
       Dedup.containmentPairsPrefix(Tables.documents(s, dir),
         threshold = 0.6)
-        .localCheckpoint(true).orderBy(col("doc_a"), col("doc_b"))
     }),
 
     // Character-entropy quality signal: micro-nat quantized contributions,
     // exact integer per-doc sums.
     "text_entropy" -> ((s, dir) => {
       TextAnalysis.charEntropy(Tables.documents(s, dir))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Mojibake repair over a corpus corrupted with the EXACT bug the table
@@ -3693,7 +3500,6 @@ object TrainingDataQueries extends QueryPack {
         .select(col("doc_id"),
           TextNormalize.fixMojibake(concat(col("text"), lit(corrupted)))
             .as("fixed"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // URL canonicalization + domain extraction over synthesized URLs
@@ -3719,7 +3525,6 @@ object TrainingDataQueries extends QueryPack {
           "url", UrlBlockRules)
         .select(col("doc_id"), col("host"), col("domain"),
           col("category"), col("blocked"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // the BROADCAST-JOIN twin of url_category_filter (round 14): the
@@ -3755,7 +3560,6 @@ object TrainingDataQueries extends QueryPack {
           "doc_id", rules)
         .select(col("doc_id"), col("host"), col("domain"),
           col("category"), col("blocked"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     "url_normalize" -> ((s, dir) => {
@@ -3775,7 +3579,6 @@ object TrainingDataQueries extends QueryPack {
           UrlOps.canonicalize(col("__u")).as("url"),
           UrlOps.host(col("__u")).as("host"),
           UrlOps.registeredDomain(UrlOps.host(col("__u"))).as("domain"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Per-domain boilerplate scrub (RefinedWeb/C4 site-template rule):
@@ -3792,7 +3595,6 @@ object TrainingDataQueries extends QueryPack {
           expr("replace(text, ' table ', '\n')").as("text"))
       TextNormalize.scrubBoilerplate(lined, maxDocShare = 0.04,
         minDomainDocs = 5)
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // CCNet head/middle/tail: per-language perplexity terciles under the
@@ -3801,7 +3603,6 @@ object TrainingDataQueries extends QueryPack {
       import graft.operators.LanguageModel
       val docs = Tables.documents(s, dir)
       LanguageModel.perplexityBuckets(docs, LanguageModel.ngramCounts(docs))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // the KEEP rule those buckets exist for (round 14): CCNet retains
@@ -3812,7 +3613,6 @@ object TrainingDataQueries extends QueryPack {
       val docs = Tables.documents(s, dir)
       LanguageModel.perplexityBuckets(docs, LanguageModel.ngramCounts(docs))
         .filter(col("bucket").isin("head", "middle"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Segmentation → vocabulary ids (the learn → segment → ids → pack
@@ -3831,7 +3631,6 @@ object TrainingDataQueries extends QueryPack {
             p => coalesce(element_at(idMap, p), lit(0)).cast("string")))
             .as("token_ids"),
           size(col("__p")).cast("long").as("n_ids"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // TRAINED quality classifier: 8 full-batch GD steps of logistic
@@ -3843,11 +3642,7 @@ object TrainingDataQueries extends QueryPack {
     // fixture's divergence knee, ≥5 oscillates to all-positive). The
     // oracle re-derives the whole trajectory as unrolled CTE layers from
     // the same constants.
-    "quality_lr" -> ((s, dir) => {
-      // the (features → train → score) chain comes from the fit-once
-      // cache shared with classifier_calibration (qualityScored)
-      qualityScored(s, dir).orderBy(col("doc_id"))
-    }),
+    "quality_lr" -> ((s, dir) => qualityScored(s, dir)),
 
     // Calibration / reliability report (L124) over the SAME trained
     // classifier: per probability CENTILE (the fast sigmoid compresses
@@ -3857,11 +3652,8 @@ object TrainingDataQueries extends QueryPack {
     // units (ECE·10⁶ = Σ n·gap/N over the rows). The oracle re-derives
     // the full GD trajectory and rolls the scored frame up.
     "classifier_calibration" -> ((s, dir) => {
-      // rolls up the SAME cached scored frame quality_lr gates — one GD
-      // trajectory feeds both (the saFit fit-once discipline)
       graft.operators.QualityModel
         .calibrationReport(qualityScored(s, dir), bins = 100)
-        .localCheckpoint(true).orderBy(col("bin"))
     }),
 
     // Proportional-interleave epoch order: per-language reproducible
@@ -3874,7 +3666,6 @@ object TrainingDataQueries extends QueryPack {
       Packing.epochInterleave(
         Tables.documents(s, dir).select(col("doc_id"), col("lang")),
         strataCol = "lang", keyCol = "doc_id", salt = "ep")
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Multi-epoch schedule (L90): per-stratum epoch counts with a
@@ -3886,7 +3677,6 @@ object TrainingDataQueries extends QueryPack {
         Tables.documents(s, dir).select(col("doc_id"), col("lang")),
         strataCol = "lang", epochs = EpochWeights, keyCol = "doc_id",
         salt = "es")
-        .localCheckpoint(true).orderBy(col("doc_id"), col("epoch"))
     }),
 
     // UniMax budget-constrained epoch allocation (L125, Chung et al.
@@ -3904,7 +3694,6 @@ object TrainingDataQueries extends QueryPack {
       val total = docs.agg(sum(col("n_tok"))).head().getLong(0)
       Sampling.epochAllocation(docs, "lang", "n_tok",
           totalBudget = total * 3 / 4, maxEpochs = 1)
-        .orderBy(col("n_tokens"), col("lang"))
     }),
 
     // Snapshot delta between two corpus versions (recrawl step) — old/new
@@ -3918,7 +3707,6 @@ object TrainingDataQueries extends QueryPack {
         .withColumn("text", when(col("doc_id") % 5 === 0,
           concat(col("text"), lit(" v2"))).otherwise(col("text")))
       graft.sources.CorpusIO.snapshotDiff(oldSnap, newSnap)
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Leakage-safe split: the split draw keys on the DOMAIN, so every doc
@@ -3930,7 +3718,6 @@ object TrainingDataQueries extends QueryPack {
         Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
         keyCol = "source", salt = "gs")
         .select(col("doc_id"), col("source"), col("split"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Cluster-aware leakage-safe split (L152): near-dup CLUSTERS (the
@@ -3962,7 +3749,6 @@ object TrainingDataQueries extends QueryPack {
           Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
           keyCol = "cluster", salt = "cs")
         .select(col("doc_id"), col("cluster"), col("split"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // ——— THE COMPOSED CURATION PIPELINE: the chain a real corpus pass
@@ -4110,7 +3896,7 @@ object TrainingDataQueries extends QueryPack {
           coalesce(col("pos_in_shard"), lit(-1L)).as("pos_in_shard"),
           coalesce(col("epoch_rank"), lit(-1L)).as("epoch_rank"),
           coalesce(col("order_key"), lit(-1.0)).as("order_key"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
+        .localCheckpoint(true)
       Dedup.releaseIntermediateCaches()
       out
     }),
@@ -4126,7 +3912,7 @@ object TrainingDataQueries extends QueryPack {
     // with the literal-fold normalize) — this is the crawl-front slice
     // with the broadcast engine in the composition seat.
     "web_pipeline" -> ((s, dir) =>
-      webPipelineFrame(s, dir).orderBy(col("doc_id"))), // frame is cache-checkpointed
+      webPipelineFrame(s, dir)),
 
     // The flagship composition's multimodal seat (VERDICT r15 #5): a
     // real curation run drops near-dup IMAGES alongside the text gates.
@@ -4140,8 +3926,7 @@ object TrainingDataQueries extends QueryPack {
     // verified shapes.
     "web_pipeline_mm" -> ((s, dir) =>
       webPipelineFrame(s, dir)
-        .join(phashKeepIds(s, dir), Seq("doc_id"), "left_semi")
-        .localCheckpoint(true).orderBy(col("doc_id"))),
+        .join(phashKeepIds(s, dir), Seq("doc_id"), "left_semi")),
 
     // SFT example construction (L91): deterministic (prompt, response)
     // split rendered through the chat template with the LOSS-MASK span —
@@ -4150,7 +3935,6 @@ object TrainingDataQueries extends QueryPack {
     "sft_format" -> ((s, dir) => {
       import graft.operators.SftPrep
       SftPrep.formatExamples(Tables.documents(s, dir))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Multi-turn chat formatting (L128): documents quartered into
@@ -4183,7 +3967,6 @@ object TrainingDataQueries extends QueryPack {
           col("tu.role").as("role"),
           concat_ws(" ", col("tu.tt")).as("text"))
       SftPrep.formatConversation(turns)
-        .localCheckpoint(true).orderBy(col("conv_id"), col("turn_idx"))
     }),
 
     // No-straddle greedy packing (L92): first-fit whole-document bins in
@@ -4205,7 +3988,6 @@ object TrainingDataQueries extends QueryPack {
           .cast("long").as("len"))
       SftPrep.packGreedy(lens, "len", seqLen = 64, keyCol = "doc_id",
         numBuckets = 4, maxLocalExamples = 0)
-        .localCheckpoint(true).orderBy(col("bucket"), col("pack_idx"))
     }),
 
     // Preference-pair mining (L93): per source stratum, rank-i best by
@@ -4228,7 +4010,6 @@ object TrainingDataQueries extends QueryPack {
         docs.select(col("doc_id"), col("source"), score.as("score")),
         strataCol = "source", scoreCol = "score", idCol = "doc_id",
         k = 20, minMargin = 0.3, subPartitions = 4)
-        .localCheckpoint(true).orderBy(col("stratum"), col("pair_rank"))
     }),
 
     // Rejection sampling / best-of-n selection (L100): candidates group
@@ -4249,7 +4030,6 @@ object TrainingDataQueries extends QueryPack {
       SftPrep.rejectionSample(cands, promptCol = "prompt_id",
           scoreCol = "reward", idCol = "doc_id", k = 3, minScore = 0.5,
           subPartitions = 4)
-        .localCheckpoint(true).orderBy(col("prompt_id"), col("sample_rank"))
     }),
 
     // DEFLATE compression-ratio quality signal (L107): templated/looping
@@ -4265,7 +4045,6 @@ object TrainingDataQueries extends QueryPack {
           sigs.filter(col("lang") === "en"),
           sigs.filter(col("lang") =!= "en"),
           signalCols = Seq("ntok", "n_chars"), numBuckets = 5)
-        .localCheckpoint(true).orderBy(col("signal"))
     }),
 
     // Semantic context groups (L104, the in-context-pretraining
@@ -4281,7 +4060,6 @@ object TrainingDataQueries extends QueryPack {
         .select(col("vec_id"), col("cell"))
       Packing.contextGroups(assigned, strataCol = "cell",
           keyCol = "vec_id", groupSize = 16, salt = "icp")
-        .localCheckpoint(true).orderBy(col("vec_id"))
     }),
 
     // Composed host reputation report (L108): PageRank centrality ×
@@ -4305,7 +4083,6 @@ object TrainingDataQueries extends QueryPack {
         .select(col("node"), col("label"), col("is_seed"), col("rank_int"),
           coalesce(col("n_docs"), lit(0L)).as("n_docs"),
           coalesce(col("total_tokens"), lit(0L)).as("total_tokens"))
-        .localCheckpoint(true).orderBy(col("node"))
     }),
 
     // Rule-based curation with an audit trail (L102): every document
@@ -4317,7 +4094,6 @@ object TrainingDataQueries extends QueryPack {
       Curation.filterWithProvenance(curationSignals(s, dir), curationRules)
         .select(col("doc_id"), col("keep"), col("n_fails"),
           col("fail_reasons"), col("first_fail"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Filter ablation report (L103): per rule its total kills, UNIQUE
@@ -4327,7 +4103,6 @@ object TrainingDataQueries extends QueryPack {
     "filter_ablation" -> ((s, dir) => {
       import graft.operators.Curation
       Curation.filterAblation(curationSignals(s, dir), curationRules)
-        .localCheckpoint(true).orderBy(col("rule_idx"))
     }),
 
     // Curriculum training order (L101): 4 equal-population difficulty
@@ -4342,7 +4117,6 @@ object TrainingDataQueries extends QueryPack {
           .cast("double").as("score"))
       Packing.curriculumOrder(docs, scoreCol = "score", keyCol = "doc_id",
           numBands = 4, salt = "cur")
-        .localCheckpoint(true).orderBy(col("doc_id"))
     }),
 
     // Exact histogram quantiles (L95): per-language token-count
@@ -4355,7 +4129,6 @@ object TrainingDataQueries extends QueryPack {
         size(graft.functions.WordShingles.allShingles(col("text"), 1))
           .cast("long").as("len"))
       CorpusStats.histogramQuantiles(lens, "lang", "len")
-        .localCheckpoint(true).orderBy(col("lang"))
     }),
 
     // Dataset-card rollup (L96): doc/token counts over every grouping
@@ -4367,8 +4140,6 @@ object TrainingDataQueries extends QueryPack {
         size(graft.functions.WordShingles.allShingles(col("text"), 1))
           .cast("long").as("len"))
       CorpusStats.rollupReport(lens, "lang", "source", "len")
-        .localCheckpoint(true)
-        .orderBy(col("gid"), col("lang"), col("source"))
     }),
 
     // Shard reproducibility manifest (L97): per shard the member count,
@@ -4384,7 +4155,6 @@ object TrainingDataQueries extends QueryPack {
         Packing.shardAssign(lens, numShards = 4, keyCol = "doc_id",
           salt = "mani"),
         idCol = "doc_id", tokenCountCol = "len")
-        .localCheckpoint(true).orderBy(col("shard"))
     }),
 
     // Host-graph PageRank quality signal (L98): a deterministic
@@ -4402,7 +4172,6 @@ object TrainingDataQueries extends QueryPack {
       import graft.operators.LinkGraph
       LinkGraph.pageRank(hostEdges(s, dir), iterations = PrIterations)
         .select(col("node"), col("rank_int"))
-        .localCheckpoint(true).orderBy(col("node"))
     }),
 
     // Seeded label propagation (L99): a curated 4-host labeling spreads
@@ -4413,7 +4182,6 @@ object TrainingDataQueries extends QueryPack {
       import graft.operators.LinkGraph
       LinkGraph.labelPropagate(hostEdges(s, dir), hostSeeds(s, dir),
           iterations = LpIterations)
-        .localCheckpoint(true).orderBy(col("node"))
     }),
 
     // ——— THE COMPOSED SFT PIPELINE (L94): quality gate → example
@@ -4430,7 +4198,6 @@ object TrainingDataQueries extends QueryPack {
           col("mask_end"))
       SftPrep.packGreedy(ex, "n_tokens", seqLen = 96, keyCol = "doc_id",
         numBuckets = 4)
-        .localCheckpoint(true).orderBy(col("bucket"), col("pack_idx"))
     })
   )
 
@@ -4755,7 +4522,6 @@ object TrainingDataQueries extends QueryPack {
       Tables.documents(s, dir).select(col("doc_id"),
         graft.functions.CompressRatio.ratio(col("text"))
           .as("compress_ratio"))
-        .localCheckpoint(true).orderBy(col("doc_id"))
     })
   )
 

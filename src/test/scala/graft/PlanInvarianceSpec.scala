@@ -28,9 +28,12 @@ class PlanInvarianceSpec extends AnyFunSuite {
   private final case class Shape(hashExchanges: Int, broadcasts: Int,
                                  joins: Map[String, Int])
 
-  /** All SQL executions (checkpoints, guard jobs, the final dump plan)
+  /** All SQL executions (checkpoints, guard jobs, the gate's own plan)
     * launched while constructing + forcing the named gate at `dir`,
-    * summarized as plan-shape counts. */
+    * summarized as plan-shape counts. The gate is forced through a `noop`
+    * write, which runs as an SQL execution carrying its whole plan
+    * (`toRdd.count()` starts none); the spec checks that this write is the
+    * last execution captured. */
   private def capture(name: String, dir: String): Seq[Shape] = {
     val infos = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]
     val listener = new SparkListener {
@@ -46,7 +49,7 @@ class PlanInvarianceSpec extends AnyFunSuite {
       // through the specOnlyQueries side map
       SparkEntry.queries
         .getOrElse(name, graft.queries.TrainingDataQueries.specOnlyQueries(name))
-        .apply(spark, dir).queryExecution.toRdd.count()
+        .apply(spark, dir).write.format("noop").mode("overwrite").save()
       GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     spark.catalog.clearCache()
@@ -54,7 +57,11 @@ class PlanInvarianceSpec extends AnyFunSuite {
       f(i); i.children.foreach(walk(_)(f))
     }
     import scala.jdk.CollectionConverters._
-    infos.asScala.toSeq.map { root =>
+    val roots = infos.asScala.toSeq
+    assert(roots.lastOption.exists(_.nodeName == "OverwriteByExpression"),
+      s"$name: the last execution is not the gate's own write: " +
+        roots.lastOption.map(_.nodeName))
+    roots.map { root =>
       var hash = 0; var bcast = 0
       val joins = scala.collection.mutable.Map.empty[String, Int]
       walk(root) { n =>
@@ -590,7 +597,7 @@ class PlanInvarianceSpec extends AnyFunSuite {
   }
 
   // L158: pure per-row hash projections over the materialized pixel
-  // table — no exchange beyond the checkpoint + dump sort
+  // table — the gate's own plan adds no exchange to the pixel checkpoints
   test("phash plan shape is identical at sf0.001 and sf0.1") {
     assertScaleInvariant("phash")
   }
