@@ -15,10 +15,7 @@ trait ColumnResolver {
     * distinguishes a *missing* key (→ not applicable) from an empty value
     * (→ 0 in `calc`, fail in `between`) — variable.py:296-313. */
   def exists(name: String): Column
-  /** The field parsed through the permissive date ladder. Default inlines
-    * the ladder; resolvers backed by a pre-projection override it so the
-    * ~10-format ladder is generated (and evaluated) ONCE per column instead
-    * of once per referencing code. */
+  /** The field parsed through the permissive date ladder. */
   def dateParsed(name: String): Column = VariableCompiler.parseDate(get(name))
 }
 
@@ -34,21 +31,4 @@ final class FlatResolver(schema: Set[String]) extends ColumnResolver {
   override def get(name: String): Column =
     if (schema(name)) col(name).cast("string") else lit(null).cast("string")
   override def exists(name: String): Column = lit(schema(name))
-}
-
-/** Form fields pre-projected into bound attribute columns (`name → attr`).
-  * ToCodes projects every distinct referenced column ONCE per row and
-  * compiles the catalog against the attributes — interpreted evaluation of a
-  * 200-code catalog otherwise repeats the map lookups per code per output.
-  * @param dateAttrs columns whose date-parse is ALSO pre-projected
-  *        (`name → attr holding parseDate(col)`) */
-final class BoundResolver(attrs: Map[String, String],
-                          dateAttrs: Map[String, String] = Map.empty)
-    extends ColumnResolver {
-  override def get(name: String): Column =
-    attrs.get(name).map(col).getOrElse(lit(null).cast("string"))
-  override def exists(name: String): Column =
-    attrs.get(name).map(a => col(a).isNotNull).getOrElse(lit(false))
-  override def dateParsed(name: String): Column =
-    dateAttrs.get(name).map(col).getOrElse(super.dateParsed(name))
 }

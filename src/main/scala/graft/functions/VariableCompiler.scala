@@ -111,6 +111,9 @@ object VariableCompiler {
       .otherwise(raw.cast("double"))
   }
 
+  /** A parsed date as the value method's ISO string (variable.py:233-249). */
+  def isoDate(parsed: Column): Column = date_format(parsed, "yyyy-MM-dd'T'HH:mm:ss")
+
   /** Compiled outcome of one code against one row shape. */
   final case class Compiled(applicable: Column, value: Column)
 
@@ -225,7 +228,7 @@ object VariableCompiler {
       val parsed = r.dateParsed(column)
       Compiled(
         coalesce(r.exists(column) && truthy(v) && parsed.isNotNull, lit(false)),
-        date_format(parsed, "yyyy-MM-dd'T'HH:mm:ss"))
+        isoDate(parsed))
     } else {
       Compiled(coalesce(r.exists(column) && truthy(v), lit(false)), v)
     }

@@ -44,10 +44,9 @@ object DataPipeline {
       calculationParameters: CalculationParameters.Params = Map.empty,
       /** false drops the raw form map from the data rows after coding —
         * the reference's `data` table carries no raw form payload either
-        * (model.py:97-128) — which lets the catalog-scale ToCodes barrier
-        * prune its input to the columns the catalog references. Default
-        * true for callers (and specs) that read raw fields back off the
-        * pipeline output. */
+        * (model.py:97-128) — so the scan reads only the fields the steps
+        * reference. Default true for callers (and specs) that read raw
+        * fields back off the pipeline output. */
       retainRawData: Boolean = true)
 
   /** The outputs of one [[process]] call, both filters over the same
@@ -60,20 +59,28 @@ object DataPipeline {
     * and frees its blocks. Do not run actions on either output after
     * `release`: they would refill the cache outside the session's cache
     * registry. Each `process` call persists its own frame: Spark's cache
-    * matches frames by plan, so the frame carries a per-call
-    * `__evaluation` number, and a later `process` over the same inputs
-    * evaluates afresh instead of reading an unreleased `Result`'s rows. An
-    * unreleased `Result` keeps its blocks until the session ends. */
+    * matches frames by analyzed plan, so each frame is [[numbered]], and a
+    * later `process` over the same inputs evaluates afresh instead of
+    * reading an unreleased `Result`'s rows. An unreleased `Result` keeps
+    * its blocks until the session ends. */
   final class Result private[DataPipeline] (shared: DataFrame) {
-    val data: DataFrame =
-      shared.filter(!col("disregard")).drop("disregard", "__evaluation")
-    val disregarded: DataFrame =
-      shared.filter(col("disregard")).drop("disregard", "__evaluation")
+    val data: DataFrame = shared.filter(!col("disregard")).drop("disregard")
+    val disregarded: DataFrame = shared.filter(col("disregard")).drop("disregard")
     def release(): Unit = shared.unpersist()
   }
 
   /** Numbers the `process` calls; see [[Result]]. */
   private val evaluations = new java.util.concurrent.atomic.AtomicLong
+
+  /** `df` carrying a fresh call number in its analyzed plan only: an
+    * always-true filter on that number, which constant folding removes
+    * before planning. The cache tells two calls apart, and the generated
+    * code of every call is the same, so a later call over the same forms
+    * (a streaming micro-batch) reuses the compiled classes. */
+  private def numbered(df: DataFrame): DataFrame = {
+    val n = lit(evaluations.incrementAndGet())
+    df.filter(n === n)
+  }
 
   /** Run the pipeline over raw form DataFrames `(uuid, data)`. */
   def process(spark: SparkSession, forms: Map[String, DataFrame],
@@ -110,8 +117,7 @@ object DataPipeline {
         buildDataRows(spark, withLinks, t, cfg)
       }
     }
-    new Result(perType.reduce(_.unionByName(_))
-      .withColumn("__evaluation", lit(evaluations.incrementAndGet()))
+    new Result(numbered(perType.reduce(_.unionByName(_)))
       .persist(StorageLevel.MEMORY_AND_DISK))
   }
 
@@ -217,28 +223,21 @@ object DataPipeline {
       if (cfg.calculationParameters.isEmpty) baseResolver
       else new ParameterResolver(baseResolver, cfg.calculationParameters)
 
-    // event date + epi columns (process_steps/to_codes.py:138-152) — built
-    // BEFORE coding (they don't depend on codes) so a retain-pruned ToCodes
-    // barrier can drop the raw map from everything downstream
-    val eventDate = VariableCompiler.parseDate(r.get(t.dateColumn))
+    // event date + epi columns (process_steps/to_codes.py:138-152): the
+    // event date is parsed once, and one projection derives the columns
+    val withEvent = withLoc.select(col("*"),
+      VariableCompiler.parseDate(r.get(t.dateColumn)).as("__event_date"))
+    val eventDate = col("__event_date")
     val yw = EpiWeek.epiYearWeek(eventDate, cfg.policy)
-    val withDates = withLoc
-      .withColumn("date", date_trunc("DAY", eventDate))
-      .withColumn("epi_year", yw.getField("epi_year"))
-      .withColumn("epi_week", yw.getField("epi_week"))
-      .withColumn("submission_date",
-        VariableCompiler.parseDate(r.get("SubmissionDate")))
-      .withColumn("device_id", r.get("deviceid"))
-    // __lc_* pre-agg columns must NOT be in the retain list: ToCodes owns
-    // them (adds them to its barrier input itself, then drops them), so
-    // retaining them would select columns that no longer exist
-    val retain =
-      if (cfg.retainRawData) None
-      else Some(withDates.columns
-        .filterNot(c => c == "data" || c.startsWith("__lc_")).toSeq)
-    ToCodes(withDates, typeCodes, resolver,
+    val withDates = withEvent.select(withLoc.columns.toSeq.map(n => col(s"`$n`")) ++ Seq(
+      date_trunc("DAY", eventDate).as("date"),
+      yw.getField("epi_year").as("epi_year"),
+      yw.getField("epi_week").as("epi_week"),
+      VariableCompiler.parseDate(r.get("SubmissionDate")).as("submission_date"),
+      r.get("deviceid").as("device_id")): _*)
+    val coded = ToCodes(withDates, typeCodes, resolver,
       cfg.policy, cfg.alertData, linkNameForForm,
-      staticEntries = Seq(t.varName -> "1", "data_entry" -> "1"),
-      retain = retain)
+      staticEntries = Seq(t.varName -> "1", "data_entry" -> "1"))
+    if (cfg.retainRawData) coded else coded.drop("data")
   }
 }

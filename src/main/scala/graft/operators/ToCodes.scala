@@ -1,44 +1,35 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 import graft.config.CodeDef
-import graft.functions.{ColumnResolver, VariableCompiler, EpiWeek}
+import graft.functions.{CatalogProgram, ColumnResolver, EvalCatalog, VariableCompiler, EpiWeek}
+import graft.functions.CatalogProgram.Leaf
 import graft.functions.EpiWeek.YearStartPolicy
 
-/** The core rule-engine projection (reference codes/to_codes.py:78-310 +
+/** The core rule-engine step (reference codes/to_codes.py:78-310 +
   * process_steps/to_codes.py:32-152): evaluate the whole code catalog against
   * each record and emit the `variables` / `categories` maps, alert tagging and
-  * the disregard flag — as ONE wide `select` over compiled `when()` chains.
+  * the disregard flag.
   *
-  * Scale notes — this is the pipeline's CPU hot path, so it is built to stay
-  * inside whole-stage codegen:
+  * The catalog compiles once, at plan time, into a [[CatalogProgram]] and runs
+  * as ONE native [[EvalCatalog]] expression per call — a loop over the
+  * compiled catalog per record, like the reference. Catalyst computes only
+  * the program's typed leaves, once per distinct input column (raw value,
+  * `cast(double)`, the parsed date's ISO string and `Variable.to_date`
+  * seconds, and the multiple_link outcomes). The plan and the generated code
+  * therefore grow with the columns the catalog reads, not with its codes: no
+  * per-code `CaseWhen` folds, no 64 KB method limit to slice around, and
+  * Catalyst prunes the read schema down to the referenced columns.
   *
-  *  - NO higher-order functions anywhere on the main-form path. Spark's
-  *    lambda HOFs (`transform`/`filter`/`exists`/`aggregate`) have no
-  *    `doGenCode`, so ONE of them in a projection forces the whole stage
-  *    interpreted (~100 µs/row on the 198-code demo catalog — measured).
-  *    Everything here is CaseWhen / least / concat — all codegen'd. (Codes
-  *    over *linked* forms do use HOFs — a link array is genuinely dynamic —
-  *    so only catalogs with link codes pay any interpreted cost.)
-  *  - No shared intermediate structs: SimplifyExtractValueOps tears
-  *    GetStructField-over-CaseWhen into per-field copies, so apparent plan
-  *    sharing is illusory. Instead each output is its own first-match fold
-  *    and the generated projection's subexpression elimination runs each
-  *    member predicate once per row; its method splitter keeps every
-  *    generated method under the JVM 64 KB limit at any catalog size.
-  *  - Everything is a narrow projection — no shuffle, no UDF; Catalyst
-  *    prunes the read schema down to the columns the catalog references.
-  *
-  * Semantics preserved:
+  * Semantics (see [[EvalCatalog]]):
   *  - calculation_group mutual exclusion: first applicable code in the group
-  *    wins, the rest are skipped (to_codes.py:305-306) → CaseWhen chain.
+  *    wins, the rest are skipped (to_codes.py:305-306).
   *  - calculation_priority: within a group where any member declares a
   *    priority, the loop does NOT break — every applicable member still
   *    contributes categories/alert/disregard; only the variables-map key is
   *    priority-gated: numerically LOWEST priority wins, ties keep the earlier
-  *    catalog entry (to_codes.py:260-282's overwrite loop ≡ least over
-  *    (priority, index)).
+  *    catalog entry (to_codes.py:260-282's overwrite loop).
   *  - categories: each hit writes category → its id; later groups
   *    overwrite on key collision (dict.update ≡ LAST_WIN map dedup).
   *  - alert: a firing code with alert & alert_type=="individual" injects
@@ -50,30 +41,19 @@ import graft.functions.EpiWeek.YearStartPolicy
   */
 object ToCodes {
 
-  private val entriesType = "array<struct<key:string,value:string>>"
-  private def emptyEntries = array().cast(entriesType)
-  private def nullString = lit(null).cast("string")
+  private def emptyMapCol =
+    map_from_entries(array().cast("array<struct<key:string,value:string>>"))
 
   /** `__lc_<id>` as a Column, backtick-quoted so code ids containing dots
     * resolve as a name, not a field access. */
   private def aggCol(codeId: String): Column =
     col(s"`${AddLinks.aggColName(codeId)}`")
 
-  /** Drop by QUOTED Column, not by raw name: `df.drop(name)` parses a
-    * dotted name as a nested-field access, fails to resolve, and silently
-    * no-ops — a code id containing a dot would leak its `__lc_` column into
-    * the pipeline output. The Column overload resolves the backtick-quoted
-    * top-level attribute; names that are absent still no-op harmlessly. */
-  private def dropQuoted(df: DataFrame, names: Seq[String]): DataFrame =
-    names.map(n => col(s"`$n`")) match {
-      case Seq() => df
-      case cs    => df.drop(cs.head, cs.tail: _*)
-    }
-
-  /** Outcome of one code, honoring multiple_link aggregation over linked
-    * rows (codes/to_codes.py:217-242): a code whose form is a *linked* form
+  /** Outcome of a multiple_link code over linked rows
+    * (codes/to_codes.py:217-242): a code whose form is a *linked* form
     * evaluates against the linked matches with method last / first / count /
-    * any / all instead of the main record.
+    * any / all instead of the main record. The program reads these as supplied
+    * (applicable, value) leaves.
     *
     * When AddLinks pre-aggregated the code's outcome into a `__lc_<id>`
     * column (`preAgg` — the hot pipeline path), that plain codegen'd column
@@ -83,267 +63,61 @@ object ToCodes {
     * direct callers that attach link arrays without AddLinks; of those only
     * any/all use lambda HOFs (CodegenFallback, interpreted), which the
     * pipeline therefore never runs. */
-  private def compiledFor(code: CodeDef, r: ColumnResolver,
-                          policy: YearStartPolicy,
-                          linkNameForForm: Map[String, String],
-                          preAgg: Set[String]): VariableCompiler.Compiled = {
-    linkNameForForm.get(code.form) match {
-      case None => VariableCompiler.compile(code, r, policy)
-      case Some(linkName) if preAgg(code.id) =>
-        val c = aggCol(code.id)
-        code.multipleLink.getOrElse("last") match {
-          case "first" | "last" =>
-            VariableCompiler.Compiled(
-              c.isNotNull && c.getField("a"), c.getField("v"))
-          case "count" =>
-            VariableCompiler.Compiled(c.isNotNull, c.cast("string"))
-          case "any" | "all" =>
-            VariableCompiler.Compiled(coalesce(c, lit(false)), lit("1"))
-          case other =>
-            throw new IllegalArgumentException(s"bad multiple_link $other")
-        }
-      case Some(linkName) =>
-        val arr = element_at(col("links"), linkName)
-        def over(elem: Column) =
-          VariableCompiler.compile(code, new graft.functions.MapResolver(elem), policy)
-        val present = arr.isNotNull && size(arr) > 0
-        code.multipleLink.getOrElse("last") match {
-          case "last"  =>
-            val c = over(element_at(arr, -1))
-            VariableCompiler.Compiled(present && c.applicable, c.value)
-          case "first" =>
-            val c = over(element_at(arr, 1))
-            VariableCompiler.Compiled(present && c.applicable, c.value)
-          case "count" =>
-            VariableCompiler.Compiled(present, size(arr).cast("string"))
-          case "any"   =>
-            VariableCompiler.Compiled(
-              present && exists(arr, m => over(m).applicable), lit("1"))
-          case "all"   =>
-            VariableCompiler.Compiled(
-              present && forall(arr, m => over(m).applicable), lit("1"))
-          case other =>
-            throw new IllegalArgumentException(s"bad multiple_link $other")
-        }
-    }
-  }
-
-  /** Static partial outputs of one slice of the catalog. All five columns
-    * compose with plain concat / OR / coalesce, so chunks and groups fold
-    * identically. */
-  private final case class Partials(
-      entries: Column,     // variables-map entries array (winners only)
-      catEntries: Column,  // categories entries array (every hit)
-      anyAlert: Column,    // did any firing member carry an individual alert
-      alertReason: Column, // id of the LAST firing alert member, else null
-      anyDisregard: Column)
-
-  private def concatAll(parts: Seq[Column]): Column = parts match {
-    case Seq()  => emptyEntries
-    case Seq(c) => c
-    case many   => concat(many: _*)
-  }
-
-  private def orAll(parts: Seq[Column]): Column =
-    parts.reduceOption(_ || _).getOrElse(lit(false))
-
-  private def lastReason(parts: Seq[Column]): Column = parts match {
-    case Seq()  => nullString
-    case Seq(c) => c
-    case many   => coalesce(many.reverse: _*)
-  }
-
-  /** (category → id) literal entries for one code. */
-  private def catsLit(code: CodeDef): Column =
-    array(code.category.map(c =>
-      struct(lit(c).as("key"), lit(code.id).as("value"))): _*)
-
-  /** Fold group partials into chunk partials; groups that contribute nothing
-    * to a fold (null markers) are pruned statically. */
-  private def foldPartials(parts: Seq[Partials]): Partials = Partials(
-    entries = concatAll(parts.map(_.entries)),
-    catEntries = concatAll(parts.filter(_.catEntries != null).map(_.catEntries)),
-    anyAlert = orAll(parts.filter(_.anyAlert != null).map(_.anyAlert)),
-    alertReason = lastReason(parts.filter(_.alertReason != null).map(_.alertReason)),
-    anyDisregard = orAll(parts.filter(_.anyDisregard != null).map(_.anyDisregard)))
-
-  /** Partials of one mutual-exclusion group — five independent expressions,
-    * no shared intermediate structs: GetStructField-over-CaseWhen gets torn
-    * apart by SimplifyExtractValueOps into per-field copies anyway, so
-    * sharing at the plan level is illusory. The member predicates appear in
-    * several folds; runtime subexpression elimination in the generated
-    * projection evaluates each once per row.
-    *
-    * Static pruning: groups without categories / alerts / disregard codes
-    * contribute no expression at all to those folds (`null` markers), which
-    * keeps the generated code proportional to what the catalog actually
-    * uses. */
-  private def groupPartials(group: Seq[(CodeDef, Int)], r: ColumnResolver,
-                            policy: YearStartPolicy,
-                            linkNameForForm: Map[String, String],
-                            preAgg: Set[String] = Set.empty): Partials = {
-    val members = group.map { case (code, idx) =>
-      (code, idx, compiledFor(code, r, policy, linkNameForForm, preAgg))
-    }
-    val hasPriority = group.exists(_._1.calculationPriority.isDefined)
-    val hasCats = members.exists(_._1.category.nonEmpty)
-    def isAlert(c: CodeDef) = c.alert && c.alertType == "individual"
-    val hasAlert = members.exists(m => isAlert(m._1))
-    val hasDis = members.exists(_._1.disregard)
-
-    if (!hasPriority) {
-      // first applicable wins and the loop breaks (to_codes.py:305-306) —
-      // every output is a first-match CaseWhen over the member predicates
-      def firstMatch(f: ((CodeDef, Int, VariableCompiler.Compiled)) => Column) =
-        members.tail.foldLeft(
-          when(members.head._3.applicable, f(members.head))) {
-          case (acc, m) => acc.when(m._3.applicable, f(m))
-        }
-      Partials(
-        entries = coalesce(firstMatch(m =>
-          array(struct(lit(m._1.id).as("key"),
-            m._3.value.cast("string").as("value")))), emptyEntries),
-        catEntries = if (!hasCats) null
-          else coalesce(firstMatch(m =>
-            if (m._1.category.isEmpty) emptyEntries else catsLit(m._1)),
-            emptyEntries),
-        anyAlert = if (!hasAlert) null
-          else coalesce(firstMatch(m => lit(isAlert(m._1))), lit(false)),
-        alertReason = if (!hasAlert) null
-          else firstMatch(m =>
-            if (isAlert(m._1)) lit(m._1.id) else nullString),
-        anyDisregard = if (!hasDis) null
-          else coalesce(firstMatch(m => lit(m._1.disregard)), lit(false)))
+  private def linkOutcome(code: CodeDef, linkName: String, preAgg: Boolean,
+                          policy: YearStartPolicy): VariableCompiler.Compiled =
+    if (preAgg) {
+      val c = aggCol(code.id)
+      code.multipleLink.getOrElse("last") match {
+        case "first" | "last" =>
+          VariableCompiler.Compiled(c.isNotNull && c.getField("a"), c.getField("v"))
+        case "count" =>
+          VariableCompiler.Compiled(c.isNotNull, c.cast("string"))
+        case "any" | "all" =>
+          VariableCompiler.Compiled(coalesce(c, lit(false)), lit("1"))
+        case other =>
+          throw new IllegalArgumentException(s"bad multiple_link $other")
+      }
     } else {
-      // priority group (to_codes.py:260-309): the loop does NOT break —
-      // every applicable member contributes categories/alert/disregard; only
-      // the variables entry is priority-gated. least() skips nulls, so the
-      // applicable member with the smallest (priority, idx) wins. (Least
-      // requires > 1 children — a singleton priority group is just its own
-      // conditional struct.)
-      val candidates = members.map { case (code, idx, c) =>
-        when(c.applicable, struct(
-          lit(code.calculationPriority.getOrElse(Int.MaxValue)).as("p"),
-          lit(idx).as("idx")))
+      val arr = element_at(col("links"), linkName)
+      def over(elem: Column) =
+        VariableCompiler.compile(code, new graft.functions.MapResolver(elem), policy)
+      val present = arr.isNotNull && size(arr) > 0
+      code.multipleLink.getOrElse("last") match {
+        case "last"  =>
+          val c = over(element_at(arr, -1))
+          VariableCompiler.Compiled(present && c.applicable, c.value)
+        case "first" =>
+          val c = over(element_at(arr, 1))
+          VariableCompiler.Compiled(present && c.applicable, c.value)
+        case "count" =>
+          VariableCompiler.Compiled(present, size(arr).cast("string"))
+        case "any"   =>
+          VariableCompiler.Compiled(
+            present && exists(arr, m => over(m).applicable), lit("1"))
+        case "all"   =>
+          VariableCompiler.Compiled(
+            present && forall(arr, m => over(m).applicable), lit("1"))
+        case other =>
+          throw new IllegalArgumentException(s"bad multiple_link $other")
       }
-      val wmin =
-        if (candidates.length == 1) candidates.head else least(candidates: _*)
-      val widx = wmin.getField("idx")
-      def byWinner(f: ((CodeDef, Int, VariableCompiler.Compiled)) => Column) =
-        members.tail.foldLeft(
-          when(widx === members.head._2, f(members.head))) {
-          case (acc, m) => acc.when(widx === m._2, f(m))
-        }
-      Partials(
-        entries = coalesce(
-          byWinner(m => array(struct(lit(m._1.id).as("key"),
-            m._3.value.cast("string").as("value")))),
-          emptyEntries),
-        catEntries = if (!hasCats) null
-          else concatAll(members.filter(_._1.category.nonEmpty).map {
-            case (code, _, c) =>
-              when(c.applicable, catsLit(code)).otherwise(emptyEntries)
-          }),
-        anyAlert = if (!hasAlert) null
-          else orAll(members.filter(m => isAlert(m._1))
-            .map(m => coalesce(m._3.applicable, lit(false)))),
-        alertReason = if (!hasAlert) null
-          else lastReason(members.filter(m => isAlert(m._1))
-            .map(m => when(m._3.applicable, lit(m._1.id)))),
-        anyDisregard = if (!hasDis) null
-          else orAll(members.filter(_._1.disregard)
-            .map(m => coalesce(m._3.applicable, lit(false)))))
     }
-  }
-
-  /** Catalog order preserving group-by calculation_group (to_codes.py:33-36:
-    * ungrouped codes form singleton groups). */
-  private def groupedCatalog(codes: Seq[CodeDef]): Seq[Seq[(CodeDef, Int)]] = {
-    val grouped = scala.collection.mutable.LinkedHashMap.empty[String, Vector[(CodeDef, Int)]]
-    codes.zipWithIndex.foreach { case (c, i) =>
-      val g = c.calculationGroup.getOrElse(s"__singleton_${c.id}")
-      grouped(g) = grouped.getOrElse(g, Vector.empty) :+ ((c, i))
-    }
-    grouped.values.map(_.toSeq).toSeq
-  }
-
-  private def emptyMapCol =
-    map_from_entries(array().cast(entriesType))
-
-  /** Compiled output columns for a code catalog against one row shape. */
-  final case class Outputs(variables: Column, categories: Column, disregard: Column)
-
-  /** Assemble the final outputs from the catalog-wide partials. */
-  private def assemble(p: Partials, r: ColumnResolver,
-                       alertData: Map[String, String],
-                       staticEntries: Seq[(String, String)]): Outputs = {
-    val baseEntries =
-      if (staticEntries.isEmpty) p.entries
-      else concat(p.entries, array(staticEntries.map { case (k, v) =>
-        struct(lit(k).as("key"), lit(v).as("value")) }: _*))
-    val alertEntries: Seq[Column] =
-      Seq(
-        struct(lit("alert").as("key"), lit("1").as("value")),
-        struct(lit("alert_type").as("key"), lit("individual").as("value")),
-        struct(lit("alert_reason").as("key"), p.alertReason.as("value"))) ++
-      alertData.toSeq.map { case (name, column) =>
-        struct(lit(s"alert_$name").as("key"), r.get(column).as("value"))
-      }
-    // the alert block is its own conditional ARRAY concatenated once —
-    // `when(anyAlert, concat(base, alerts)).otherwise(base)` would emit the
-    // whole catalog-wide base expression twice in generated code
-    val allEntries = concat(baseEntries,
-      when(p.anyAlert, array(alertEntries: _*)).otherwise(emptyEntries))
-    // map_from_entries + LAST_WIN dedup ≡ dict insert order semantics
-    val variables = map_from_entries(allEntries)
-
-    val categories = when(size(p.catEntries) > 0, map_from_entries(p.catEntries))
-      .otherwise(emptyMapCol)
-
-    val disregard = p.anyDisregard && p.anyAlert
-    Outputs(variables, categories, disregard)
-  }
-
-  /** Output expressions for a catalog — used directly by specs and small
-    * callers; `apply` wires them onto a DataFrame with the referenced
-    * columns pre-projected. */
-  def outputs(codes: Seq[CodeDef], r: ColumnResolver,
-              policy: YearStartPolicy = EpiWeek.International,
-              alertData: Map[String, String] = Map.empty,
-              linkNameForForm: Map[String, String] = Map.empty): Outputs = {
-    if (codes.isEmpty)
-      return Outputs(emptyMapCol, emptyMapCol, lit(false))
-    val p = foldPartials(groupedCatalog(codes).map(g =>
-      groupPartials(g, r, policy, linkNameForForm)))
-    assemble(p, r, alertData, Nil)
-  }
 
   /** Append variables/categories/disregard columns to `df`.
     *
-    * Evaluation shape for catalog-scale performance: every distinct
-    * referenced form column is projected ONCE into a bound attribute (a
-    * 200-code catalog references ~40 distinct columns — without this each
-    * code repeats its own map lookups), then the three outputs are single
-    * HOF-free expressions. The generated (non-whole-stage) projection
-    * splits the evaluator into per-subtree methods and runs common
-    * subexpressions once, so the catalog stays compiled at any size.
+    * Shape: one projection pre-parses each column the catalog reads as a
+    * date (the ~10-format ladder once per column, not once per leaf), then
+    * one projection evaluates the [[EvalCatalog]] struct over the leaves and
+    * unpacks it; `__lc_<id>` pre-aggregates consumed here are dropped.
+    * A field's presence is its raw value being non-null, and an empty column
+    * name reads as absent.
     *
-    * @param retain at catalog scale (fenced path) the codegen fence is an
-    *        opaque logical node, which blocks Catalyst's column pruning:
-    *        without help, the fenced frame carries EVERY column of `df`
-    *        even when the caller consumes two. Passing the columns the
-    *        caller needs downstream prunes the fenced frame to retain ∪
-    *        catalog inputs, so the scan reads only referenced columns.
-    *        None (default) keeps every column — correct for pipeline
-    *        callers whose later steps read the raw row. No effect below
-    *        the fence threshold, where Catalyst prunes through the plain
-    *        projection on its own. */
+    * @param staticEntries entries every row's `variables` carries after the
+    *        code entries (the per-type counters) */
   def apply(df: DataFrame, codes: Seq[CodeDef], r: ColumnResolver,
             policy: YearStartPolicy = EpiWeek.International,
             alertData: Map[String, String] = Map.empty,
             linkNameForForm: Map[String, String] = Map.empty,
-            staticEntries: Seq[(String, String)] = Nil,
-            retain: Option[Seq[String]] = None): DataFrame = {
+            staticEntries: Seq[(String, String)] = Nil): DataFrame = {
     if (codes.isEmpty) {
       val vars =
         if (staticEntries.isEmpty) emptyMapCol
@@ -352,148 +126,51 @@ object ToCodes {
         .withColumn("categories", emptyMapCol)
         .withColumn("disregard", lit(false))
     }
-    // names must stay verbatim (no trim): the compiler resolves by the exact
-    // strings columnsPerTerm yields
-    val mainCodes = codes.filter(c => !linkNameForForm.contains(c.form))
-    val mainCols = (mainCodes.flatMap(_.columnsPerTerm.flatten) ++
-      alertData.values).filter(_.nonEmpty).distinct
-    val attrMap = mainCols.zipWithIndex
-      .map { case (c, i) => c -> s"__tc_c$i" }.toMap
-    // columns the catalog parses as dates get their parse pre-projected too:
-    // the ~10-format try_to_timestamp ladder is both bulky in generated code
-    // (it blew slice stages past the 64 KB method limit) and expensive to
-    // re-evaluate per referencing code. Any code whose calculation invokes
-    // Variable.to_date contributes ALL its declared columns (no textual
-    // parse of the argument — parenthesized sub-expressions would defeat a
-    // regex); over-projecting a term's non-date column costs one extra
-    // ladder, never correctness.
-    val dateCols = mainCodes.flatMap { c =>
-      val valueDate =
-        if (c.methodTerms == Seq("value") && c.calculation == "date")
-          c.columnsPerTerm.head.headOption.toSeq
-        else Nil
-      val toDateCols =
-        if (c.calculation.contains("Variable.to_date"))
-          c.columnsPerTerm.flatten
-        else Nil
-      valueDate ++ toDateCols
-    }.filter(_.nonEmpty).distinct
-    val dateAttrMap = dateCols.zipWithIndex
-      .map { case (c, i) => c -> s"__tc_d$i" }.toMap
-    val projected0 = attrMap.foldLeft(df) { case (acc, (name, attr)) =>
-      acc.withColumn(attr, r.get(name))
-    }
-    val projected = dateAttrMap.foldLeft(projected0) { case (acc, (name, attr)) =>
-      acc.withColumn(attr, VariableCompiler.parseDate(r.get(name)))
-    }
-    val br = new graft.functions.BoundResolver(attrMap, dateAttrMap)
-    val groups = groupedCatalog(codes)
     // link codes whose outcome AddLinks pre-aggregated into a __lc_<id>
-    // column on this frame: consume the plain column (codegen'd) instead of
-    // evaluating over the link array, and drop it afterwards
+    // column on this frame read that plain column, and it is dropped after
     val dfCols = df.columns.toSet
-    val preAgg = codes.filter(c => linkNameForForm.contains(c.form))
-      .map(_.id).filter(id => dfCols(AddLinks.aggColName(id))).toSet
-    val preAggCols = preAgg.toSeq.map(AddLinks.aggColName)
-    // non-pre-aggregated link codes read the links column at eval time;
-    // a retain list must not prune it out from under them
-    val needsLinks = dfCols("links") &&
-      codes.exists(c => linkNameForForm.contains(c.form) && !preAgg(c.id))
-    val retainAll = retain.map(keep =>
-      (keep ++ (if (needsLinks) Seq("links") else Nil)).distinct)
-    // retain applies on BOTH paths so a mixed-size set of catalogs (one per
-    // data type) unions to one schema regardless of which path each took
-    def applyRetain(out: DataFrame): DataFrame = retainAll match {
-      case None => out
-      case Some(keep) =>
-        out.select((keep ++ Seq("variables", "categories", "disregard"))
-          .map(n => col(s"`$n`")): _*)
-    }
+    val linkOutcomes: Map[Int, VariableCompiler.Compiled] = codes.zipWithIndex.collect {
+      case (c, i) if linkNameForForm.contains(c.form) =>
+        i -> linkOutcome(c, linkNameForForm(c.form),
+          dfCols(AddLinks.aggColName(c.id)), policy)
+    }.toMap
+    val consumed = linkOutcomes.keys.map(i => AddLinks.aggColName(codes(i).id))
+      .filter(dfCols).toSet
 
-    if (codes.length < StageBarrierThreshold) {
-      // small catalog: one unmaterialized projection, full cross-stage
-      // Catalyst optimization (pruning, pushdown, fusion)
-      val p = foldPartials(groups.map(g =>
-        groupPartials(g, br, policy, linkNameForForm, preAgg)))
-      val o = assemble(p, br, alertData, staticEntries)
-      return applyRetain(dropQuoted(projected
-        .withColumn("variables", o.variables)
-        .withColumn("categories", o.categories)
-        .withColumn("disregard", o.disregard),
-        (attrMap.values ++ dateAttrMap.values).toSeq ++ preAggCols))
+    val (program, leaves) = CatalogProgram.compile(codes, linkOutcomes.keySet,
+      alertData.toSeq, staticEntries)
+    // names stay verbatim (no trim): the program resolves by the exact
+    // strings columnsPerTerm yields
+    def raw(name: String): Column =
+      if (name.isEmpty) lit(null).cast("string") else r.get(name)
+    val dateCols = leaves.collect {
+      case Leaf.IsoDate(c)     => c
+      case Leaf.DateSeconds(c) => c
+    }.distinct
+    val dateAttr = dateCols.zipWithIndex.map { case (c, i) => c -> s"__tc_d$i" }.toMap
+    val leafCols = leaves.map {
+      case Leaf.Raw(c)         => raw(c)
+      case Leaf.AsDouble(c)    => raw(c).cast("double")
+      case Leaf.IsoDate(c)     => VariableCompiler.isoDate(col(dateAttr(c)))
+      case Leaf.DateSeconds(c) =>
+        VariableCompiler.toDateSecondsOf(col(dateAttr(c)), raw(c), policy)
+      case Leaf.Applicable(i)  => linkOutcomes(i).applicable
+      case Leaf.Value(i)       => linkOutcomes(i).value.cast("string")
     }
+    val parsed =
+      if (dateCols.isEmpty) df
+      else df.select(col("*") +: dateCols.map(c =>
+        VariableCompiler.parseDate(raw(c)).as(dateAttr(c))): _*)
+    val catalog = GraftColumnBridge.column(EvalCatalog(
+      leafCols.map(GraftColumnBridge.expression), program))
 
-    // Catalog-sized projections are evaluated in their OWN codegen
-    // regions: fused into an upstream stage (joins, windows, filters) or a
-    // consumer stage (write, explode, aggregate), the combined generated
-    // `doConsume` exceeds Janino's 64 KB method limit and the WHOLE fused
-    // stage drops to interpreted evaluation (~10× slower, measured on the
-    // 198-code demo catalog). In-plan [[graft.plans.CodegenFence]]s on
-    // both sides — and between slices of a very large catalog — keep
-    // every generated method compiled at any catalog size while the query
-    // stays ONE adaptive plan (the previous `stageBarrier` re-rooted each
-    // slice on its own `toRdd`, which under AQE executed every upstream
-    // exchange stage at plan-construction time). Each slice lands its
-    // partial outputs in a struct column; the fence's opaque logical node
-    // is also what stops SimplifyExtractValueOps/CollapseProject from
-    // tearing the struct back into per-consumer copies of the whole slice
-    // expression.
-    def fence(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftColumnBridge.ofRows(df.sparkSession,
-        graft.plans.CodegenFence(df.queryExecution.logical))
-    val slices = sliceGroups(groups, MaxCodesPerStage)
-    val sliceNames = slices.indices.map(i => s"__tc_s$i")
-    val barrierInput = retainAll match {
-      case None => projected
-      case Some(keep) =>
-        val cols = (keep ++ attrMap.values ++ dateAttrMap.values ++
-          preAggCols).distinct
-        projected.select(cols.map(n => col(s"`$n`")): _*)
-    }
-    var acc = fence(barrierInput)
-    slices.zip(sliceNames).foreach { case (sliceGroupSeq, name) =>
-      val p = foldPartials(sliceGroupSeq.map(g =>
-        groupPartials(g, br, policy, linkNameForForm, preAgg)))
-      acc = fence(acc.withColumn(name,
-        struct(p.entries.as("e"), p.catEntries.as("c"), p.anyAlert.as("a"),
-          p.alertReason.as("r"), p.anyDisregard.as("d"))))
-    }
-    val parts = sliceNames.map { n =>
-      Partials(col(n).getField("e"), col(n).getField("c"),
-        col(n).getField("a"), col(n).getField("r"), col(n).getField("d"))
-    }
-    val o = assemble(foldPartials(parts), br, alertData, staticEntries)
-    applyRetain(dropQuoted(acc
-      .withColumn("variables", o.variables)
-      .withColumn("categories", o.categories)
-      .withColumn("disregard", o.disregard),
-      (attrMap.values ++ dateAttrMap.values).toSeq ++ sliceNames ++
-        preAggCols))
+    // the outputs replace same-named input columns in place, like withColumn
+    val outputs = Seq("variables", "categories", "disregard")
+    val keep = df.columns.toSeq.filterNot(consumed)
+    val projected = keep.map(n =>
+      if (outputs.contains(n)) col(s"__tc.$n").as(n) else col(s"`$n`")) ++
+      outputs.filterNot(keep.contains).map(n => col(s"__tc.$n").as(n))
+    parsed.select(keep.map(n => col(s"`$n`")) :+ catalog.as("__tc"): _*)
+      .select(projected: _*)
   }
-
-  /** Split groups into slices of at most `maxCodes` codes, never splitting
-    * a mutual-exclusion group. */
-  private def sliceGroups(groups: Seq[Seq[(CodeDef, Int)]],
-                          maxCodes: Int): Seq[Seq[Seq[(CodeDef, Int)]]] = {
-    val slices = Vector.newBuilder[Seq[Seq[(CodeDef, Int)]]]
-    var current = Vector.empty[Seq[(CodeDef, Int)]]
-    var n = 0
-    groups.foreach { g =>
-      if (n > 0 && n + g.length > maxCodes) {
-        slices += current; current = Vector.empty; n = 0
-      }
-      current :+= g; n += g.length
-    }
-    if (current.nonEmpty) slices += current
-    slices.result()
-  }
-
-  /** Catalogs at or above this size are evaluated behind stage barriers;
-    * below it the single projection stays comfortably under the method
-    * limit even when fused with its neighbors. */
-  val StageBarrierThreshold = 64
-
-  /** Max codes evaluated per barrier-delimited stage, sized so a slice's
-    * generated evaluator compiles with ample headroom. */
-  val MaxCodesPerStage = 64
 }

@@ -305,8 +305,6 @@ object InlineMapExtracts extends Rule[LogicalPlan] {
 /** `spark.sql.extensions` entry point wiring the engine's planner rules
   * into every session built with `Tables.requiredConfs`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
+  override def apply(e: SparkSessionExtensions): Unit =
     e.injectOptimizerRule(_ => InlineMapExtracts)
-    e.injectPlannerStrategy(_ => CodegenFenceStrategy)
-  }
 }

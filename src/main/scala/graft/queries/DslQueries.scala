@@ -176,10 +176,7 @@ object DslQueries extends QueryPack {
       // process_steps/to_codes.py:106-108), folded into the same map build
       val out = ToCodes(df, lineitemCatalog, new FlatResolver(df.columns.toSet),
         alertData = Map("qty" -> "l_quantity"),
-        staticEntries = Seq("tot_case" -> "1", "data_entry" -> "1"),
-        // the gate consumes two carry-through columns; without this the
-        // stage barrier materializes the full 16-column row
-        retain = Some(Seq("l_orderkey", "l_linenumber")))
+        staticEntries = Seq("tot_case" -> "1", "data_entry" -> "1"))
       out.select(col("l_orderkey"), col("l_linenumber"), col("disregard"),
           explode(array_sort(map_entries(col("variables")))).as("__e"))
         .select(col("l_orderkey"), col("l_linenumber"), col("disregard"),

@@ -9,8 +9,8 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import graft.config._
-import graft.operators.{DataPipeline, ToCodes}
-import graft.plans.CodegenFenceExec
+import graft.functions.EvalCatalog
+import graft.operators.DataPipeline
 import graft.sources.FormSource
 
 /** End-to-end demo-pipeline test (SURVEY.md §7.2 step 5): raw forms →
@@ -193,8 +193,8 @@ class DataPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("retainRawData=false with link codes drops the map, keeps link outcomes") {
-    // regression: the retain list must not include AddLinks' __lc_* columns
-    // (ToCodes drops them before applying retain — selecting them crashed)
+    // regression: AddLinks' __lc_* columns are consumed by ToCodes, so the
+    // raw-map drop must not try to keep them (selecting them once crashed)
     val linkCfg = cfg.copy(
       retainRawData = false,
       links = Seq(LinkDef("followups", "case", "demo_case", "demo_followup",
@@ -230,11 +230,14 @@ class DataPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("data and disregarded read one cached evaluation until release()") {
-    // past ToCodes.StageBarrierThreshold the case catalog takes the fenced
-    // path, so every planning of the pipeline carries CodegenFenceExecs
+    // a catalog of ~70 codes: still one EvalCatalog per data type, planned
+    // once, inside the cached relation
     val padded = cfg.copy(codes = cfg.codes ++
-      (1 to ToCodes.StageBarrierThreshold).map(i => CodeDef(id = s"pad_$i",
+      (1 to 64).map(i => CodeDef(id = s"pad_$i",
         typ = "case", method = "match", dbColumn = "icd_code", condition = s"Z$i")))
+    def evaluators(plan: org.apache.spark.sql.execution.SparkPlan) =
+      Plans.collect(plan) { case p => p }
+        .flatMap(_.expressions.flatMap(_.collect { case e: EvalCatalog => e }))
     val entriesBefore = CacheProbe.entries(spark)
     val res = DataPipeline.process(spark, forms, padded)
     val (dataRows, disregardedRows, shared) =
@@ -242,10 +245,10 @@ class DataPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         val plan = res.disregarded.queryExecution.executedPlan
         val scans = Plans.collect(plan) { case s: InMemoryTableScanExec => s }
         assert(scans.size === 1)
-        assert(Plans.collect(plan) { case f: CodegenFenceExec => f }.isEmpty)
-        // the catalog projection was planned once, inside the cached relation
+        assert(evaluators(plan).isEmpty)
+        // one evaluator per data type (case, register)
         val relation = scans.head.relation
-        assert(Plans.collect(relation.cachedPlan) { case f: CodegenFenceExec => f }.nonEmpty)
+        assert(evaluators(relation.cachedPlan).size === padded.dataTypes.size)
         val shared = relation.cacheBuilder.logicalPlan
         assert(CacheProbe.holds(spark, shared))
         // a second call over the same inputs gets its own frame: it does not
@@ -268,6 +271,28 @@ class DataPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     def bag(rows: Seq[Row]) = rows.groupBy(identity).view.mapValues(_.size).toMap
     assert(unfiltered.size === dataRows.size + disregardedRows.size)
     assert(bag(unfiltered) === bag(dataRows ++ disregardedRows))
+  }
+
+  test("a second process call over the same forms compiles no new class") {
+    // the call number that keeps each cached frame apart lives in the
+    // analyzed plan only, so every call generates the same code
+    def run(): DataPipeline.Result = {
+      val res = DataPipeline.process(spark, forms, cfg)
+      res.data.collect(); res.disregarded.collect()
+      res
+    }
+    val entriesBefore = CacheProbe.entries(spark)
+    val first = run()
+    try {
+      val compiled = org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount
+      val second = run()
+      try {
+        assert(org.apache.spark.metrics.source.CodegenMetrics
+          .METRIC_COMPILATION_TIME.getCount === compiled)
+        assert(CacheProbe.entries(spark) === entriesBefore + 2)
+      } finally second.release()
+    } finally first.release()
   }
 
   test("CSV forms: QC and date filters read the columns, not a map build") {

@@ -13,8 +13,9 @@ import graft.operators.ToCodes
   *
   * The catalog (`variable_codes/demo_codes.csv` on the test classpath) is
   * transcribed from the demo country config's schema and representative
-  * rows (FIXTURES.md §5): 76 case, 66 visit and 40 register codes, so the
-  * case catalog is large enough to take ToCodes' fenced path.
+  * rows (FIXTURES.md §5), grown to cover every method, condition form,
+  * calc operator, multiple_link method and disregard kind: 84 case codes
+  * (5 of them multiple_link), 66 visit and 40 register codes.
   */
 class DemoCatalogSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
@@ -24,10 +25,10 @@ class DemoCatalogSpec extends AnyFunSuite {
     getClass.getResource("/variable_codes/demo_codes.csv").toURI).getPath)
 
   test("the full demo catalog loads") {
-    assert(catalog.size === 182) // every row of the CSV
+    assert(catalog.size === 190) // every row of the CSV
     // duplicate string ids are legal in the catalog (id_pk is the real key);
     // this one happens to have none
-    assert(catalog.map(_.id).distinct.size === 182)
+    assert(catalog.map(_.id).distinct.size === 190)
   }
 
   test("every demo code compiles to a Column pair") {
