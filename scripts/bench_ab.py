@@ -83,8 +83,10 @@ def report(runs, metrics):
             worse = True
         else:
             verdict = "flat"
+        # a base median of 0 (no spill on either side) has no ratio
+        ratio = f"{mc / mb:.3f}" if mb else "n/a"
         print(f"{name:<30}{f'{mb:.3f} [{b1:.3f}, {b3:.3f}]':>30}"
-              f"{f'{mc:.3f} [{c1:.3f}, {c3:.3f}]':>30}{mc / mb:>8.3f}"
+              f"{f'{mc:.3f} [{c1:.3f}, {c3:.3f}]':>30}{ratio:>8}"
               f"{f'{wins}/{len(complete)}':>8}  {verdict}")
     for side in ("base", "change"):
         mine = [r for r in runs if r["side"] == side]

@@ -95,9 +95,4 @@ final class ParameterResolver(base: ColumnResolver,
     }
   override def get(name: String): Column =
     lookup(name).map(v => lit(v)).getOrElse(base.get(name))
-  override def exists(name: String): Column =
-    lookup(name).map(_ => lit(true)).getOrElse(base.exists(name))
-  override def dateParsed(name: String): Column =
-    if (lookup(name).isDefined) super.dateParsed(name)
-    else base.dateParsed(name)
 }

@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** Compiler for the reference's `calculation` strings — arithmetic over form
   * columns, e.g. `results./bmi_weight / ((results./bmi_height/100) *
   * (results./bmi_height/100))` or `(Variable.to_date(end) -
@@ -11,11 +8,8 @@ import org.apache.spark.sql.functions._
   * The reference substitutes declared column names textually and hands the
   * result to Python `eval` (variable.py:87-97,107-119). We substitute the
   * declared columns (longest first, same textual semantics), then parse the
-  * arithmetic with a small recursive-descent parser straight into a Catalyst
-  * `Column` tree — codegen'd, no UDF, no runtime eval.
-  *
-  * Division by zero yields NULL in Spark (Divide's non-ANSI contract), which
-  * callers map to the reference's ZeroDivisionError→0 behavior via coalesce.
+  * arithmetic with a small recursive-descent parser into an [[Ast]], which
+  * [[CatalogProgram]] compiles to postfix: no UDF, no runtime eval.
   */
 object CalcParser {
 
@@ -148,43 +142,5 @@ object CalcParser {
           throw new IllegalArgumentException(s"unexpected '$other' at $pos in: $s")
       }
     }
-  }
-
-  /** Lower an AST to a Column.
-    *
-    * @param numeric  numeric value of column i (reference: float(raw), with
-    *                 method-specific empty/missing handling applied by caller)
-    * @param toDated  `Variable.to_date` value of column i: date-parse → seconds
-    *                 since epi epoch, falling back to the numeric value
-    *                 (variable.py:321-367 returns the element unchanged when
-    *                 it isn't a date string)
-    */
-  def lower(ast: Ast, numeric: Int => Column, toDated: Int => Column): Column = ast match {
-    case Num(v)  => lit(v)
-    case Ref(i)  => numeric(i)
-    case Neg(e)  => -lower(e, numeric, toDated)
-    case ToDate(Ref(i)) => toDated(i)
-    case ToDate(e)      => lower(e, numeric, toDated) // to_date of a non-column: passthrough
-    case Bin('+', l, r) => lower(l, numeric, toDated) + lower(r, numeric, toDated)
-    case Bin('-', l, r) => lower(l, numeric, toDated) - lower(r, numeric, toDated)
-    case Bin('*', l, r) => lower(l, numeric, toDated) * lower(r, numeric, toDated)
-    case Bin('/', l, r) => try_divide(lower(l, numeric, toDated), lower(r, numeric, toDated))
-    case Bin('^', l, r) => pow(lower(l, numeric, toDated), lower(r, numeric, toDated))
-    case Bin(op, _, _)  => throw new IllegalArgumentException(s"bad op $op")
-    case Fn("abs", e)   => abs(lower(e, numeric, toDated))
-    // python int(): truncation toward zero
-    case Fn("int", e)   => lower(e, numeric, toDated).cast("long").cast("double")
-    case Fn(n, _)       => throw new IllegalArgumentException(s"bad fn $n")
-    case Cmp(op, l, r) =>
-      val (lc, rc) = (lower(l, numeric, toDated), lower(r, numeric, toDated))
-      val cond = op match {
-        case "<"  => lc < rc
-        case "<=" => lc <= rc
-        case ">"  => lc > rc
-        case ">=" => lc >= rc
-        case "==" => lc === rc
-        case "!=" => lc =!= rc
-      }
-      when(cond, lit(1.0)).otherwise(lit(0.0))
   }
 }

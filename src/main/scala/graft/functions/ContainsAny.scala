@@ -1,53 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** "Any of these literals is a substring of the value" as a native Catalyst
-  * expression — the hot half of the reference's `sub_match` method
-  * (codes/variable.py:207-224), whose demo catalog entries carry up to ~900
-  * ICD-prefix conditions.
-  *
-  * A `Contains` OR-chain for a 900-element list generates ~1 MB of Java per
-  * code (measured on the `prc_*` codes) — several such codes in one
-  * projection blow Janino's 64 KB method limit and drop the stage to
-  * interpreted evaluation. Here the needle list is ONE referenced array and
-  * the generated code is a fixed-size static call, independent of list
-  * length. Evaluation short-circuits on the first hit, exactly like the
-  * reference's loop.
+/** "Any of these literals is a substring of the value" — the hot half of the
+  * reference's `sub_match` method (codes/variable.py:207-224), whose demo
+  * catalog entries carry up to ~900 ICD-prefix conditions. The scan
+  * short-circuits on the first hit, exactly like the reference's loop;
+  * [[CatalogProgram]]'s `SubMatch` term calls it per row.
   */
-case class ContainsAny(child: Expression, needles: Array[UTF8String])
-    extends UnaryExpression {
-
-  override def dataType: DataType = BooleanType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"contains_any expects a string child, got ${child.dataType}")
-
-  override protected def nullSafeEval(value: Any): Any =
-    ContainsAny.containsAny(value.asInstanceOf[UTF8String], needles)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val needlesRef = ctx.addReferenceObj("needles", needles,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    defineCodeGen(ctx, ev, v =>
-      s"graft.functions.ContainsAny.containsAny($v, $needlesRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ContainsAny {
-  /** Static (Java-callable) so generated code invokes it directly. */
   def containsAny(value: UTF8String, needles: Array[UTF8String]): Boolean = {
     var i = 0
     while (i < needles.length) {
@@ -56,9 +17,4 @@ object ContainsAny {
     }
     false
   }
-
-  def containsAny(value: Column, needles: Seq[String]): Column =
-    GraftColumnBridge.column(ContainsAny(
-      GraftColumnBridge.expression(value),
-      needles.map(UTF8String.fromString).toArray))
 }

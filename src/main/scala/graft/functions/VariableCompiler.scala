@@ -2,19 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.config.CodeDef
 import graft.functions.EpiWeek.YearStartPolicy
 
-/** Compiles one AggregationVariables row (a "code") into Catalyst columns.
-  *
-  * This is the Spark-native re-expression of the reference's Variable class
-  * (codes/variable.py): where the reference compiles each rule to a Python
-  * closure evaluated record-at-a-time, we compile it once into a `Column`
-  * expression tree evaluated columnar under whole-stage codegen.
-  *
-  * Outcome contract (variable.py:147-173): `applicable` gates whether the
-  * code id is written into `variables`; `value` is what gets stored (1 for
-  * predicates, the computed number for calc, raw/ISO string for value).
+/** The reference's permissive date handling (codes/variable.py:233-249,
+  * 321-380) as Catalyst columns: the format ladder ([[parseDate]]),
+  * `Variable.to_date` seconds ([[toDateSeconds]]) and the value method's
+  * ISO string ([[isoDate]]). The code rules themselves compile into a
+  * [[CatalogProgram]]; these are the typed leaves it reads.
   */
 object VariableCompiler {
 
@@ -96,7 +90,7 @@ object VariableCompiler {
     toDateSecondsOf(parseDate(raw), raw, policy)
 
   /** As `toDateSeconds`, with the parse supplied by the caller (a
-    * [[ColumnResolver.dateParsed]] pre-projection at catalog scale). */
+    * pre-projected parse at catalog scale). */
   def toDateSecondsOf(parsed: Column, raw: Column,
                       policy: YearStartPolicy): Column = {
     // Reference epi_offset = (4 + start_weekday) % 7 days (variable.py:346-357):
@@ -113,152 +107,4 @@ object VariableCompiler {
 
   /** A parsed date as the value method's ISO string (variable.py:233-249). */
   def isoDate(parsed: Column): Column = date_format(parsed, "yyyy-MM-dd'T'HH:mm:ss")
-
-  /** Compiled outcome of one code against one row shape. */
-  final case class Compiled(applicable: Column, value: Column)
-
-  /** Python-truthiness for the string values predicates gate on:
-    * None, "" are falsy; the string "0" is truthy (identity check in
-    * test_not_null/test_value — variable.py:226-249). */
-  private def truthy(c: Column): Column = c.isNotNull && c =!= ""
-
-  def compile(code: CodeDef, r: ColumnResolver,
-              policy: YearStartPolicy = EpiWeek.International): Compiled = {
-    val terms = code.methodTerms
-    val ops = code.boolOps
-    val cols = code.columnsPerTerm
-    val conds = code.conditionsPerTerm
-    require(conds.length >= terms.length || terms == Seq("value") || terms == Seq("calc"),
-      s"code ${code.id}: need a condition per method term")
-
-    terms match {
-      case Seq("value") => compileValue(code, r)
-      case Seq("calc")  => compileCalc(code, r, policy)
-      case _ =>
-        // per-term calculation strings are `;`-separated alongside the terms
-        // (variable.py:128-141); only between terms consume theirs
-        val calcPerTerm = code.calculation.split(";", -1).toSeq
-          .padTo(terms.length, "")
-        val termCols = terms.zipWithIndex.map { case (t, i) =>
-          compileTerm(code, t, cols(i), conds(i), calcPerTerm(i), r, policy)
-        }
-        // and/or combine (variable.py:31-54): bitwise & | over term results,
-        // left-to-right, no precedence (matches the reference's generated
-        // `a&b|c` Python expression evaluation order... Python gives & higher
-        // precedence than |; we reproduce that).
-        val applicable = combineBool(termCols, ops)
-        Compiled(coalesce(applicable, lit(false)), lit("1"))
-    }
-  }
-
-  /** Python precedence: `&` binds tighter than `|`. */
-  private def combineBool(terms: Seq[Column], ops: Seq[String]): Column = {
-    require(terms.length == ops.length + 1)
-    // fold runs of `and` first, then `or` the groups
-    var orGroups = List.empty[Column]
-    var current = terms.head
-    ops.zip(terms.tail).foreach {
-      case ("and", t) => current = current && t
-      case ("or", t)  => orGroups = current :: orGroups; current = t
-      case (op, _)    => throw new IllegalArgumentException(s"bad logic op $op")
-    }
-    (current :: orGroups).reduce(_ || _)
-  }
-
-  private def compileTerm(code: CodeDef, term: String, columns: Seq[String],
-                          condition: Seq[String], calculation: String,
-                          r: ColumnResolver,
-                          policy: YearStartPolicy): Column = {
-    val column = columns.head // multi-column specs only occur for calc/between
-    val v = r.get(column)
-    term match {
-      case "match" =>
-        // variable.py:200-205 — `row[col] in condition`; a "" condition also
-        // admits the missing/empty value (conditions gain None when '' listed)
-        val condList = condition
-        val base = v.isin(condList: _*)
-        val withNull =
-          if (condList.contains("")) base || v.isNull else base
-        coalesce(withNull, lit(false))
-      case "sub_match" =>
-        // variable.py:207-224 — exact match OR any condition substring of
-        // value. Long condition lists (the ICD prefix catalogs) go through
-        // the native ContainsAny expression: constant generated-code size
-        // and a short-circuiting scan, vs ~1KB of Java per Contains branch.
-        val subs =
-          if (condition.length > 4) ContainsAny.containsAny(v, condition)
-          else condition.map(c => v.contains(c)).reduce(_ || _)
-        coalesce(v.isin(condition: _*) || subs, lit(false))
-      case "not_null" =>
-        // variable.py:226-231 — fails for missing, "", None; string "0" passes
-        r.exists(column) && truthy(v)
-      case "between" =>
-        compileBetween(code, columns, condition, calculation, r, policy)
-      case other =>
-        throw new IllegalArgumentException(s"code ${code.id}: bad method term $other")
-    }
-  }
-
-  /** between (variable.py:107-122, 251-286): evaluate `calculation`, test
-    * lower-inclusive/upper-exclusive bounds. Missing or empty input → fail. */
-  private def compileBetween(code: CodeDef, columns: Seq[String],
-                             condition: Seq[String], calculation: String,
-                             r: ColumnResolver,
-                             policy: YearStartPolicy): Column = {
-    val (sub, ordered) = CalcParser.substitute(calculation, columns)
-    val ast = CalcParser.parse(sub)
-    val numeric = (i: Int) => r.get(ordered(i)).cast("double")
-    val toDated = (i: Int) =>
-      toDateSecondsOf(r.dateParsed(ordered(i)), r.get(ordered(i)), policy)
-    val result = CalcParser.lower(ast, numeric, toDated)
-    val allPresent = columns.map(c => r.exists(c) && truthy(r.get(c))).reduce(_ && _)
-    val lo = condition(0).toDouble
-    val hi = condition(1).toDouble
-    // div-by-zero → null result → coalesce(false) = reference's
-    // ZeroDivisionError → 0
-    allPresent && coalesce(result >= lo && result < hi, lit(false))
-  }
-
-  /** value (variable.py:233-249): return the raw value, truthy-gated;
-    * calculation=="date" parses and ISO-formats it. */
-  private def compileValue(code: CodeDef, r: ColumnResolver): Compiled = {
-    val column = code.columnsPerTerm.head.head
-    val v = r.get(column)
-    if (code.calculation == "date") {
-      val parsed = r.dateParsed(column)
-      Compiled(
-        coalesce(r.exists(column) && truthy(v) && parsed.isNotNull, lit(false)),
-        isoDate(parsed))
-    } else {
-      Compiled(coalesce(r.exists(column) && truthy(v), lit(false)), v)
-    }
-  }
-
-  /** calc (variable.py:288-313): arithmetic over columns; missing column →
-    * not applicable; empty value → 0; ZeroDivision → 0; result 0 is still
-    * applicable (variable.py:165-171). */
-  private def compileCalc(code: CodeDef, r: ColumnResolver,
-                          policy: YearStartPolicy): Compiled = {
-    val columns = code.columnsPerTerm.head
-    val (sub, ordered) = CalcParser.substitute(code.calculation, columns)
-    val ast = CalcParser.parse(sub)
-    val numeric = (i: Int) => {
-      val raw = r.get(ordered(i))
-      when(raw.isNull || raw === "", lit(0.0)).otherwise(raw.cast("double"))
-    }
-    val toDated = (i: Int) =>
-      toDateSecondsOf(r.dateParsed(ordered(i)), r.get(ordered(i)), policy)
-    val result = CalcParser.lower(ast, numeric, toDated)
-    val allExist = columns.map(r.exists).reduce(_ && _)
-    // null result (division by zero / unparseable operand) → 0, still applicable
-    Compiled(allExist, coalesce(result, lit(0.0)).cast("string"))
-  }
-
-  /** calc variant keeping the numeric type (for gate queries that compare the
-    * computed value against a SQL oracle as DOUBLE). */
-  def compileCalcNumeric(code: CodeDef, r: ColumnResolver,
-                         policy: YearStartPolicy = EpiWeek.International): Compiled = {
-    val c = compileCalc(code, r, policy)
-    Compiled(c.applicable, c.value.cast("double"))
-  }
 }

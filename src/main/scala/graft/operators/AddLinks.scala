@@ -51,16 +51,14 @@ import graft.functions.EpiWeek.YearStartPolicy
   *
   * `multiple_link` codes (codes/to_codes.py:217-242) are evaluated here as
   * order-insensitive PRE-AGGREGATIONS over the uncollected join rows
-  * ([[linkCodeAggs]]): any/all → bool_or/bool_and of the compiled predicate,
-  * count → count(*), first/last → min_by/max_by of the compiled
+  * ([[linkCodeAggs]]): any/all → bool_or/bool_and of the code's
+  * predicate, count → count(*), first/last → min_by/max_by of the
   * (applicable, value) struct keyed on the order key with a nulls-last
   * sentinel (the reference sorts None last — add_links.py:145-152). ToCodes
-  * consumes the resulting `__lc_<id>` columns as plain codegen'd
-  * expressions, so no multiple_link method ever needs an `exists`/`forall`
-  * lambda or even the collected array on the hot path — callers that need
-  * only link-code outcomes can skip array collection entirely
-  * (`collectArrays = false`), turning the whole link step into one
-  * partial-aggregated shuffle of a few bytes per group.
+  * reads a linked-form code's outcome from its `__lc_<id>` column and
+  * nowhere else, so callers that need only link-code outcomes can skip
+  * array collection entirely (`collectArrays = false`), turning the whole
+  * link step into one partial-aggregated shuffle of a few bytes per group.
   */
 object AddLinks {
 
@@ -88,8 +86,9 @@ object AddLinks {
 
   /** Pre-aggregations for the multiple_link codes targeting this link's
     * form, one `__lc_<id>` per code, returned as (rowProjections, aggs):
-    * the projections evaluate each code's predicate/value ONCE per joined
-    * row, scan-side, into plain `__la_*` columns (see [[linkMatches]] —
+    * the projections read every code's predicate/value from ONE
+    * [[ToCodes.outcomes]] evaluator per joined row, scan-side, into plain
+    * `__la_*` columns (see [[linkMatches]] —
     * shuffles and aggregation buffers then carry booleans/strings, not the
     * linked data map), and the aggs fold those columns:
     *
@@ -102,19 +101,19 @@ object AddLinks {
     *                 null-keyed row CAN be the "last" match — the struct
     *                 makes null keys the supremum without a sentinel
     *
-    * Null predicate outcomes fold to false first: `forall([true, null])` is
-    * null (falsy downstream) while `bool_and` skips nulls, so the coalesce
-    * keeps the two formulations identical. All five aggregations are
-    * order-INSENSITIVE (first/last order via the min_by/max_by key), so
-    * they are immune to aggregation-order nondeterminism by construction. */
+    * The predicates are never null (`bool_and` would skip a null where
+    * `forall` over the linked rows reads it as false). All five
+    * aggregations are order-INSENSITIVE (first/last order via the
+    * min_by/max_by key), so they are immune to aggregation-order
+    * nondeterminism by construction. */
   def linkCodeAggs(codes: Seq[CodeDef], link: LinkDef,
                    policy: YearStartPolicy): (Seq[Column], Seq[Column]) = {
-    val r = new MapResolver(col("__l_data"))
     val ordKey = nullsLastKey(col("__ok"))
-    val parts = codes.filter(_.form == link.toForm).zipWithIndex.map {
-      case (c, i) =>
-        val compiled = VariableCompiler.compile(c, r, policy)
-        val pred = coalesce(compiled.applicable, lit(false))
+    val linkCodes = codes.filter(_.form == link.toForm)
+    // one evaluator per joined row covers every code of this link
+    val pairs = ToCodes.outcomes(linkCodes, new MapResolver(col("__l_data")), policy)
+    val parts = linkCodes.zip(pairs).zipWithIndex.map {
+      case ((c, (pred, value)), i) =>
         val pName = s"__la_p$i"
         val vName = s"__la_v$i"
         val out = aggColName(c.id)
@@ -123,10 +122,10 @@ object AddLinks {
           case "all"   => (Seq(pred.as(pName)), bool_and(col(pName)).as(out))
           case "count" => (Seq.empty[Column], count(lit(1)).as(out))
           case "first" =>
-            (Seq(pred.as(pName), compiled.value.cast("string").as(vName)),
+            (Seq(pred.as(pName), value.as(vName)),
               min_by(struct(col(pName).as("a"), col(vName).as("v")), ordKey).as(out))
           case "last"  =>
-            (Seq(pred.as(pName), compiled.value.cast("string").as(vName)),
+            (Seq(pred.as(pName), value.as(vName)),
               max_by(struct(col(pName).as("a"), col(vName).as("v")), ordKey).as(out))
           case other =>
             throw new IllegalArgumentException(s"bad multiple_link $other")
@@ -250,11 +249,11 @@ object AddLinks {
     * covering every link spec for this data type.
     *
     * @param linkCodes multiple_link codes of this data type whose form is a
-    *        LINKED form — their outcomes are pre-aggregated into `__lc_<id>`
-    *        columns that ToCodes consumes instead of evaluating over the
-    *        arrays. When two links share a toForm, only the FIRST link
-    *        emits a code's column (one `__lc_<id>` per code — the catalog
-    *        resolves links by form, so duplicates would be ambiguous).
+    *        LINKED form — their outcomes are pre-aggregated into the
+    *        `__lc_<id>` columns ToCodes reads. When two links share a
+    *        toForm, only the FIRST link emits a code's column (one
+    *        `__lc_<id>` per code — the catalog resolves links by form, so
+    *        duplicates would be ambiguous).
     * @param collectArrays false skips the ordered-array collection (the
     *        `links` column stays an empty map): correct whenever every
     *        consumer reads only the pre-aggregated link-code outcomes. */

@@ -107,9 +107,9 @@ object DataPipeline {
       cleaned.get(t.form).map { form =>
         val (_, typed) = ToDataType.fanOut(form, t.form, Seq(t)).head
         val typeLinks = cfg.links.filter(_.typ == t.name)
-        // any/all codes over LINKED forms (self-links stay main-record codes,
-        // mirroring buildDataRows' linkNameForForm) pre-aggregate at link
-        // build time — ToCodes then reads a plain boolean column
+        // codes over LINKED forms (self-links stay main-record codes,
+        // mirroring buildDataRows' linkedForms) pre-aggregate at link
+        // build time — ToCodes then reads a plain column per code
         val linkForms = typeLinks.filter(_.toForm != t.form).map(_.toForm).toSet
         val linkCodes = cfg.codes.filter(c => c.typ == t.name && linkForms(c.form))
         val withLinks = AddLinks(typed, cleaned, typeLinks, cfg.alertIdLength,
@@ -166,8 +166,8 @@ object DataPipeline {
         // "in_geometry$<xcol>,<ycol>": point-in-district-polygon via the
         // native PointInPolygon expression against the broadcast dimension
         val fields = t.location.split("\\$")(1).split(",")
-        val px = new MapResolver(col("data")).get(fields(0)).cast("double")
-        val py = new MapResolver(col("data")).get(fields(1)).cast("double")
+        val px = r.get(fields(0)).cast("double")
+        val py = r.get(fields(1)).cast("double")
         // one row per (district, ring): the join predicate is then a direct
         // PointInPolygon call on a bound column — no lambda indirection
         val dim = broadcast(Locations.districtDimension(spark, cfg.locations)
@@ -194,7 +194,7 @@ object DataPipeline {
         val parts = t.location.split(":")
         val devCol = if (parts.length >= 2) parts(1) else "deviceid"
         val prefix = if (parts.length >= 3) parts(2) else ""
-        val devVal = concat(lit(prefix), new MapResolver(col("data")).get(devCol))
+        val devVal = concat(lit(prefix), r.get(devCol))
         val located = split.join(dim, devVal === col("__dev"), "inner").drop("__dev")
         // device tags (to_codes.py:122-127: tags = devices.get(deviceid)) —
         // the devices dimension is config-sized, so it compiles into a
@@ -209,19 +209,17 @@ object DataPipeline {
       }
 
     // code evaluation for this data type; codes targeting a linked form
-    // evaluate over links[link_name] with their multiple_link method
+    // read the outcome AddLinks pre-aggregated with their multiple_link
+    // method
     val typeCodes = cfg.codes.filter(c => c.typ == t.name)
     // self-links (toForm == main form) stay main-record codes — a code on the
-    // main form must not be rerouted through its own link array
-    val linkNameForForm = cfg.links.filter(_.typ == t.name)
+    // main form must not be rerouted through its own link
+    val linkedForms = cfg.links.filter(_.typ == t.name)
       .filter(_.toForm != t.form)
-      .map(l => l.toForm -> l.name).toMap
-    // per-type counters (process_steps/to_codes.py:106-108) fold into the
-    // same map build — a separate map_concat would copy the map per row
-    val baseResolver = new MapResolver(col("data"))
+      .map(_.toForm).toSet
     val resolver =
-      if (cfg.calculationParameters.isEmpty) baseResolver
-      else new ParameterResolver(baseResolver, cfg.calculationParameters)
+      if (cfg.calculationParameters.isEmpty) r
+      else new ParameterResolver(r, cfg.calculationParameters)
 
     // event date + epi columns (process_steps/to_codes.py:138-152): the
     // event date is parsed once, and one projection derives the columns
@@ -235,8 +233,10 @@ object DataPipeline {
       yw.getField("epi_week").as("epi_week"),
       VariableCompiler.parseDate(r.get("SubmissionDate")).as("submission_date"),
       r.get("deviceid").as("device_id")): _*)
+    // per-type counters (process_steps/to_codes.py:106-108) fold into the
+    // same map build — a separate map_concat would copy the map per row
     val coded = ToCodes(withDates, typeCodes, resolver,
-      cfg.policy, cfg.alertData, linkNameForForm,
+      cfg.policy, cfg.alertData, linkedForms,
       staticEntries = Seq(t.varName -> "1", "data_entry" -> "1"))
     if (cfg.retainRawData) coded else coded.drop("data")
   }

@@ -58,8 +58,10 @@ object QualityControl {
         col("uuid") === col("excl_uuid"), "left_anti")
     }
 
+    // one evaluation per code, in order: a later code tests the column as
+    // the earlier codes repaired it
     cfg.qcCodes.foreach { code =>
-      val pred = VariableCompiler.compile(code, r).applicable
+      val (pred, _) = ToCodes.outcomes(Seq(code), r).head
       if (code.category == Seq("discard")) {
         df = df.filter(pred) // failing the check drops the row
       } else {

@@ -49,58 +49,68 @@ object ToCodes {
   private def aggCol(codeId: String): Column =
     col(s"`${AddLinks.aggColName(codeId)}`")
 
-  /** Outcome of a multiple_link code over linked rows
-    * (codes/to_codes.py:217-242): a code whose form is a *linked* form
-    * evaluates against the linked matches with method last / first / count /
-    * any / all instead of the main record. The program reads these as supplied
-    * (applicable, value) leaves.
-    *
-    * When AddLinks pre-aggregated the code's outcome into a `__lc_<id>`
-    * column (`preAgg` — the hot pipeline path), that plain codegen'd column
-    * is consumed for ALL five methods: a null `__lc_<id>` means the left
-    * join found no linked rows, i.e. the reference's not-present case. The
-    * array formulations over `links[linkName]` remain as a fallback for
-    * direct callers that attach link arrays without AddLinks; of those only
-    * any/all use lambda HOFs (CodegenFallback, interpreted), which the
-    * pipeline therefore never runs. */
-  private def linkOutcome(code: CodeDef, linkName: String, preAgg: Boolean,
-                          policy: YearStartPolicy): VariableCompiler.Compiled =
-    if (preAgg) {
-      val c = aggCol(code.id)
-      code.multipleLink.getOrElse("last") match {
-        case "first" | "last" =>
-          VariableCompiler.Compiled(c.isNotNull && c.getField("a"), c.getField("v"))
-        case "count" =>
-          VariableCompiler.Compiled(c.isNotNull, c.cast("string"))
-        case "any" | "all" =>
-          VariableCompiler.Compiled(coalesce(c, lit(false)), lit("1"))
-        case other =>
-          throw new IllegalArgumentException(s"bad multiple_link $other")
-      }
-    } else {
-      val arr = element_at(col("links"), linkName)
-      def over(elem: Column) =
-        VariableCompiler.compile(code, new graft.functions.MapResolver(elem), policy)
-      val present = arr.isNotNull && size(arr) > 0
-      code.multipleLink.getOrElse("last") match {
-        case "last"  =>
-          val c = over(element_at(arr, -1))
-          VariableCompiler.Compiled(present && c.applicable, c.value)
-        case "first" =>
-          val c = over(element_at(arr, 1))
-          VariableCompiler.Compiled(present && c.applicable, c.value)
-        case "count" =>
-          VariableCompiler.Compiled(present, size(arr).cast("string"))
-        case "any"   =>
-          VariableCompiler.Compiled(
-            present && exists(arr, m => over(m).applicable), lit("1"))
-        case "all"   =>
-          VariableCompiler.Compiled(
-            present && forall(arr, m => over(m).applicable), lit("1"))
-        case other =>
-          throw new IllegalArgumentException(s"bad multiple_link $other")
-      }
+  /** (applicable, value) of a multiple_link code (codes/to_codes.py:217-242)
+    * from the `__lc_<id>` column AddLinks pre-aggregated over the linked
+    * matches with method last / first / count / any / all. A null column
+    * means the left join found no linked rows, the reference's not-present
+    * case. The program reads the pair as supplied leaves. */
+  private def linkOutcome(code: CodeDef): (Column, Column) = {
+    val c = aggCol(code.id)
+    code.multipleLink.getOrElse("last") match {
+      case "first" | "last" => (c.isNotNull && c.getField("a"), c.getField("v"))
+      case "count"          => (c.isNotNull, c.cast("string"))
+      case "any" | "all"    => (coalesce(c, lit(false)), lit("1"))
+      case other => throw new IllegalArgumentException(s"bad multiple_link $other")
     }
+  }
+
+  /** A field's raw value; an empty column name reads as absent. Names stay
+    * verbatim (no trim): the program resolves by the exact strings
+    * columnsPerTerm yields. */
+  private def raw(r: ColumnResolver, name: String): Column =
+    if (name.isEmpty) lit(null).cast("string") else r.get(name)
+
+  /** One [[EvalCatalog]] over the program's leaves, each computed by
+    * Catalyst: `parsed(c)` is the date parse of column `c`, and `links`
+    * the (applicable, value) pairs of the codes the program reads as
+    * supplied. */
+  private def evaluator(program: CatalogProgram, leaves: Seq[Leaf],
+                        r: ColumnResolver, policy: YearStartPolicy,
+                        parsed: String => Column,
+                        links: Map[Int, (Column, Column)]): Column = {
+    val leafCols = leaves.map {
+      case Leaf.Raw(c)         => raw(r, c)
+      case Leaf.AsDouble(c)    => raw(r, c).cast("double")
+      case Leaf.IsoDate(c)     => VariableCompiler.isoDate(parsed(c))
+      case Leaf.DateSeconds(c) =>
+        VariableCompiler.toDateSecondsOf(parsed(c), raw(r, c), policy)
+      case Leaf.Applicable(i)  => links(i)._1
+      case Leaf.Value(i)       => links(i)._2.cast("string")
+    }
+    GraftColumnBridge.column(EvalCatalog(
+      leafCols.map(GraftColumnBridge.expression), program))
+  }
+
+  /** Each code's own outcome, as one `(applicable, value)` column pair per
+    * code in catalog order: `applicable` is a non-null boolean, `value` the
+    * string the code would write (null when not applicable). The codes
+    * compile as singleton groups with no categories, alert or disregard, and
+    * every pair reads the `variables` map of ONE [[EvalCatalog]], so a
+    * projection that selects several pairs evaluates the codes once per row.
+    * Entries are keyed by position, because ids may repeat in a catalog.
+    * This is how quality control, the link-code pre-aggregations and the
+    * DSL gates evaluate a rule. */
+  def outcomes(codes: Seq[CodeDef], r: ColumnResolver,
+               policy: YearStartPolicy = EpiWeek.International): Seq[(Column, Column)] = {
+    val singles = codes.zipWithIndex.map { case (c, i) =>
+      c.copy(id = i.toString, category = Nil, alert = false, disregard = false,
+        calculationGroup = None, calculationPriority = None)
+    }
+    val (program, leaves) = CatalogProgram.compile(singles, Set.empty, Nil, Nil)
+    val vars = evaluator(program, leaves, r, policy,
+      c => VariableCompiler.parseDate(raw(r, c)), Map.empty).getField("variables")
+    singles.map(c => (map_contains_key(vars, c.id), element_at(vars, c.id)))
+  }
 
   /** Append variables/categories/disregard columns to `df`.
     *
@@ -111,12 +121,15 @@ object ToCodes {
     * A field's presence is its raw value being non-null, and an empty column
     * name reads as absent.
     *
+    * @param linkedForms forms reached through a link: a code on one of them
+    *        reads the `__lc_<id>` column [[AddLinks]] pre-aggregated, which
+    *        `df` must carry
     * @param staticEntries entries every row's `variables` carries after the
     *        code entries (the per-type counters) */
   def apply(df: DataFrame, codes: Seq[CodeDef], r: ColumnResolver,
             policy: YearStartPolicy = EpiWeek.International,
             alertData: Map[String, String] = Map.empty,
-            linkNameForForm: Map[String, String] = Map.empty,
+            linkedForms: Set[String] = Set.empty,
             staticEntries: Seq[(String, String)] = Nil): DataFrame = {
     if (codes.isEmpty) {
       val vars =
@@ -126,43 +139,29 @@ object ToCodes {
         .withColumn("categories", emptyMapCol)
         .withColumn("disregard", lit(false))
     }
-    // link codes whose outcome AddLinks pre-aggregated into a __lc_<id>
-    // column on this frame read that plain column, and it is dropped after
     val dfCols = df.columns.toSet
-    val linkOutcomes: Map[Int, VariableCompiler.Compiled] = codes.zipWithIndex.collect {
-      case (c, i) if linkNameForForm.contains(c.form) =>
-        i -> linkOutcome(c, linkNameForForm(c.form),
-          dfCols(AddLinks.aggColName(c.id)), policy)
+    val linkOutcomes: Map[Int, (Column, Column)] = codes.zipWithIndex.collect {
+      case (c, i) if linkedForms(c.form) =>
+        require(dfCols(AddLinks.aggColName(c.id)), s"code ${c.id} reads the " +
+          s"linked form ${c.form}, but the frame has no ${AddLinks.aggColName(c.id)} " +
+          "column: run AddLinks with the code among its linkCodes first")
+        i -> linkOutcome(c)
     }.toMap
-    val consumed = linkOutcomes.keys.map(i => AddLinks.aggColName(codes(i).id))
-      .filter(dfCols).toSet
+    val consumed = linkOutcomes.keySet.map(i => AddLinks.aggColName(codes(i).id))
 
     val (program, leaves) = CatalogProgram.compile(codes, linkOutcomes.keySet,
       alertData.toSeq, staticEntries)
-    // names stay verbatim (no trim): the program resolves by the exact
-    // strings columnsPerTerm yields
-    def raw(name: String): Column =
-      if (name.isEmpty) lit(null).cast("string") else r.get(name)
     val dateCols = leaves.collect {
       case Leaf.IsoDate(c)     => c
       case Leaf.DateSeconds(c) => c
     }.distinct
     val dateAttr = dateCols.zipWithIndex.map { case (c, i) => c -> s"__tc_d$i" }.toMap
-    val leafCols = leaves.map {
-      case Leaf.Raw(c)         => raw(c)
-      case Leaf.AsDouble(c)    => raw(c).cast("double")
-      case Leaf.IsoDate(c)     => VariableCompiler.isoDate(col(dateAttr(c)))
-      case Leaf.DateSeconds(c) =>
-        VariableCompiler.toDateSecondsOf(col(dateAttr(c)), raw(c), policy)
-      case Leaf.Applicable(i)  => linkOutcomes(i).applicable
-      case Leaf.Value(i)       => linkOutcomes(i).value.cast("string")
-    }
     val parsed =
       if (dateCols.isEmpty) df
       else df.select(col("*") +: dateCols.map(c =>
-        VariableCompiler.parseDate(raw(c)).as(dateAttr(c))): _*)
-    val catalog = GraftColumnBridge.column(EvalCatalog(
-      leafCols.map(GraftColumnBridge.expression), program))
+        VariableCompiler.parseDate(raw(r, c)).as(dateAttr(c))): _*)
+    val catalog = evaluator(program, leaves, r, policy, c => col(dateAttr(c)),
+      linkOutcomes)
 
     // the outputs replace same-named input columns in place, like withColumn
     val outputs = Seq("variables", "categories", "disregard")

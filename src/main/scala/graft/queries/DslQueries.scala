@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.config.CodeDef
-import graft.functions.{EpiWeek, FlatResolver, VariableCompiler}
+import graft.functions.{EpiWeek, FlatResolver}
 import graft.operators.ToCodes
 
 /** Gate queries exercising the Variable predicate/expression DSL (SURVEY.md
@@ -72,10 +72,11 @@ object DslQueries extends QueryPack {
       val code = CodeDef(id = "net_price", method = "calc", condition = "None",
         calculation = "l_extendedprice * (1 - l_discount) + l_tax",
         dbColumn = "l_extendedprice,l_discount,l_tax")
-      val c = VariableCompiler.compileCalcNumeric(code, new FlatResolver(df.columns.toSet))
-      df.filter(c.applicable)
+      val Seq((applicable, value)) =
+        ToCodes.outcomes(Seq(code), new FlatResolver(df.columns.toSet))
+      df.filter(applicable)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-          c.value.as("calc_value"))
+          value.cast("double").as("calc_value"))
     }),
 
     "dsl_value_date" -> ((s, dir) => {
@@ -88,9 +89,10 @@ object DslQueries extends QueryPack {
         .withColumn("datestr", date_format(col("o_orderdate"), "MMM d, yyyy"))
       val code = CodeDef(id = "visit_date", method = "value", condition = "None",
         calculation = "date", dbColumn = "datestr")
-      val c = VariableCompiler.compile(code, new FlatResolver(Set("datestr")))
-      df.filter(c.applicable)
-        .select(col("o_orderkey"), c.value.as("iso_date"))
+      val Seq((applicable, value)) =
+        ToCodes.outcomes(Seq(code), new FlatResolver(Set("datestr")))
+      df.filter(applicable)
+        .select(col("o_orderkey"), value.as("iso_date"))
     }),
 
     "dsl_to_date_between" -> ((s, dir) => {
@@ -104,9 +106,9 @@ object DslQueries extends QueryPack {
       val code = CodeDef(id = "in_window", method = "between",
         condition = "820108800,883267200",
         calculation = "Variable.to_date(datestr)", dbColumn = "datestr")
-      val c = VariableCompiler.compile(code, new FlatResolver(Set("datestr")),
-        EpiWeek.StartDay(0))
-      df.filter(c.applicable)
+      val Seq((applicable, _)) = ToCodes.outcomes(Seq(code),
+        new FlatResolver(Set("datestr")), EpiWeek.StartDay(0))
+      df.filter(applicable)
         .select(col("o_orderkey"))
     }),
 

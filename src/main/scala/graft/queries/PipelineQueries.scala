@@ -347,7 +347,7 @@ object PipelineQueries extends QueryPack {
         codes,
         new graft.functions.MapResolver(col("data")),
         policy = EpiWeek.International,
-        linkNameForForm = Map("lineitem" -> "items"))
+        linkedForms = Set("lineitem"))
       val vars = col("variables")
       coded
         .select(d(col("data"), "o_orderkey").cast("long").as("o_orderkey"),

@@ -3,11 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.config.CodesCsv
-import graft.functions.{EpiWeek, MapResolver, VariableCompiler}
+import graft.functions.{EpiWeek, MapResolver}
 import graft.operators.ToCodes
 
 /** Fidelity test over a demo rule catalog in the AggregationVariables CSV
-  * format: every row must compile through the VariableCompiler and evaluate
+  * format: every row must compile into the catalog program and evaluate
   * over a form row — the whole catalog becomes one wide projection, exactly
   * what production would run.
   *
@@ -32,9 +32,10 @@ class DemoCatalogSpec extends AnyFunSuite {
   }
 
   test("every demo code compiles to a Column pair") {
+    // each code compiles alone into a CatalogProgram, so a failure names it
     val r = new MapResolver(col("data"))
     val failures = catalog.flatMap { code =>
-      try { VariableCompiler.compile(code, r, EpiWeek.StartDay(0)); None }
+      try { ToCodes.outcomes(Seq(code), r, EpiWeek.StartDay(0)); None }
       catch { case e: Throwable => Some(s"${code.id}: ${e.getMessage}") }
     }
     assert(failures.isEmpty, s"non-compiling codes:\n${failures.mkString("\n")}")

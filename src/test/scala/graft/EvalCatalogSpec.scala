@@ -5,7 +5,7 @@ import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.config.{CodeDef, CodesCsv}
+import graft.config.{CodeDef, CodesCsv, LinkDef}
 import graft.functions.{EpiWeek, EvalCatalog, MapResolver}
 import graft.operators.{AddLinks, ToCodes}
 
@@ -15,7 +15,9 @@ import graft.operators.{AddLinks, ToCodes}
   * (map key order included) and `disregard`, on the demo catalog per data
   * type and on a 708-code padding of it, over drawn form rows with "",
   * missing, "0", space-padded numbers, every date shape, NaN/Infinity and
-  * operands that make a calc divide by zero.
+  * operands that make a calc divide by zero; and the multiple_link codes
+  * as [[AddLinks]] pre-aggregates them, against the chain over the link
+  * arrays.
   */
 class EvalCatalogSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
@@ -81,28 +83,31 @@ class EvalCatalogSpec extends AnyFunSuite {
       .collect().map(r => r.getInt(0) -> ((entries(r, 1), entries(r, 2), r.getBoolean(3))))
       .toMap
 
-  /** Both evaluations of `codes` over `rows`; the first disagreeing row,
-    * if any. */
-  private def mismatch(codes: Seq[CodeDef], rows: Seq[Map[String, String]],
-                       staticEntries: Seq[(String, String)],
-                       frame: Seq[Map[String, String]] => DataFrame = plainFrame,
-                       linkNameForForm: Map[String, String] = Map.empty): Option[String] = {
-    val df = frame(rows)
-    val r = new MapResolver(col("data"))
-    val native = ToCodes(df, codes, r, policy, alertData, linkNameForForm, staticEntries)
-    val chain = ToCodesChain(df, codes, r, policy, alertData, linkNameForForm, staticEntries)
+  /** The native and the chain evaluation of the same rows; the first
+    * disagreeing row, if any. */
+  private def mismatch(rows: Seq[Map[String, String]], native: DataFrame,
+                       chain: DataFrame): Option[String] = {
     val types = Seq("variables", "categories", "disregard")
     val schemaDiff = types.filter(n => native.schema(n).dataType != chain.schema(n).dataType)
     if (schemaDiff.nonEmpty) return Some(s"output types differ: $schemaDiff")
     if (native.columns.toSeq != chain.columns.toSeq)
       return Some(s"columns differ: ${native.columns.toSeq} vs ${chain.columns.toSeq}")
     // the native side must run its generated code, not an interpreted
-    // fallback after a compile error
-    val a = withConfs("spark.sql.codegen.fallback" -> "false",
-      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(outcome(native))
+    // projection (the test session already fails on a compile error)
+    val a = withConfs("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(outcome(native))
     val b = outcome(chain)
     rows.indices.find(i => a.get(i) != b.get(i)).map(i =>
       s"row $i ${rows(i)}\n native ${a.get(i)}\n chain  ${b.get(i)}")
+  }
+
+  /** Both evaluations of `codes` over plain form rows. */
+  private def plainMismatch(codes: Seq[CodeDef], rows: Seq[Map[String, String]],
+                            staticEntries: Seq[(String, String)]): Option[String] = {
+    val df = plainFrame(rows)
+    val r = new MapResolver(col("data"))
+    mismatch(rows,
+      ToCodes(df, codes, r, policy, alertData, Set.empty, staticEntries),
+      ToCodesChain(df, codes, r, policy, alertData, Map.empty, staticEntries))
   }
 
   private def withConfs[T](confs: (String, String)*)(body: => T): T = {
@@ -123,7 +128,7 @@ class EvalCatalogSpec extends AnyFunSuite {
     val gen = Gen.listOfN(n, rowGen(pools(codes)))
     var failure: Option[String] = None
     val prop = Prop.forAllNoShrink(gen) { rows =>
-      failure = mismatch(codes, rows, staticEntries)
+      failure = plainMismatch(codes, rows, staticEntries)
       failure.isEmpty
     }
     val result = Test.check(Test.Parameters.default
@@ -152,59 +157,77 @@ class EvalCatalogSpec extends AnyFunSuite {
     equivalent(padded, n = 120, batches = 1, seed = 11, staticEntries = statics("case"))
   }
 
+  /** The demo catalog's linked form, joined on a per-record `link_id`. */
+  private val alertLink = LinkDef("alert_investigation", "case", "demo_case",
+    "demo_alert", Seq("link_id"), Seq("pt./alert_id"), Seq("match"), "ord",
+    orderByIsDate = false)
+
   test("multiple_link codes: pre-aggregated and link-array outcomes agree") {
     val codes = catalog.filter(c => c.typ == "case")
     val linkCodes = codes.filter(_.multipleLink.isDefined)
     assert(linkCodes.map(_.multipleLink.get).toSet ===
       Set("first", "last", "count", "any", "all"))
-    val links = Map("demo_alert" -> "alert_investigation")
     val lab = "alert_labs./return_lab"
-    val linked = Gen.listOfN(3, Gen.option(Gen.oneOf("yes", "no", ""))
-      .map(v => v.map(x => Map(lab -> x, "pt./alert_id" -> "a1")).getOrElse(Map("pt./alert_id" -> "a1"))))
+    // up to three linked rows per record, distinct order keys drawn out of
+    // order, a missing or drawn lab value
+    val linked = for {
+      k <- Gen.choose(0, 3)
+      ords <- Gen.pick(k, 0 to 9)
+      labs <- Gen.listOfN(k, Gen.option(Gen.oneOf("yes", "no", "")))
+    } yield ords.toSeq.zip(labs).map { case (o, v) =>
+      Map("ord" -> o.toString) ++ v.map(lab -> _) }
     val gen = for {
       rows <- Gen.listOfN(120, rowGen(pools(codes.filter(_.multipleLink.isEmpty))))
-      arrays <- Gen.listOfN(120, Gen.choose(0, 3).flatMap(k => linked.map(_.take(k))))
-    } yield rows.zip(arrays)
+      matches <- Gen.listOfN(120, linked)
+    } yield rows.zip(matches)
     val drawn = gen.pureApply(Gen.Parameters.default, Seed(13))
+    val rows = drawn.map(_._1)
+    assert(drawn.exists(_._2.isEmpty) && drawn.exists(_._2.size == 3))
 
-    // the links-array fallback, exactly as a direct caller attaches it
-    val arrayFrame = (_: Seq[Map[String, String]]) =>
-      drawn.zipWithIndex.map { case ((m, arr), i) =>
-        (i, m, Map("alert_investigation" -> arr))
-      }.toDF("rid", "data", "links")
-    assert(mismatch(codes, drawn.map(_._1), statics("case"), arrayFrame, links).isEmpty)
-
-    // pre-aggregated __lc_ columns as AddLinks shapes them: null without
-    // linked rows, else count / bool / (applicable, value) struct
-    val aggFrame = (rows: Seq[Map[String, String]]) => {
-      val arr = element_at(col("links"), "alert_investigation")
-      linkCodes.foldLeft(arrayFrame(rows)) { (df, c) =>
-        val agg = c.multipleLink.get match {
-          case "count" => when(size(arr) > 0, size(arr).cast("long"))
-          case "any"   => when(size(arr) > 0, exists(arr, m => compiledOver(c, m)))
-          case "all"   => when(size(arr) > 0, forall(arr, m => compiledOver(c, m)))
-          case "first" => when(size(arr) > 0, pairOver(c, element_at(arr, 1)))
-          case "last"  => when(size(arr) > 0, pairOver(c, element_at(arr, -1)))
-        }
-        df.withColumn(AddLinks.aggColName(c.id), agg)
-      }.drop("links")
-    }
-    assert(mismatch(codes, drawn.map(_._1), statics("case"), aggFrame, links).isEmpty)
+    val base = rows.zipWithIndex.map { case (m, i) =>
+      (i, s"u$i", m + ("link_id" -> s"a$i"))
+    }.toDF("rid", "uuid", "data")
+    val alerts = drawn.zipWithIndex.flatMap { case ((_, ms), i) =>
+      ms.zipWithIndex.map { case (m, j) => (s"l$i-$j", m + ("pt./alert_id" -> s"a$i")) }
+    }.toDF("uuid", "data")
+    // AddLinks pre-aggregates the link codes next to the ordered arrays:
+    // ToCodes reads the former, the chain evaluates the oracle over the latter
+    val withLinks = AddLinks(base, Map("demo_alert" -> alerts), Seq(alertLink),
+      linkCodes = linkCodes, policy = policy)
+    val r = new MapResolver(col("data"))
+    val native = ToCodes(withLinks, codes, r, policy, alertData,
+      Set("demo_alert"), statics("case"))
+    val chain = ToCodesChain(
+      withLinks.drop(linkCodes.map(c => AddLinks.aggColName(c.id)): _*), codes, r,
+      policy, alertData, Map("demo_alert" -> alertLink.name), statics("case"))
+    assert(mismatch(rows, native, chain).isEmpty)
   }
 
-  private def compiledOver(c: CodeDef, m: org.apache.spark.sql.Column) =
-    coalesce(graft.functions.VariableCompiler.compile(c, new MapResolver(m),
-      policy).applicable, lit(false))
+  test("link codes: one evaluator per linked row covers every code") {
+    val linkCodes = catalog.filter(_.form == "demo_alert")
+    val (inputs, _) = AddLinks.linkCodeAggs(linkCodes, alertLink, policy)
+    // a range scan, not a local relation, so the projection is generated code
+    val rows = spark.range(4).select(map(lit("alert_labs./return_lab"),
+      when(col("id") % 2 === 0, "yes").otherwise("no")).as("__l_data"))
+    val projected = rows.select(inputs: _*)
+    val generated = org.apache.spark.sql.execution.debug.codegenStringSeq(
+      projected.queryExecution.executedPlan).map(_._2).mkString
+    assert(inputs.size === 6)
+    assert("EvalCatalog\\.evaluate\\(".r.findAllIn(generated).size === 1, generated)
+    assert(projected.collect().length === 4)
+  }
 
-  private def pairOver(c: CodeDef, m: org.apache.spark.sql.Column) = {
-    val compiled = graft.functions.VariableCompiler.compile(c, new MapResolver(m), policy)
-    struct(coalesce(compiled.applicable, lit(false)).as("a"), compiled.value.as("v"))
+  test("a linked-form code without its pre-aggregated column is refused") {
+    val codes = catalog.filter(c => c.typ == "case")
+    val err = intercept[IllegalArgumentException](ToCodes(plainFrame(Seq(Map("k" -> "v"))),
+      codes, new MapResolver(col("data")), policy, linkedForms = Set("demo_alert")))
+    assert(err.getMessage.contains("ale_1"), err.getMessage)
   }
 
   test("plan size: padding the case catalog from 180 to 708 codes adds at most 20% expression nodes") {
     def nodes(codes: Seq[CodeDef]): Int = {
       val df = ToCodes(plainFrame(Seq(Map("k" -> "v"))), codes,
-        new MapResolver(col("data")), policy, alertData, Map.empty, statics("case"))
+        new MapResolver(col("data")), policy, alertData, Set.empty, statics("case"))
       df.queryExecution.analyzed.collect { case p => p }
         .map(_.expressions.map(_.collect { case e => e }.size).sum).sum
     }

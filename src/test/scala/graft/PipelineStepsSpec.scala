@@ -57,6 +57,34 @@ class PipelineStepsSpec extends AnyFunSuite {
     assert(out === "4")
   }
 
+  test("qc repair then discard on one column: the program equals the column oracle") {
+    val df = form(
+      "u1" -> Map("age" -> "30"),
+      "u2" -> Map("age" -> "300"),   // repaired to null, then discarded
+      "u3" -> Map("age" -> ""),
+      "u4" -> Map("other" -> "x"),
+      "u5" -> Map("age" -> "abc"),
+      "u6" -> Map("age" -> "119.5"))
+    val codes = Seq(
+      CodeDef(id = "qc_age", method = "between", condition = "0,120",
+        calculation = "age", dbColumn = "age"),
+      CodeDef(id = "qc_age_given", method = "not_null", condition = "None",
+        dbColumn = "age", category = Seq("discard")))
+    // the QC loop over the Column formulation of each rule
+    val oracle = codes.foldLeft(df) { (acc, code) =>
+      val pred = ColumnCompiler.compile(code, new graft.functions.MapResolver(col("data")))
+        .applicable
+      if (code.category == Seq("discard")) acc.filter(pred)
+      else acc.withColumn("data", when(pred, col("data"))
+        .otherwise(map_concat(col("data"), map(lit("age"), lit(null).cast("string")))))
+    }
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.select("uuid", "data").as[(String, Map[String, String])].collect().toMap
+    val main = rows(QualityControl(df, QualityControlDef(qcCodes = codes)))
+    assert(main === rows(oracle))
+    assert(main === Map("u1" -> Map("age" -> "30"), "u6" -> Map("age" -> "119.5")))
+  }
+
   test("qc exclusion list and submission date gate") {
     val df = form(
       "u1" -> Map("SubmissionDate" -> "2016-04-17T02:43:31"),

@@ -53,52 +53,50 @@ object ToCodesChain {
     * evaluates against the linked matches with method last / first / count /
     * any / all instead of the main record.
     *
-    * When AddLinks pre-aggregated the code's outcome into a `__lc_<id>`
-    * column (`preAgg` — the hot pipeline path), that plain codegen'd column
-    * is consumed for ALL five methods: a null `__lc_<id>` means the left
-    * join found no linked rows, i.e. the reference's not-present case. The
-    * array formulations over `links[linkName]` remain as a fallback for
-    * direct callers that attach link arrays without AddLinks; of those only
-    * any/all use lambda HOFs (CodegenFallback, interpreted), which the
-    * pipeline therefore never runs. */
+    * When the frame carries AddLinks' pre-aggregated `__lc_<id>` column
+    * (`preAgg`), it is consumed for all five methods, like ToCodes does: a
+    * null `__lc_<id>` means the left join found no linked rows, i.e. the
+    * reference's not-present case. Otherwise the outcome is evaluated over
+    * the `links[linkName]` array itself, which makes this the oracle for
+    * the pre-aggregations. */
   private def compiledFor(code: CodeDef, r: ColumnResolver,
                           policy: YearStartPolicy,
                           linkNameForForm: Map[String, String],
-                          preAgg: Set[String]): VariableCompiler.Compiled = {
+                          preAgg: Set[String]): ColumnCompiler.Compiled = {
     linkNameForForm.get(code.form) match {
-      case None => VariableCompiler.compile(code, r, policy)
+      case None => ColumnCompiler.compile(code, r, policy)
       case Some(linkName) if preAgg(code.id) =>
         val c = aggCol(code.id)
         code.multipleLink.getOrElse("last") match {
           case "first" | "last" =>
-            VariableCompiler.Compiled(
+            ColumnCompiler.Compiled(
               c.isNotNull && c.getField("a"), c.getField("v"))
           case "count" =>
-            VariableCompiler.Compiled(c.isNotNull, c.cast("string"))
+            ColumnCompiler.Compiled(c.isNotNull, c.cast("string"))
           case "any" | "all" =>
-            VariableCompiler.Compiled(coalesce(c, lit(false)), lit("1"))
+            ColumnCompiler.Compiled(coalesce(c, lit(false)), lit("1"))
           case other =>
             throw new IllegalArgumentException(s"bad multiple_link $other")
         }
       case Some(linkName) =>
         val arr = element_at(col("links"), linkName)
         def over(elem: Column) =
-          VariableCompiler.compile(code, new graft.functions.MapResolver(elem), policy)
+          ColumnCompiler.compile(code, new graft.functions.MapResolver(elem), policy)
         val present = arr.isNotNull && size(arr) > 0
         code.multipleLink.getOrElse("last") match {
           case "last"  =>
             val c = over(element_at(arr, -1))
-            VariableCompiler.Compiled(present && c.applicable, c.value)
+            ColumnCompiler.Compiled(present && c.applicable, c.value)
           case "first" =>
             val c = over(element_at(arr, 1))
-            VariableCompiler.Compiled(present && c.applicable, c.value)
+            ColumnCompiler.Compiled(present && c.applicable, c.value)
           case "count" =>
-            VariableCompiler.Compiled(present, size(arr).cast("string"))
+            ColumnCompiler.Compiled(present, size(arr).cast("string"))
           case "any"   =>
-            VariableCompiler.Compiled(
+            ColumnCompiler.Compiled(
               present && exists(arr, m => over(m).applicable), lit("1"))
           case "all"   =>
-            VariableCompiler.Compiled(
+            ColumnCompiler.Compiled(
               present && forall(arr, m => over(m).applicable), lit("1"))
           case other =>
             throw new IllegalArgumentException(s"bad multiple_link $other")
@@ -172,7 +170,7 @@ object ToCodesChain {
     if (!hasPriority) {
       // first applicable wins and the loop breaks (to_codes.py:305-306) —
       // every output is a first-match CaseWhen over the member predicates
-      def firstMatch(f: ((CodeDef, Int, VariableCompiler.Compiled)) => Column) =
+      def firstMatch(f: ((CodeDef, Int, ColumnCompiler.Compiled)) => Column) =
         members.tail.foldLeft(
           when(members.head._3.applicable, f(members.head))) {
           case (acc, m) => acc.when(m._3.applicable, f(m))
@@ -207,7 +205,7 @@ object ToCodesChain {
       val wmin =
         if (candidates.length == 1) candidates.head else least(candidates: _*)
       val widx = wmin.getField("idx")
-      def byWinner(f: ((CodeDef, Int, VariableCompiler.Compiled)) => Column) =
+      def byWinner(f: ((CodeDef, Int, ColumnCompiler.Compiled)) => Column) =
         members.tail.foldLeft(
           when(widx === members.head._2, f(members.head))) {
           case (acc, m) => acc.when(widx === m._2, f(m))
@@ -340,15 +338,12 @@ object ToCodesChain {
 }
 
 /** Form fields pre-projected into bound attribute columns (`name → attr`),
-  * with `dateAttrs` the columns whose date parse is also pre-projected. A
-  * field exists when its bound value is non-null. */
+  * with `dateAttrs` the columns whose date parse is also pre-projected. */
 final class BoundResolver(attrs: Map[String, String],
                           dateAttrs: Map[String, String] = Map.empty)
     extends ColumnResolver {
   override def get(name: String): Column =
     attrs.get(name).map(col).getOrElse(lit(null).cast("string"))
-  override def exists(name: String): Column =
-    attrs.get(name).map(a => col(a).isNotNull).getOrElse(lit(false))
-  override def dateParsed(name: String): Column =
-    dateAttrs.get(name).map(col).getOrElse(super.dateParsed(name))
+  def dateParsed(name: String): Column =
+    dateAttrs.get(name).map(col).getOrElse(VariableCompiler.parseDate(get(name)))
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.config.CodeDef
-import graft.functions.{EpiWeek, MapResolver}
+import graft.functions.{EpiWeek, FlatResolver, MapResolver}
 import graft.operators.ToCodes
 
 /** Golden-map tests for the coding engine (reference
@@ -186,9 +186,40 @@ class ToCodesSpec extends AnyFunSuite {
     val df = Seq(Tuple1(Map("k" -> "v"))).toDF("data")
       .withColumn("__lc_a.b", lit(3L))
     val out = ToCodes(df, Seq(dotted), new MapResolver(col("data")),
-      EpiWeek.StartDay(0), linkNameForForm = Map("linkform" -> "lk"))
+      EpiWeek.StartDay(0), linkedForms = Set("linkform"))
     assert(!out.columns.contains("__lc_a.b"))
     val vars = out.select("variables").head().getMap[String, String](0).toMap
     assert(vars === Map("a.b" -> "3"))
+  }
+
+  test("flat frame: a null cell reads as absent through ToCodes and outcomes") {
+    val df = Seq[(Int, Option[String], Option[String])](
+      (1, Some("4"), Some("2")), (2, Some("4"), None),
+      (3, None, Some("")), (4, Some(""), Some(""))).toDF("rid", "a", "b")
+    val codes = Seq(
+      CodeDef(id = "calc", method = "calc", condition = "None",
+        calculation = "a+b", dbColumn = "a,b"),
+      CodeDef(id = "nn", method = "not_null", condition = "None", dbColumn = "b"),
+      CodeDef(id = "val", method = "value", condition = "None", dbColumn = "b"),
+      CodeDef(id = "blank", method = "match", condition = "", dbColumn = "b"))
+    val r = new FlatResolver(df.columns.toSet)
+    val expected = Map(
+      1 -> Map("calc" -> "6.0", "nn" -> "1", "val" -> "2"),
+      // an absent operand makes calc inapplicable; "" admits the null
+      2 -> Map("blank" -> "1"),
+      3 -> Map("blank" -> "1"),
+      // "" is present: calc reads it as 0
+      4 -> Map("calc" -> "0.0", "blank" -> "1"))
+    val coded = ToCodes(df, codes, r).select("rid", "variables")
+      .as[(Int, Map[String, String])].collect().toMap
+    assert(coded === expected)
+    val pairs = ToCodes.outcomes(codes, r)
+    val outcomes = df.select(col("rid") +: pairs.flatMap { case (a, v) =>
+        Seq(a, v) }: _*).collect().map { row =>
+      row.getInt(0) -> codes.indices.collect {
+        case i if row.getBoolean(1 + 2 * i) => codes(i).id -> row.getString(2 + 2 * i)
+      }.toMap
+    }.toMap
+    assert(outcomes === expected)
   }
 }
