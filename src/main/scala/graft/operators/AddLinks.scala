@@ -75,15 +75,6 @@ object AddLinks {
     * code; consumed (and dropped) by ToCodes. */
   def aggColName(codeId: String): String = s"__lc_$codeId"
 
-  /** Does this aggregation expression reference the linked-row map? Matches
-    * the name whether the caller built it from `functions.col`
-    * (an unresolved attribute in the lazy column-node tree) or from a
-    * resolved frame reference like `df("__l_data")` (AttributeReference) —
-    * pruning a resolved reference would fail analysis at runtime instead
-    * of keeping the map. */
-  private[graft] def refersToLinkedData(c: Column): Boolean =
-    org.apache.spark.sql.GraftColumnBridge.referencesName(c, "__l_data")
-
   /** Pre-aggregations for the multiple_link codes targeting this link's
     * form, one `__lc_<id>` per code, returned as (rowProjections, aggs):
     * the projections read every code's predicate/value from ONE
@@ -144,13 +135,12 @@ object AddLinks {
     * The join is then a pure equi-join on plain string columns, and the
     * shuffle/sort/aggregation buffers carry primitives; the linked map
     * itself crosses the join only when something downstream genuinely
-    * consumes whole linked rows (full-map array collection, or `extraAggs`
-    * over `__l_data` without `aggInputs`). Measured at sf0.1, maps flowing
-    * through the join+agg cost 3× the plain-column shape.
+    * consumes whole linked rows (full-map array collection). Measured at
+    * sf0.1, maps flowing through the join+agg cost 3× the plain-column
+    * shape.
     *
-    * @param extraAggs aggregations over the joined rows; they may reference
-    *        the `aggInputs` projections (preferred — see [[linkCodeAggs]])
-    *        or `__l_data` directly (forces the map through the join).
+    * @param extraAggs aggregations over the joined rows, folding the
+    *        `aggInputs` projections (see [[linkCodeAggs]]).
     * @param payload what to collect per matched row, as an expression over
     *        `__l_data`; defaults to the full linked map (the reference
     *        attaches whole linked dicts). Callers that only need one field
@@ -202,11 +192,8 @@ object AddLinks {
       val raw = element_at(col("__l_data"), link.orderByColumn)
       if (link.orderByIsDate) VariableCompiler.parseDate(raw).cast("string") else raw
     }
-    // keep __l_data out of the shuffle when nothing aggregates over it —
-    // detected by actual references, not by aggInputs being empty (a
-    // count(*)-only catalog has no inputs AND no use for the map)
-    val keepLinkedData = (collectArrays && payload.isEmpty) ||
-      extraAggs.exists(refersToLinkedData)
+    // keep __l_data out of the shuffle unless the full-map arrays collect it
+    val keepLinkedData = collectArrays && payload.isEmpty
     val lKeyCols = link.toColumns.lazyZip(link.methods).lazyZip(toKeys).map {
       (tc, m, name) =>
         val lv = element_at(col("__l_data"), tc)
@@ -272,6 +259,9 @@ object AddLinks {
       aggedForms += link.toForm
       if (!collectArrays && aggs.isEmpty) acc
       else {
+        require(forms.contains(link.toForm),
+          s"link ${link.name} reads form ${link.toForm}, which is not among " +
+            s"the forms given: ${forms.keys.toSeq.sorted.mkString(", ")}")
         val matches = linkMatches(base, forms(link.toForm), link, alertIdLength,
           aggs, payload = None, collectArrays = collectArrays,
           aggInputs = aggInputs)

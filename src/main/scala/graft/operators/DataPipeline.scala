@@ -73,14 +73,14 @@ object DataPipeline {
   private val evaluations = new java.util.concurrent.atomic.AtomicLong
 
   /** `df` carrying a fresh call number in its analyzed plan only: an
-    * always-true filter on that number, which constant folding removes
-    * before planning. The cache tells two calls apart, and the generated
-    * code of every call is the same, so a later call over the same forms
-    * (a streaming micro-batch) reuses the compiled classes. */
-  private def numbered(df: DataFrame): DataFrame = {
-    val n = lit(evaluations.incrementAndGet())
-    df.filter(n === n)
-  }
+    * always-true filter on that number (`isnotnull`, which Spark does not
+    * warn about as it does a trivially true `n = n`), which constant
+    * folding removes before planning. The cache tells two calls apart,
+    * and the generated code of every call is the same, so a later call
+    * over the same forms (a streaming micro-batch) reuses the compiled
+    * classes. */
+  private def numbered(df: DataFrame): DataFrame =
+    df.filter(lit(evaluations.incrementAndGet()).isNotNull)
 
   /** Run the pipeline over raw form DataFrames `(uuid, data)`. */
   def process(spark: SparkSession, forms: Map[String, DataFrame],

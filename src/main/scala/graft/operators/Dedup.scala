@@ -16,43 +16,19 @@ import org.apache.spark.sql.functions._
   *    runs; no seed state to distribute); minhash permutations derive from
   *    ONE digest per shingle via fixed universal-hash constants (see
   *    [[minhashes]] — the constants are mirrored by the DuckDB oracle,
-  *    change both or neither).
+  *    change both or neither);
+  *  - an intermediate that several branches read (postings, posting lists,
+  *    band signatures) is an eager local checkpoint, not a lazy cache: the
+  *    returned frame owns its blocks and the ContextCleaner frees them once
+  *    nothing reads it, so no call leaves anything to release.
   */
 object Dedup {
 
-  /** Persisted intermediates (shingle postings / posting lists / LSH band
-    * signatures) that the RETURNED pair frames still reference lazily — the
-    * functions below cannot unpersist them before the caller has run a job,
-    * so in a long-lived driver each call parks cached blocks for the
-    * session lifetime (Spark's CacheManager holds the plan strongly; the
-    * ContextCleaner never reclaims it). Call
-    * [[releaseIntermediateCaches]] after materializing pair results to
-    * drop them; re-running a pair frame afterwards stays correct (it
-    * recomputes from source). */
-  private val trackedCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  private[operators] def persistTracked(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    trackedCaches.add(p)
-    p
-  }
-
-  /** Unpersist every intermediate cache parked by [[jaccardPairs]] /
-    * [[minhashLshPairs]] / [[SubstringDedup.duplicatedSpans]] calls so
-    * far; returns how many were released. Safe at any time — pair frames
-    * still held by the caller recompute from source on their next
-    * action. */
-  def releaseIntermediateCaches(blocking: Boolean = false): Int = {
-    var n = 0
-    var df = trackedCaches.poll()
-    while (df != null) {
-      df.unpersist(blocking)
-      n += 1
-      df = trackedCaches.poll()
-    }
-    n
-  }
+  /** Does nothing and returns 0. The intermediates this object once parked
+    * in the session's cache are eager local checkpoints now, freed once no
+    * frame reads them; kept only for perfbench's `CurationGates.release`,
+    * which still calls it between gates. */
+  def releaseIntermediateCaches(blocking: Boolean = false): Int = 0
 
   /** Shingles from an already-materialized token array. IMPORTANT: pass a
     * bound column, not an expression — Catalyst does not CSE across
@@ -90,24 +66,24 @@ object Dedup {
 
   /** Hashed (doc_id, gram) postings — [[shinglePostings]] with each shingle
     * collapsed to its 64-bit xxhash64 (collision odds ~|shingles|²/2⁶⁴,
-    * ~4× less shuffle volume than the strings) — PERSISTED via the tracked
-    * registry and shared across consumers: [[jaccardPairs]] /
+    * ~4× less shuffle volume than the strings) — an EAGER local checkpoint,
+    * shared by reference across consumers: [[jaccardPairs]] /
     * [[containmentPairs]] (`grams`) and
     * [[Decontaminate.overlap]] (`docGrams`) accept this frame so a
     * composed pipeline shingles its pool ONCE instead of once per leg.
-    * Release with [[releaseIntermediateCaches]] after the consuming jobs
-    * have run. */
+    * Its blocks go when the last frame reading it does. */
   def cacheHashedPostings(docs: DataFrame, idCol: String = "doc_id",
                           textCol: String = "text", k: Int = 3): DataFrame =
     // r16 probe REJECTED: fanOutSmall here (spread the one-partition
     // cache build that runs as a ~1.1 s straggler inside the first
     // consuming stage) made corpus_pipeline 5.25 → 7.21 s min — the
-    // 32-partition persisted frame flips the downstream candFanOut gauge
+    // 32-partition materialized frame flips the downstream candFanOut gauge
     // (postings no longer < cores), so the prefix engine's verify
     // fan-out stops firing and every consumer pays 32-task read overhead
     // on a tiny cache besides.
-    persistTracked(shinglePostings(docs, idCol, textCol, k)
-      .select(col("doc_id"), xxhash64(col("shingle")).as("gram")))
+    shinglePostings(docs, idCol, textCol, k)
+      .select(col("doc_id"), xxhash64(col("shingle")).as("gram"))
+      .localCheckpoint(true)
 
   /** N-gram Jaccard near-dup pairs via the postings self-join:
     * |A∩B| from the shingle join, |A|,|B| from per-doc counts; emit pairs
@@ -296,7 +272,7 @@ object Dedup {
     // for the windowed prefix frame, which the candidate self-join reads
     // twice above its exchange. The connectedComponents discipline.
     // A caller-shared [[cacheHashedPostings]] frame substitutes verbatim
-    // (already persisted by the caller — no second materialization here).
+    // (already checkpointed by the caller — no second materialization).
     val postings = grams
       .map(_.select(col("doc_id"), col("gram").as("g")))
       .getOrElse(shinglePostings(docs, idCol, textCol, k)
@@ -436,11 +412,12 @@ object Dedup {
         // before the filter drops it, which is exactly the memory the
         // caller budgeted for pair generation anyway (a bucket of f docs
         // is f·8 bytes buffered vs f² join rows downstream — the buffer
-        // is never the binding constraint). Persisted: pairs and per-doc
+        // is never the binding constraint). Checkpointed: pairs and per-doc
         // counts both read it, and it is ~10× smaller than the postings.
-        val byShingle = persistTracked(raw.groupBy(col("shingle"))
+        val byShingle = raw.groupBy(col("shingle"))
           .agg(collect_list(col("doc_id")).as("__ds"))
-          .filter(size(col("__ds")) <= cap))
+          .filter(size(col("__ds")) <= cap)
+          .localCheckpoint(true)
         val common = pairStream(byShingle.select(col("__ds")))
           // duplicate doc_id rows put the same id in one list twice; the
           // self-join formulation's strict < never pairs an id with itself,
@@ -456,10 +433,10 @@ object Dedup {
         // unguarded: the postings SELF-JOIN (shuffle keyed on the shingle,
         // cost Σ posting-list²) — no per-shingle buffering at all, for
         // callers who cannot bound the hot-shingle document frequency.
-        // Persisted: the self-join + counts would otherwise re-run the
+        // Checkpointed: the self-join + counts would otherwise re-run the
         // tokenize/shingle pipeline three times. (A caller-shared grams
-        // frame is already cached — don't stack a second copy on it.)
-        val postings = if (grams.isDefined) raw else persistTracked(raw)
+        // frame is already checkpointed — don't stack a second copy on it.)
+        val postings = if (grams.isDefined) raw else raw.localCheckpoint(true)
         val counts = postings.groupBy(col("doc_id"))
           .agg(count(lit(1)).as("n_shingles"))
         val common = postings.as("p1")
@@ -588,10 +565,10 @@ object Dedup {
           .select(col("__a").as("doc_a"), col("__b").as("doc_b"))
           .distinct()
       case None =>
-        // unguarded: bucket self-join, no per-bucket buffering. Persisted —
-        // both join sides would re-run shingling + the signature
-        // aggregation otherwise.
-        val bands = persistTracked(rawBands)
+        // unguarded: bucket self-join, no per-bucket buffering.
+        // Checkpointed — both join sides would re-run shingling + the
+        // signature aggregation otherwise.
+        val bands = rawBands.localCheckpoint(true)
         bands.as("b1")
           .join(bands.as("b2"), col("b1.band") === col("b2.band") &&
             col("b1.sig") === col("b2.sig") && col("b1.doc_id") < col("b2.doc_id"))
@@ -622,7 +599,8 @@ object Dedup {
     * triangular join is the right shape. */
   def minhashMatrix(docs: DataFrame, groupCol: String, numHashes: Int = 8,
                     textCol: String = "text", k: Int = 3): DataFrame = {
-    val sig = persistTracked(minhashes(docs, numHashes, groupCol, textCol, k))
+    val sig = minhashes(docs, numHashes, groupCol, textCol, k)
+      .localCheckpoint(true)
     val a = sig.toDF("src_a" +: (0 until numHashes).map(i => s"__a$i"): _*)
     val b = sig.toDF("src_b" +: (0 until numHashes).map(i => s"__b$i"): _*)
     val agree = (0 until numHashes)
@@ -660,7 +638,8 @@ object Dedup {
   def minhashCalibration(docs: DataFrame, numHashes: Int = 8,
                          bandSize: Int = 2, idCol: String = "doc_id",
                          textCol: String = "text", k: Int = 3): DataFrame = {
-    val mh = persistTracked(minhashes(docs, numHashes, idCol, textCol, k))
+    val mh = minhashes(docs, numHashes, idCol, textCol, k)
+      .localCheckpoint(true)
     val bands = mh.select(col("doc_id"),
         explode(array(bandStructs(numHashes, bandSize): _*)).as("bs"))
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))

@@ -33,6 +33,15 @@ import org.apache.spark.sql.functions._
   */
 object LanguageModel {
 
+  /** A model the scorers read several times: a frame the caller already
+    * persisted or checkpointed as it is, a derived plan as an eager local
+    * checkpoint, so its training explode runs once. */
+  private def materialized(model: DataFrame): DataFrame =
+    if (model.storageLevel != org.apache.spark.storage.StorageLevel.NONE ||
+        model.queryExecution.logical
+          .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) model
+    else model.localCheckpoint(true)
+
   /** Corpus transitions: one row per n-gram occurrence, context = the
     * n-1 preceding tokens joined by single spaces. Documents shorter than
     * n tokens emit nothing. */
@@ -85,18 +94,14 @@ object LanguageModel {
     // the model is read three times (scoring join, context totals,
     // vocabulary) — when it is a DERIVED plan (trained in-session from a
     // corpus), each read re-runs the tokenize/transitions explode, so it
-    // persists through the shared tracked registry (release:
-    // Dedup.releaseIntermediateCaches). An earlier note measured "no win"
-    // from caching, but under the count-pruned bench basis that
+    // is checkpointed first ([[materialized]]). An earlier note measured
+    // "no win" from caching, but under the count-pruned bench basis that
     // measurement timed scan-only plans; the honest full-output basis
     // shows the recompute. Callers scoring many batches against one model
     // should still write it once and read it back — a parquet-backed
     // model is the production shape (scan-backed reads give pushdown +
     // accurate stats, and AQE sees real sizes for the broadcast decision).
-    val m =
-      if (model.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        model
-      else Dedup.persistTracked(model)
+    val m = materialized(model)
     val ctot = m.groupBy(col("context")).agg(sum(col("cnt")).as("__ctot"))
     val vocab = m.select(col("token")).distinct()
       .agg(count(lit(1)).as("__vocab"))
@@ -141,10 +146,7 @@ object LanguageModel {
                             addK: Double = 1.0, idCol: String = "doc_id",
                             textCol: String = "text"): DataFrame = {
     require(addK > 0, s"addK=$addK: smoothing mass must be positive")
-    val m =
-      if (model.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        model
-      else Dedup.persistTracked(model)
+    val m = materialized(model)
     val scal = m.agg(sum(col("cnt")).as("__tot"),
       count(lit(1)).as("__vocab"))
     val term: Column = round(
@@ -208,10 +210,7 @@ object LanguageModel {
   def scoreDocumentsKn(docs: DataFrame, model: DataFrame, n: Int = 2,
                        idCol: String = "doc_id",
                        textCol: String = "text"): DataFrame = {
-    val m =
-      if (model.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        model
-      else Dedup.persistTracked(model)
+    val m = materialized(model)
     val ctxStats = m.groupBy(col("context")).agg(
       sum(col("cnt")).as("__ctot"),
       sum(when(col("cnt") === 1, 1L).otherwise(0L)).as("__n1c"),
@@ -312,18 +311,18 @@ object LanguageModel {
                         addK: Double = 1.0, idCol: String = "doc_id",
                         textCol: String = "text",
                         langCol: String = "lang"): DataFrame = {
-    // read twice (tercile cuts + labeling) — persisted via the shared
-    // tracked registry or the whole scoring join runs double. Narrow
-    // (id, lang, ppx), but corpus-sized: callers at the 100 TB tier that
-    // cannot afford the cache should write it out and bucket it instead.
-    val scored = Dedup.persistTracked(
-      scoreDocuments(docs, model, n, addK, idCol, textCol)
-        .filter(col("n_trans") > 0)
-        .join(docs.select(col(idCol).as("doc_id"), col(langCol)),
-          Seq("doc_id"))
-        .select(col("doc_id"), col(langCol),
-          (-col("lm_score").cast("double") / col("n_trans").cast("double"))
-            .as("ppx")))
+    // read twice (tercile cuts + labeling) — checkpointed or the whole
+    // scoring join runs double. Narrow (id, lang, ppx), but corpus-sized:
+    // callers at the 100 TB tier that cannot afford the local blocks
+    // should write it out and bucket it instead.
+    val scored = scoreDocuments(docs, model, n, addK, idCol, textCol)
+      .filter(col("n_trans") > 0)
+      .join(docs.select(col(idCol).as("doc_id"), col(langCol)),
+        Seq("doc_id"))
+      .select(col("doc_id"), col(langCol),
+        (-col("lm_score").cast("double") / col("n_trans").cast("double"))
+          .as("ppx"))
+      .localCheckpoint(true)
     val cuts = scored.groupBy(col(langCol))
       .agg(percentile(col("ppx"), lit(1.0 / 3)).as("__c1"),
         percentile(col("ppx"), lit(2.0 / 3)).as("__c2"))

@@ -78,13 +78,11 @@ object Retrieval {
           .as("term"))
     // postings of query terms only — df over this subset equals df over
     // the full table (the semi-join keeps every posting of a kept term),
-    // and the vocabulary-wide aggregation never runs. Persisted through
-    // the shared tracked registry (it feeds both the df aggregation and
-    // the scoring join; callers release via
-    // [[Dedup.releaseIntermediateCaches]])
-    val dtq = Dedup.persistTracked(
-      dt.join(broadcast(qt.select(col("term")).distinct()),
-        Seq("term"), "left_semi"))
+    // and the vocabulary-wide aggregation never runs. Checkpointed: it
+    // feeds both the df aggregation and the scoring join
+    val dtq = dt.join(broadcast(qt.select(col("term")).distinct()),
+        Seq("term"), "left_semi")
+      .localCheckpoint(true)
     val dfreq = dtq.groupBy(col("term")).agg(count(lit(1)).as("df"))
     // (query_id, term, df): query-sized — the broadcast side of the one
     // corpus-touching join below

@@ -67,9 +67,8 @@ object SubstringDedup {
                       minCount: Int = 2): DataFrame = {
     require(minCount >= 2, s"minCount=$minCount: below 2 every gram matches")
     // occurrences feed BOTH the duplicated-gram aggregation and the join
-    // back — persist so tokenize/shingle/hash runs once, tracked in the
-    // shared registry (Dedup.releaseIntermediateCaches drops it)
-    val occ = Dedup.persistTracked(kgramOccurrences(docs, idCol, textCol, k))
+    // back — checkpointed so tokenize/shingle/hash runs once
+    val occ = kgramOccurrences(docs, idCol, textCol, k).localCheckpoint(true)
     // grams hit by the occurrence threshold; count(*) not count(distinct
     // doc): a passage pasted twice into ONE document is duplicated text
     val dup = occ.groupBy(col("gram"))

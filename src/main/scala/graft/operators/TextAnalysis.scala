@@ -107,8 +107,8 @@ object TextAnalysis {
     val tok = docs.select(col(idCol).as("doc_id"),
       posexplode(graft.functions.WordShingles.allShingles(col(textCol), 1))
         .as(Seq("pos", "tok")))
-    val freq = Dedup.persistTracked(
-      tok.groupBy(col("tok")).agg(count(lit(1)).as("__f")))
+    val freq = tok.groupBy(col("tok")).agg(count(lit(1)).as("__f"))
+      .localCheckpoint(true)
     val total = freq.agg(sum(col("__f")).as("__n"))
     val ratio = col("__f").cast("double") / col("__n").cast("double")
     val pKeep = least(lit(1.0), sqrt(lit(t) / ratio) + lit(t) / ratio)
@@ -175,11 +175,12 @@ object TextAnalysis {
       .partitionBy(pfx).orderBy(col("tok"))
       .rowsBetween(org.apache.spark.sql.expressions.Window
         .unboundedPreceding, -1)
-    val intervals = Dedup.persistTracked(freq
+    val intervals = freq
       .withColumn("__incum", coalesce(sum(col("__wq")).over(wIn), lit(0L)))
       .join(broadcast(bases), pfx === col("__pfx"))
       .select(col("tok"), (col("__base") + col("__incum")).as("__lo"),
-        (col("__base") + col("__incum") + col("__wq")).as("__hi")))
+        (col("__base") + col("__incum") + col("__wq")).as("__hi"))
+      .localCheckpoint(true)
     val total = intervals.agg(max(col("__hi")).as("__w"))
     // bucket count ~ vocabulary size (a vocab-sized count job — the
     // model-scale driver boundary): a FIXED small count would make every

@@ -2031,11 +2031,8 @@ object TrainingDataQueries extends QueryPack {
     // funnel-exactness evidence).
     "bm25_topk" -> ((s, dir) => {
       val q = s.createDataFrame(Bm25QuerySet).toDF("query_id", "text")
-      val out = Retrieval.bm25TopK(Tables.documents(s, dir), q, k = Bm25K,
+      Retrieval.bm25TopK(Tables.documents(s, dir), q, k = Bm25K,
         subPartitions = 4)
-        .localCheckpoint(true)
-      graft.operators.Dedup.releaseIntermediateCaches()
-      out
     }),
 
     // DPR-style hard-negative mining (L126): top-k BM25 docs that are NOT
@@ -2057,11 +2054,8 @@ object TrainingDataQueries extends QueryPack {
         .join(broadcast(qn), Seq("query_id"))
         .filter(col("__nm") === col("__nq"))
         .select(col("query_id"), col("doc_id"))
-      val out = Retrieval.hardNegatives(docs, q, positives, k = Bm25K,
+      Retrieval.hardNegatives(docs, q, positives, k = Bm25K,
         subPartitions = 4)
-        .localCheckpoint(true)
-      graft.operators.Dedup.releaseIntermediateCaches()
-      out
     }),
 
     // Excess-loss data selection (L127, the RHO-loss signal at the
@@ -2792,22 +2786,16 @@ object TrainingDataQueries extends QueryPack {
     // two-phase cumsum intervals + bucketized equi-join probe.
     "negative_samples" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val out = TextAnalysis.negativeSamples(
+      TextAnalysis.negativeSamples(
         TextAnalysis.skipGramPairs(docs, window = 2), docs, k = 2)
-        .localCheckpoint(true)
-      Dedup.releaseIntermediateCaches()
-      out
     }),
 
     // Frequency-based token subsampling (L88): the word2vec t-threshold
     // — stopwords thin, rare tokens always survive; deterministic
     // per-occurrence md5 draws against a count-derived keep probability.
     "token_subsample" -> ((s, dir) => {
-      val out = TextAnalysis.subsampleTokens(Tables.documents(s, dir),
+      TextAnalysis.subsampleTokens(Tables.documents(s, dir),
         t = 1e-3)
-        .localCheckpoint(true)
-      Dedup.releaseIntermediateCaches()
-      out
     }),
 
     // Skip-gram pair counts (L87): word2vec-style embedding training
@@ -3170,10 +3158,7 @@ object TrainingDataQueries extends QueryPack {
       val grouped = Tables.documents(s, dir).select(
         concat(lit("s"), expr("doc_id div 100").cast("string")).as("grp"),
         col("text"))
-      val out = Dedup.minhashMatrix(grouped, "grp")
-        .localCheckpoint(true)
-      Dedup.releaseIntermediateCaches()
-      out
+      Dedup.minhashMatrix(grouped, "grp")
     }),
 
     // PMI collocations (L141): top-30 bigrams by count with the
@@ -3236,10 +3221,7 @@ object TrainingDataQueries extends QueryPack {
     // MinHash estimate and the mean exact Jaccard of the candidate pairs
     // that landed there.
     "dedup_minhash_calibration" -> ((s, dir) => {
-      val out = Dedup.minhashCalibration(Tables.documents(s, dir))
-        .localCheckpoint(true)
-      Dedup.releaseIntermediateCaches()
-      out
+      Dedup.minhashCalibration(Tables.documents(s, dir))
     }),
 
     // URL-parallel bitext alignment (L136): the ParaCrawl baseline —
@@ -3467,11 +3449,8 @@ object TrainingDataQueries extends QueryPack {
     // Containment near-dup pairs: |A∩B| / min(|A|,|B|) — the subset-pair
     // detector Jaccard under-scores. Same postings machinery, DF guard on.
     "dedup_containment" -> ((s, dir) => {
-      val out = Dedup.containmentPairs(Tables.documents(s, dir),
+      Dedup.containmentPairs(Tables.documents(s, dir),
         threshold = 0.6, maxShingleDf = Some(1000))
-        .localCheckpoint(true)
-      Dedup.releaseIntermediateCaches()
-      out
     }),
 
     // Same pair set through the ASYMMETRIC prefix engine (small-side
@@ -3827,10 +3806,10 @@ object TrainingDataQueries extends QueryPack {
         .localCheckpoint(true)
       val bench = fixed.filter(col("doc_id") % 97 === 0)
       // stage 6: detectors → components → keep-best (longest member wins).
-      // The pool's hashed 3-gram postings are shingled ONCE (tracked cache)
-      // and shared by the Jaccard detector here and the decontamination leg
-      // below — the two legs otherwise re-tokenize the same checkpointed
-      // text.
+      // The pool's hashed 3-gram postings are shingled ONCE (an eager
+      // checkpoint) and shared by reference by the Jaccard detector here
+      // and the decontamination leg below — the two legs otherwise
+      // re-tokenize the same checkpointed text.
       val poolGrams = Dedup.cacheHashedPostings(pool, k = 3)
       // PREFIX-FILTERED engine (L75), not the capped posting join: the
       // composed oracle's jp CTE is the EXACT jaccard, which the DF-capped
@@ -3881,7 +3860,7 @@ object TrainingDataQueries extends QueryPack {
         train.select(col("doc_id"), col("lang")),
         strataCol = "lang", keyCol = "doc_id", salt = "cpep")
         .select(col("doc_id"), col("epoch_rank"), col("order_key"))
-      val out = split
+      split
         .select(col("doc_id"), col("domain"), col("lang"), col("plang"),
           col("n_tokens"),
           md5(col("text").cast("binary")).as("text_md5"), col("split"))
@@ -3896,9 +3875,6 @@ object TrainingDataQueries extends QueryPack {
           coalesce(col("pos_in_shard"), lit(-1L)).as("pos_in_shard"),
           coalesce(col("epoch_rank"), lit(-1L)).as("epoch_rank"),
           coalesce(col("order_key"), lit(-1.0)).as("order_key"))
-        .localCheckpoint(true)
-      Dedup.releaseIntermediateCaches()
-      out
     }),
 
     // FineWeb-shaped web-curation lead (L160): a real crawl run LEADS

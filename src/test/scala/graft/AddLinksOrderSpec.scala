@@ -63,18 +63,6 @@ class AddLinksOrderSpec extends AnyFunSuite {
     }
   }
 
-  test("linked-data detection sees resolved references, not just col()") {
-    import spark.implicits._
-    val frame = Seq(Tuple1(Map("k" -> "v"))).toDF("data")
-      .select(col("data").as("__l_data"))
-    // UnresolvedAttribute shape (functions.col)
-    assert(AddLinks.refersToLinkedData(max(col("__l_data"))))
-    // resolved AttributeReference shape (df("__l_data")) — pruning this
-    // would fail analysis instead of keeping the map in the shuffle
-    assert(AddLinks.refersToLinkedData(max(frame("__l_data"))))
-    assert(!AddLinks.refersToLinkedData(max(col("other"))))
-  }
-
   test("full-map arrays stay sorted too (default payload)") {
     val (base, linked) = fixtures()
     val out = AddLinks.linkMatches(base, linked, link, alertIdLength = 6)

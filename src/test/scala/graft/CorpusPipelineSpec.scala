@@ -144,7 +144,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
         .as[String].collect()(0)
     }
     assert(digest(out) === digest(runCurationPipeline()))
-    Dedup.releaseIntermediateCaches()
   }
 
   /** The web-crawl front half the round-9 additions enable, chained:

@@ -219,6 +219,21 @@ class DataPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally res.release()
   }
 
+  test("a link to a form that was not given fails naming the link and form") {
+    // a streamed micro-batch carries only its own form; a cross-form link
+    // must say which form it misses, not die on a bare map lookup
+    val linkCfg = cfg.copy(
+      links = Seq(LinkDef("followups", "case", "demo_case", "demo_followup",
+        Seq("pt./pid"), Seq("pid"), Seq("match"), "visit_date", orderByIsDate = true)))
+    val caseForm = Seq(
+      ("c1", caseRow("female") + ("pt./pid" -> "101"))).toDF("uuid", "data")
+    val e = intercept[IllegalArgumentException] {
+      DataPipeline.process(spark, Map("demo_case" -> caseForm), linkCfg)
+    }
+    assert(e.getMessage.contains("link followups reads form demo_followup"))
+    assert(e.getMessage.contains("demo_case"))
+  }
+
   test("register multiple_row splits into uuid-suffixed sub-records") {
     val regs = result.data.filter(col("type") === "register")
       .select(col("uuid"), element_at(col("variables"), "reg_1").as("v"),

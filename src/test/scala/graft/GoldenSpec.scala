@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{CacheProbe, Column, DataFrame}
 import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Dedup
 
 /** Every `SparkEntry.queries` gate at sf0.001 against its committed golden
   * row: row count, a hash of the schema's names and types, and an
@@ -20,7 +19,8 @@ import graft.operators.Dedup
   * The same pass pins that no gate's plan ends in a global sort (a `Sort`
   * over a range-partitioning exchange): gate row order is unspecified, and
   * a root range sort costs a sampling job and an exchange that no consumer
-  * reads. */
+  * reads, and that no gate leaves an entry in the session's cache: a gate
+  * owns its intermediates, so nothing outlives the frame it returns. */
 class GoldenSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
   private val Dir = "/root/testdata/sf0.001"
@@ -66,13 +66,19 @@ class GoldenSpec extends AnyFunSuite {
     case _ => false
   }
 
-  /** One pass over every gate: its golden line and whether its plan ends
-    * in a global sort. A gate that throws gets the line
+  /** What one gate's pass observed: its golden line, whether its plan
+    * ends in a global sort, and how many cache entries it left behind. */
+  private final class Observed(val line: String, val globalSort: Boolean,
+                               val cacheEntries: Int)
+
+  /** One pass over every gate. A gate that throws gets the line
     * `name,error,<message>`, so it shows as an ordinary mismatch and the
-    * rest of the table still prints. */
-  private lazy val observed: Map[String, (String, Boolean)] =
+    * rest of the table still prints. The cache is cleared only after its
+    * entries are counted, so each gate is charged only its own. */
+  private lazy val observed: Map[String, Observed] = {
+    spark.catalog.clearCache()
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val line = try {
+      val (line, sorted) = try {
         val df = fn(spark, Dir)
         val (rows, hash) = fingerprint(df)
         s"$name,$rows,${schemaHash(df)},$hash" ->
@@ -80,12 +86,12 @@ class GoldenSpec extends AnyFunSuite {
       } catch {
         case e: Exception =>
           s"$name,error,${String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")}" -> false
-      } finally {
-        spark.catalog.clearCache()
-        Dedup.releaseIntermediateCaches(blocking = true)
       }
-      name -> line
+      val entries = CacheProbe.entries(spark)
+      spark.catalog.clearCache()
+      name -> new Observed(line, sorted, entries)
     }.toMap
+  }
 
   private val Header = "gate,rows,schema,hash"
 
@@ -94,10 +100,10 @@ class GoldenSpec extends AnyFunSuite {
       getClass.getResource(GoldenFile.stripPrefix("src/test/resources")), "UTF-8")
     val golden = try src.getLines().drop(1).filter(_.nonEmpty).toSeq
       .map(l => l.takeWhile(_ != ',') -> l).toMap finally src.close()
-    val table = (Header +: observed.toSeq.sortBy(_._1).map(_._2._1)).mkString("\n")
+    val table = (Header +: observed.toSeq.sortBy(_._1).map(_._2.line)).mkString("\n")
     val diffs = (golden.keySet ++ observed.keySet).toSeq.sorted.flatMap { g =>
       val want = golden.getOrElse(g, "(no golden)")
-      val got = observed.get(g).map(_._1).getOrElse("(no gate)")
+      val got = observed.get(g).map(_.line).getOrElse("(no gate)")
       if (want == got) None else Some(s"  golden:   $want\n  observed: $got")
     }
     if (diffs.nonEmpty)
@@ -106,7 +112,13 @@ class GoldenSpec extends AnyFunSuite {
   }
 
   test("no gate's plan ends in a global sort") {
-    val sorted = observed.collect { case (g, (_, true)) => g }.toSeq.sorted
+    val sorted = observed.collect { case (g, o) if o.globalSort => g }.toSeq.sorted
     if (sorted.nonEmpty) fail(s"gates ending in a global sort: ${sorted.mkString(", ")}")
+  }
+
+  test("no gate leaves a cache entry") {
+    val leaks = observed.collect { case (g, o) if o.cacheEntries > 0 =>
+      s"$g (${o.cacheEntries})" }.toSeq.sorted
+    if (leaks.nonEmpty) fail(s"gates leaving cache entries: ${leaks.mkString(", ")}")
   }
 }

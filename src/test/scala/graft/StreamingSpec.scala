@@ -1061,7 +1061,6 @@ class StreamingSpec extends AnyFunSuite {
     val want = LanguageModel.perplexityBuckets(pool, model)
       .as[(Long, String, Double, String)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    graft.operators.Dedup.releaseIntermediateCaches()
     val input = MemoryStream[(Long, String, String)]
     val q = LanguageModel.bucketsStateless(
         input.toDF().toDF("doc_id", "lang", "text"), model, cuts)
@@ -1261,7 +1260,6 @@ class StreamingSpec extends AnyFunSuite {
         strataCol = "lang", keyCol = "doc_id", salt = "cs")
       .as[(Long, String, Long, Double)].collect()
       .groupBy(_._2).map { case (l, rs) => l -> rs.sortBy(_._3).map(_._1).toSeq }
-    graft.operators.Dedup.releaseIntermediateCaches()
     assert(want.keySet === Set(1L, 2L, 3L, 6L, 8L, 9L)) // the designed survivors
     // ——— the STREAM: same raw docs across two micro-batches
     val input = MemoryStream[(Long, String, String, String)]
@@ -1387,7 +1385,6 @@ class StreamingSpec extends AnyFunSuite {
       .localCheckpoint(true)
     val fits = CorpusStream.fit(clean, bench, k = 3,
       maxDocShare = 0.5, minDomainDocs = 3)
-    graft.operators.Dedup.releaseIntermediateCaches()
     // expected = the SAME chain run as a batch frame (curate is pure
     // projections + broadcast joins, so it executes on batch input too;
     // stream ≡ batch is the twin spec's pinned contract)

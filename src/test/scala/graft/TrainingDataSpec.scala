@@ -840,19 +840,48 @@ class TrainingDataSpec extends AnyFunSuite {
     assert(out === Map(1L -> 1L, 2L -> 1L))
   }
 
-  test("releaseIntermediateCaches drops the pair pipelines' parked caches") {
-    val d = docs(1L -> "a b c d e f", 2L -> "a b c d e f", 3L -> "x y z w q r")
-    Dedup.releaseIntermediateCaches() // drain anything parked by other specs
-    // capped jaccard + uncapped jaccard + uncapped LSH each park one cache
-    Dedup.jaccardPairs(d, 0.5, maxShingleDf = Some(10)).count()
-    Dedup.jaccardPairs(d, 0.5).count()
-    Dedup.minhashLshPairs(d).count()
-    assert(Dedup.releaseIntermediateCaches(blocking = true) === 3)
-    assert(Dedup.releaseIntermediateCaches() === 0)
-    // released frames recompute from source — correctness is unaffected
-    assert(Dedup.jaccardPairs(d, 0.5, maxShingleDf = Some(10)).count() ===
-      Dedup.jaccardPairs(d, 0.5).count())
-    Dedup.releaseIntermediateCaches()
+  test("curation operators leave no cache entry behind") {
+    // each call below forces one intermediate that several branches read;
+    // it is an eager local checkpoint the returned frame owns, so no call
+    // adds an entry to the session's cache and a second call (nothing
+    // served from a cache) returns the same rows
+    val d = docs(1L -> "a b c d e f g", 2L -> "a b c d e f g",
+      3L -> "x y z w q r s", 4L -> "a b c d e f h", 5L -> "the the the cat")
+    val langed = d.withColumn("lang", lit("en"))
+    val grouped = d.select(
+      concat(lit("s"), (col("doc_id") % 2).cast("string")).as("grp"),
+      col("text"))
+    val q = Seq((0, "a b"), (1, "x cat")).toDF("query_id", "text")
+    val sites: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "cacheHashedPostings" -> (() => Dedup.cacheHashedPostings(d)),
+      "jaccardPairs capped" -> (() =>
+        Dedup.jaccardPairs(d, 0.5, maxShingleDf = Some(10))),
+      "jaccardPairs" -> (() => Dedup.jaccardPairs(d, 0.5)),
+      "minhashLshPairs" -> (() => Dedup.minhashLshPairs(d)),
+      "minhashMatrix" -> (() => Dedup.minhashMatrix(grouped, "grp")),
+      "minhashCalibration" -> (() => Dedup.minhashCalibration(d)),
+      "subsampleTokens" -> (() => TextAnalysis.subsampleTokens(d)),
+      "negativeSamples" -> (() => TextAnalysis.negativeSamples(
+        TextAnalysis.skipGramPairs(d, window = 2), d, k = 2)),
+      "scoreDocuments" -> (() => LanguageModel.scoreDocuments(d,
+        LanguageModel.ngramCounts(d))),
+      "scoreDocumentsUnigram" -> (() => LanguageModel.scoreDocumentsUnigram(d,
+        LanguageModel.unigramCounts(d))),
+      "scoreDocumentsKn" -> (() => LanguageModel.scoreDocumentsKn(d,
+        LanguageModel.ngramCounts(d))),
+      "perplexityBuckets" -> (() => LanguageModel.perplexityBuckets(langed,
+        LanguageModel.ngramCounts(langed))),
+      "bm25TopK" -> (() => Retrieval.bm25TopK(d, q, k = 2)),
+      "duplicatedSpans" -> (() => SubstringDedup.duplicatedSpans(d, k = 3)))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val before = org.apache.spark.sql.CacheProbe.entries(spark)
+    sites.foreach { case (name, site) =>
+      val first = rows(site())
+      assert(org.apache.spark.sql.CacheProbe.entries(spark) === before,
+        s"$name left a cache entry")
+      assert(rows(site()) === first, s"$name: a second call differs")
+    }
   }
 
   test("gopher rules: each tripwire fails exactly the offending doc") {
@@ -1527,7 +1556,6 @@ class TrainingDataSpec extends AnyFunSuite {
     val funneled = Retrieval.bm25TopK(docs, qdf, k = 3, subPartitions = 4)
       .as[(Int, Int, Long, Long, Long)].collect().toSeq.sorted
     assert(funneled === got)
-    graft.operators.Dedup.releaseIntermediateCaches()
   }
 
   test("semdedup: dropped rows always have a lower-id in-cell witness") {
@@ -1757,7 +1785,6 @@ class TrainingDataSpec extends AnyFunSuite {
     val out = TextAnalysis.negativeSamples(pairs, d, k = 3)
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2),
         r.getInt(4), r.getString(5)))
-    Dedup.releaseIntermediateCaches()
     // exactly one negative per (pair, j): the interval probe is total
     assert(out.length === nPairs * 3)
     assert(out.map(x => (x._1, x._2, x._3, x._4)).distinct.length === out.length)
@@ -1770,7 +1797,6 @@ class TrainingDataSpec extends AnyFunSuite {
       TextAnalysis.skipGramPairs(d, window = 2), d, k = 3)
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2),
         r.getInt(4), r.getString(5)))
-    Dedup.releaseIntermediateCaches()
     assert(out.sortBy(_.toString).toSeq === out2.sortBy(_.toString).toSeq)
   }
 
@@ -1780,7 +1806,6 @@ class TrainingDataSpec extends AnyFunSuite {
     val text = (Seq.fill(400)("the") :+ "rare").mkString(" ")
     val out = TextAnalysis.subsampleTokens(docs(0L -> text), t = 1e-3)
       .collect().map(r => r.getString(2))
-    Dedup.releaseIntermediateCaches()
     assert(out.contains("rare"))
     val nThe = out.count(_ == "the")
     // P(keep) for ratio 400/401 at t=1e-3 is ~0.033 — all 400 surviving
@@ -1789,7 +1814,6 @@ class TrainingDataSpec extends AnyFunSuite {
     // determinism: a second run is bit-identical
     val out2 = TextAnalysis.subsampleTokens(docs(0L -> text), t = 1e-3)
       .collect().map(r => r.getString(2))
-    Dedup.releaseIntermediateCaches()
     assert(out.toSeq === out2.toSeq)
   }
 
@@ -2759,7 +2783,6 @@ class TrainingDataSpec extends AnyFunSuite {
           .toSeq
       val base = canon(Dedup.jaccardPairs(d, t))
       val prefix = canon(Dedup.jaccardPairsPrefix(d, t))
-      Dedup.releaseIntermediateCaches()
       Prop(prefix == base) :| s"t=$t base=$base prefix=$prefix texts=$texts"
     }
     val res = SCTest.check(
@@ -2783,7 +2806,6 @@ class TrainingDataSpec extends AnyFunSuite {
       .as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
     assert(pairs(0.5) === Seq((1L, 2L, 1.0), (4L, 5L, 1.0)))
     assert(pairs(1.0) === Seq((1L, 2L, 1.0), (4L, 5L, 1.0)))
-    Dedup.releaseIntermediateCaches()
   }
 
   test("prefix-filtered jaccard over a shared postings frame equals the direct path") {
@@ -2805,7 +2827,6 @@ class TrainingDataSpec extends AnyFunSuite {
       grams = Some(Dedup.cacheHashedPostings(d, k = 3))))
     assert(shared === direct)
     assert(direct.nonEmpty) // the near-dup trio must actually pair
-    Dedup.releaseIntermediateCaches()
   }
 
   test("prefix-filtered containment equals the posting join on random corpora (property)") {
@@ -2839,7 +2860,6 @@ class TrainingDataSpec extends AnyFunSuite {
           .toSeq
       val base = canon(Dedup.containmentPairs(d, t))
       val prefix = canon(Dedup.containmentPairsPrefix(d, t))
-      Dedup.releaseIntermediateCaches()
       Prop(prefix == base) :| s"t=$t base=$base prefix=$prefix texts=$texts"
     }
     val res = SCTest.check(
@@ -2867,7 +2887,6 @@ class TrainingDataSpec extends AnyFunSuite {
       .select(col("doc_a"), col("doc_b"), col("containment"))
       .as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
     assert(shared === pairs(0.6))
-    Dedup.releaseIntermediateCaches()
   }
 
   test("skew guards are identity when caps exceed observed maxima") {
@@ -4325,7 +4344,6 @@ class TrainingDataSpec extends AnyFunSuite {
       maxShingleDf = Some(100)).select("doc_a", "doc_b")
       .as[(Long, Long)].collect().toSeq
     assert(capped === Seq((1L, 2L)))
-    Dedup.releaseIntermediateCaches()
   }
 
   test("char entropy: hand-computed micro-nat sums, degenerate and empty docs") {
@@ -5175,7 +5193,6 @@ class TrainingDataSpec extends AnyFunSuite {
     val pos = Seq((0, 1L), (0, 2L)).toDF("query_id", "doc_id")
     val negs = Retrieval.hardNegatives(corpus, q, pos, k = 2)
       .collect().map(r => (r.getInt(1), r.getLong(2)))
-    Dedup.releaseIntermediateCaches()
     // both positives outscore both negatives (two matched terms vs one) —
     // a filter AFTER top-2 would return nothing; ranks re-number 1..k
     assert(negs.toSeq === Seq((1, 3L), (2, 4L)))
@@ -5185,7 +5202,6 @@ class TrainingDataSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(1), r.getLong(2))).toSeq
     val viaTop = Retrieval.bm25TopK(corpus, q, k = 3)
       .collect().map(r => (r.getInt(1), r.getLong(2))).toSeq
-    Dedup.releaseIntermediateCaches()
     assert(viaNeg === viaTop)
   }
 
