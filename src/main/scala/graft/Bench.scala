@@ -91,6 +91,9 @@ import org.apache.spark.sql.SparkSession
   * device itself; with our own block IO in memory, sustained device
   * traffic during reps is external by construction and >1 rep above
   * [[IoTaintMs]] stamps `tainted_io` (`io_max_ms` records the peak).
+  *
+  * A query that throws is left out of `queries` and every total, named in
+  * `failed` (stdout line and detail), and the run exits 1 after the suite.
   */
 object Bench {
 
@@ -243,9 +246,9 @@ object Bench {
                               times: Seq[Double], exts: Seq[Double],
                               ios: Seq[Long], mem: Seq[Double])
 
-  private final case class SuiteRun(results: Seq[QR], foreign: Seq[Long],
-                                    extMax: Double, extHits: Int,
-                                    ioMax: Long, ioHits: Int)
+  private final case class SuiteRun(results: Seq[QR], failed: Seq[String],
+                                    foreign: Seq[Long], extMax: Double,
+                                    extHits: Int, ioMax: Long, ioHits: Int)
 
   /** Per-JVM tmpfs scratch for shuffle files and checkpoint/cache disk
     * spill. The bench measures COMPUTE; routing its own block IO to
@@ -326,7 +329,8 @@ object Bench {
     var extHits = 0   // reps above the threshold (1 transient spike ≠ taint)
     var ioSeen = 0L   // max per-rep weighted device-IO ms observed
     var ioHits = 0    // reps above IoTaintMs
-    val results = selected.map { case (name, fn) =>
+    val failed = Vector.newBuilder[String]
+    val results = selected.flatMap { case (name, fn) =>
       // settle before each query (GC itself happens per rep inside once())
       Thread.sleep(100)
       foreignSeen ++= foreignJvms()
@@ -349,37 +353,42 @@ object Bench {
         // the plan optimized for its FULL output — every column computed,
         // every join real — which is what the verify dump and any real
         // consumer pay, minus sink IO.
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case _: Throwable => () }
+        fn(spark, sfDir).queryExecution.toRdd.count()
         val t = (System.nanoTime() - t0) / 1e9
         val ext = extCores(j0, cpuJiffies(), t)
         val io = math.max(0L, ioWeightedMs() - io0)
         (t, ext, io)
       }
-      val (warm, _, _) = once()
-      // large plans are often STILL JIT-compiling during their first timed
-      // runs when they execute early in the JVM's life (observed: a 5 s
-      // first contact followed by 2.9→2.3→1.8 s timed runs — the median
-      // lands mid-warmup and swings >30% between paired benches). One
-      // extra warm pass for anything whose first contact was slow keeps
-      // the medians attributable to plans.
-      val warm2 = if (warm > 2.0) Some(once()._1) else None
-      val reps = Seq.fill(timedRuns)(once())
-      val times = reps.map(_._1)
-      val exts = reps.map(_._2)
-      val ios = reps.map(_._3)
-      extSeen = math.max(extSeen, if (exts.isEmpty) 0.0 else exts.max)
-      extHits += exts.count(_ > ExtCoresTaint)
-      ioSeen = math.max(ioSeen, if (ios.isEmpty) 0L else ios.max)
-      ioHits += ios.count(_ > IoTaintMs)
-      val median = times.sorted.apply(times.length / 2)
-      val minT = times.min
-      System.err.println(
-        f"[bench] $name%-28s warm=$warm%7.2fs runs=${times.map(t => f"$t%.2f").mkString(",")} min=$minT%7.2fs median=$median%7.2fs ext=${exts.map(e => f"$e%.1f").mkString(",")} io=${ios.mkString(",")}ms")
-      QR(name, ms(minT), ms(median), ms(warm), warm2.map(ms),
-        times.map(ms), exts.map(ms), ios, memMB())
+      try {
+        val (warm, _, _) = once()
+        // large plans are often STILL JIT-compiling during their first timed
+        // runs when they execute early in the JVM's life (observed: a 5 s
+        // first contact followed by 2.9→2.3→1.8 s timed runs — the median
+        // lands mid-warmup and swings >30% between paired benches). One
+        // extra warm pass for anything whose first contact was slow keeps
+        // the medians attributable to plans.
+        val warm2 = if (warm > 2.0) Some(once()._1) else None
+        val reps = Seq.fill(timedRuns)(once())
+        val times = reps.map(_._1)
+        val exts = reps.map(_._2)
+        val ios = reps.map(_._3)
+        extSeen = math.max(extSeen, if (exts.isEmpty) 0.0 else exts.max)
+        extHits += exts.count(_ > ExtCoresTaint)
+        ioSeen = math.max(ioSeen, if (ios.isEmpty) 0L else ios.max)
+        ioHits += ios.count(_ > IoTaintMs)
+        val median = times.sorted.apply(times.length / 2)
+        val minT = times.min
+        System.err.println(
+          f"[bench] $name%-28s warm=$warm%7.2fs runs=${times.map(t => f"$t%.2f").mkString(",")} min=$minT%7.2fs median=$median%7.2fs ext=${exts.map(e => f"$e%.1f").mkString(",")} io=${ios.mkString(",")}ms")
+        Some(QR(name, ms(minT), ms(median), ms(warm), warm2.map(ms),
+          times.map(ms), exts.map(ms), ios, memMB()))
+      } catch { case e: Throwable => // named, not timed
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
+        None
+      }
     }
-    SuiteRun(results, foreignSeen.toSeq, extSeen, extHits, ioSeen, ioHits)
+    SuiteRun(results, failed.result(), foreignSeen.toSeq, extSeen, extHits, ioSeen, ioHits)
   }
 
   private def queriesJson(rs: Seq[QR], f: QR => Double): String =
@@ -474,8 +483,9 @@ object Bench {
       s""""tainted_io":$ioTainted,"io_max_ms":${run.ioMax}"""
     val qs = queriesJson(run.results, _.min)
     val qsMed = queriesJson(run.results, _.median)
+    val failedJs = failedJson(run.failed)
     val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""value_median":$totalMed,"queries_median":$qsMed,""" +
+      s""""value_median":$totalMed,"queries_median":$qsMed,"failed":$failedJs,""" +
       s""""runs":${runsJson(run.results)},"loadavg":$load,$taints,""" +
       s""""foreign_jvms":[${foreign.mkString(",")}],"forked":false,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
@@ -486,10 +496,24 @@ object Bench {
     // and left the artifact `parsed: null`; the map lives in the detail
     // file and BENCH_BEST). Headline + taints + detail pointer ≈ 300 B.
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""value_median":$totalMed,"n_queries":${run.results.size},$taints,""" +
+      s""""value_median":$totalMed,"n_queries":${run.results.size},""" +
+      s""""failed":$failedJs,$taints,""" +
       s""""detail":"$detailPath","sf":"$sfDir"}""")
     spark.stop()
+    // a forked child exits 0 with its failures in the detail file: the
+    // parent merges them and exits 1, instead of re-running the family
+    if (!isChild) exitIfFailed(run.failed)
   }
+
+  private def failedJson(names: Seq[String]): String =
+    names.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** As in Verify: after the whole suite, name the failed gates, exit 1. */
+  private def exitIfFailed(failed: Seq[String]): Unit =
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
 
   /** Forked-mode orchestrator: split the suite into alphabetical families
     * of [[FamilySize]], run each in a fresh child JVM (same flags and
@@ -520,6 +544,7 @@ object Bench {
     val childExits = Vector.newBuilder[Int]
     val familyTotals = scala.collection.mutable.Map.empty[Int, Seq[Double]]
     var fallbackResults = Vector.empty[QR] // families whose child died
+    var fallbackFailed = Vector.empty[String]
     var fallbackTaints = (false, false, 0.0) // (foreign, ext, extMax)
     var fallbackIo = (false, 0L) // (ioTainted, ioMax)
     // SPARK_GRAFT_BENCH_JVMS=N (default 1): run each family in N fresh
@@ -617,6 +642,7 @@ object Bench {
           val run = runSuite(spark, sfDir, sel, timedRuns)
           spark.stop()
           fallbackResults ++= run.results
+          fallbackFailed ++= run.failed
           fallbackTaints = (fallbackTaints._1 || run.foreign.nonEmpty,
             fallbackTaints._2 || run.extHits > 1,
             math.max(fallbackTaints._3, run.extMax))
@@ -652,6 +678,12 @@ object Bench {
         case JArray(xs) => xs.map(x => dbl(x).toLong); case _ => Nil
       }
     }.distinct.sorted
+    val failed = (docs.flatMap { case (_, j, _) =>
+      j \ "failed" match {
+        case JArray(xs) => xs.collect { case JString(n) => n }; case _ => Nil
+      }
+    } ++ fallbackFailed).sorted
+    val failedJs = failedJson(failed)
     val extTainted = docs.exists { case (_, j, _) => bool(j, "tainted_ext") } ||
       fallbackTaints._2
     val foreignTainted = foreign.nonEmpty || fallbackTaints._1
@@ -686,7 +718,7 @@ object Bench {
       s""""tainted_load":$loadTainted,"tainted_ext":$extTainted,"ext_max":${ms(extMax)},""" +
       s""""tainted_io":$ioTainted,"io_max_ms":$ioMax"""
     val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""value_median":$totalMed,"queries_median":$qsMed,""" +
+      s""""value_median":$totalMed,"queries_median":$qsMed,"failed":$failedJs,""" +
       s""""runs":$runsStr,"loadavg":$load,$taints,""" +
       s""""foreign_jvms":[${foreign.mkString(",")}],""" +
       s""""forked":true,"families":${families.size},"jvm_samples":$jvmSamples,""" +
@@ -698,7 +730,9 @@ object Bench {
     // compact stdout line — see mainInProcess: the per-query map is in
     // the detail artifact; the tail-captured line must stay short
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""value_median":$totalMed,"n_queries":${qMin.size},$taints,""" +
+      s""""value_median":$totalMed,"n_queries":${qMin.size},""" +
+      s""""failed":$failedJs,$taints,""" +
       s""""detail":"$detailPath","sf":"$sfDir"}""")
+    exitIfFailed(failed)
   }
 }

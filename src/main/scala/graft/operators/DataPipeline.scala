@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.config._
 import graft.functions.{EpiWeek, MapResolver, VariableCompiler}
 import graft.functions.EpiWeek.YearStartPolicy
@@ -19,12 +18,12 @@ import graft.functions.EpiWeek.YearStartPolicy
   * the in-plan DataFrames directly, so no barrier cuts the plan.
   *
   * The per-type programs union into one frame of coded rows, which
-  * [[process]] persists: `data` and `disregarded` are two filters over that
-  * single evaluation. The first action on either output runs the pipeline
-  * once and fills the cache; every later action (the second sink, an
-  * `isEmpty` probe) reads the cached batches instead of re-planning and
-  * re-running QC, visit control, links, the code catalog and the location
-  * joins. The [[Result]] owns that cache until [[Result.release]].
+  * [[process]] evaluates once, in one job, as an eager local checkpoint:
+  * `data` and `disregarded` are two filters over it, so every action on
+  * either output (the sinks, an `isEmpty` probe) scans the checkpoint's
+  * blocks instead of re-planning and re-running QC, visit control, links,
+  * the code catalog and the location joins. The blocks belong to the
+  * returned [[Result]] and go when it does; no caller releases anything.
   */
 object DataPipeline {
 
@@ -49,40 +48,15 @@ object DataPipeline {
         * fields back off the pipeline output. */
       retainRawData: Boolean = true)
 
-  /** The outputs of one [[process]] call, both filters over the same
-    * persisted frame of coded rows (`MEMORY_AND_DISK`).
-    *
-    * Contract: the caller runs its actions on `data` and `disregarded`, in
-    * any order and as many as it likes, then calls [[release]] exactly once
-    * when it needs neither output any more (in a `finally` where the actions
-    * can throw). `release` unregisters the frame from the session's cache
-    * and frees its blocks. Do not run actions on either output after
-    * `release`: they would refill the cache outside the session's cache
-    * registry. Each `process` call persists its own frame: Spark's cache
-    * matches frames by analyzed plan, so each frame is [[numbered]], and a
-    * later `process` over the same inputs evaluates afresh instead of
-    * reading an unreleased `Result`'s rows. An unreleased `Result` keeps
-    * its blocks until the session ends. */
-  final class Result private[DataPipeline] (shared: DataFrame) {
-    val data: DataFrame = shared.filter(!col("disregard")).drop("disregard")
-    val disregarded: DataFrame = shared.filter(col("disregard")).drop("disregard")
-    def release(): Unit = shared.unpersist()
+  /** The outputs of one [[process]] call: two filters over its checkpoint
+    * of coded rows. */
+  final class Result private[DataPipeline] (coded: DataFrame) {
+    val data: DataFrame = coded.filter(!col("disregard")).drop("disregard")
+    val disregarded: DataFrame = coded.filter(col("disregard")).drop("disregard")
   }
 
-  /** Numbers the `process` calls; see [[Result]]. */
-  private val evaluations = new java.util.concurrent.atomic.AtomicLong
-
-  /** `df` carrying a fresh call number in its analyzed plan only: an
-    * always-true filter on that number (`isnotnull`, which Spark does not
-    * warn about as it does a trivially true `n = n`), which constant
-    * folding removes before planning. The cache tells two calls apart,
-    * and the generated code of every call is the same, so a later call
-    * over the same forms (a streaming micro-batch) reuses the compiled
-    * classes. */
-  private def numbered(df: DataFrame): DataFrame =
-    df.filter(lit(evaluations.incrementAndGet()).isNotNull)
-
-  /** Run the pipeline over raw form DataFrames `(uuid, data)`. */
+  /** Run the pipeline over raw form DataFrames `(uuid, data)`, once, in one
+    * job into a local checkpoint, and return when that job is done. */
   def process(spark: SparkSession, forms: Map[String, DataFrame],
               cfg: EngineConfig): Result = {
     // P1 + P2 per form
@@ -117,8 +91,7 @@ object DataPipeline {
         buildDataRows(spark, withLinks, t, cfg)
       }
     }
-    new Result(numbered(perType.reduce(_.unionByName(_)))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    new Result(perType.reduce(_.unionByName(_)).localCheckpoint(true))
   }
 
   /** to_codes step wrapper (process_steps/to_codes.py:32-152): location

@@ -779,6 +779,20 @@ object Dedup {
       .filter(col("n_docs") > 1)
   }
 
+  /** An eager checkpoint: local, or reliable where executors can be lost.
+    * The reliable one persists first, or its WRITE recomputes the lineage
+    * the eager count already ran (documented RDD.checkpoint behavior). Its
+    * files stay unless spark.cleaner.referenceTracking.cleanCheckpoints
+    * is on (default off): clean the checkpoint dir after long runs. */
+  private def checkpointed(df: DataFrame, reliable: Boolean): DataFrame =
+    if (!reliable) df.localCheckpoint(true)
+    else {
+      val cached = df.persist()
+      val out = cached.checkpoint(true)
+      cached.unpersist()
+      out
+    }
+
   /** Connected components over an undirected near-dup pair list — the step
     * that turns detector output (pairs, possibly from SEVERAL detectors
     * unioned) into dedup clusters and a canonical survivor per cluster.
@@ -855,41 +869,25 @@ object Dedup {
       s"maxIter=$maxIter: the budget counts the two rounds folded into " +
         "initialization, and convergence is first observable on round 3 — " +
         "pass maxIter >= 3")
-    def checkpointed(df: DataFrame): DataFrame =
-      if (!reliableCheckpoints) df.localCheckpoint(true)
-      else {
-        // persist-then-checkpoint: without the persist, the eager count
-        // materializes the plan once and the checkpoint WRITE recomputes
-        // the whole lineage a second time (documented RDD.checkpoint
-        // behavior). NOTE reliable checkpoint files are not auto-deleted
-        // (spark.cleaner.referenceTracking.cleanCheckpoints defaults to
-        // false) — enable that conf or clean the checkpoint dir after
-        // long runs.
-        val cached = df.persist()
-        val out = cached.checkpoint(true)
-        cached.unpersist()
-        out
-      }
-    // pairs appears twice in the symmetric-closure plan (both directions),
-    // and a self-union recomputes its whole upstream pipeline per branch —
-    // persist for the one job that materializes edges, then release (but
-    // never clobber a persistence the CALLER established).
-    val callerPersisted =
-      pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val p = if (callerPersisted) pairs else pairs.persist()
-    // the size-gate count IS the materializing job: persist the symmetric
-    // closure, count it (fills the cache), and only the BSP route pays a
-    // checkpoint — written FROM the cache, so pair generation runs exactly
-    // once either way. (The previous shape checkpointed first and then
-    // counted, spending one extra scheduling+scan round-trip per call —
-    // measured ~0.1 s of the corpus_pipeline floor.)
-    val sym = p
-      .select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(p.select(col(bCol).as("src"), col(aCol).as("dst")))
+    // the symmetric closure in ONE pass over `pairs` (a self-union runs
+    // pair generation once per branch), as an eager local checkpoint whose
+    // job also OBSERVES the size gate's edge count, as the label rounds'
+    // probe does (a separate count job cost ~0.1 s of the corpus_pipeline
+    // floor); a scalar count over the checkpoint is the fallback.
+    val sizeObs = org.apache.spark.sql.Observation()
+    val sym = pairs
+      .select(explode(array(
+        struct(col(aCol).as("src"), col(bCol).as("dst")),
+        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
       .distinct()
-      .persist()
-    val edgeCount = sym.count()
-    if (!callerPersisted) p.unpersist()
+      .observe(sizeObs, count(lit(1)).as("edges"))
+      .localCheckpoint(true)
+    val edgeCount = org.apache.spark.sql.GraftColumnBridge
+      .observedOrEmpty(sizeObs).get("edges") match {
+      case Some(n: java.lang.Long) => n.longValue()
+      case _                       => sym.count()
+    }
     // integral ids only, so the min-label ordering is unambiguous across
     // engines
     val idType = sym.schema("src").dataType
@@ -900,7 +898,6 @@ object Dedup {
       val es = sym
         .select(col("src").cast("long"), col("dst").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
-      sym.unpersist()
       // union-find; component label = min id reachable, exactly the BSP's
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
@@ -931,11 +928,10 @@ object Dedup {
           col("is_canonical"))
       else out
     }
-    // BSP route: edges is CHECKPOINTED, not just persisted — every round's
-    // query references it, and analysis would re-walk the full upstream
-    // pair-generation plan each time. The write reads sym's cached blocks.
-    val edges = checkpointed(sym)
-    sym.unpersist()
+    // BSP route: every round's query reads the closure's checkpoint, so
+    // analysis never re-walks the upstream pair-generation plan; a
+    // reliable checkpoint, where asked for, is written from its blocks
+    val edges = if (reliableCheckpoints) checkpointed(sym, reliable = true) else sym
     // rounds 1 AND 2 folded into initialization: the symmetric closure
     // makes every vertex a `src`, so min(src, min(dst)) IS the first
     // propagation round (one aggregation over edges), and the second is
@@ -951,7 +947,7 @@ object Dedup {
       .unionByName(edges
         .join(label1.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), col("comp")))
-      .groupBy("id").agg(min("comp").as("comp")))
+      .groupBy("id").agg(min("comp").as("comp")), reliableCheckpoints)
     // Each round ends in an EAGER localCheckpoint: caching alone is not
     // enough for iterative plans — the logical plan still nests every
     // previous round, so driver-side analysis/optimization grows per round
@@ -982,7 +978,8 @@ object Dedup {
       val obs = org.apache.spark.sql.Observation()
       val next = checkpointed(self.unionByName(propagated)
         .groupBy("id").agg(min("comp").as("comp"), min("prev").as("prev"))
-        .observe(obs, sum(when(col("comp") < col("prev"), 1L)).as("changed")))
+        .observe(obs, sum(when(col("comp") < col("prev"), 1L)).as("changed")),
+        reliableCheckpoints)
       val changed = org.apache.spark.sql.GraftColumnBridge
         .observedOrEmpty(obs).get("changed") match {
         case Some(n: java.lang.Long) => n.longValue()
@@ -1037,35 +1034,17 @@ object Dedup {
   def connectedComponentsStars(pairs: DataFrame, aCol: String = "a",
                                bCol: String = "b", maxIter: Int = 20,
                                reliableCheckpoints: Boolean = false): DataFrame = {
-    def checkpointed(df: DataFrame): DataFrame =
-      if (!reliableCheckpoints) df.localCheckpoint(true)
-      else {
-        val cached = df.persist()
-        val out = cached.checkpoint(true)
-        cached.unpersist()
-        out
-      }
-    // pairs is read twice below (edges + self-loop ids) — persist for the
-    // two materializing jobs unless the caller already did, then release
-    val callerPersisted =
-      pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val p = if (callerPersisted) pairs else pairs.persist()
-    // canonical (larger, smaller) direction, self-loops and dups dropped
-    var edges = checkpointed(p
-      .select(col(aCol).as("x"), col(bCol).as("y"))
-      .filter(col("x") =!= col("y"))
-      .select(greatest(col("x"), col("y")).as("u"),
-        least(col("x"), col("y")).as("v"))
-      .distinct())
-    // ids whose ONLY edges are self-loops (a, a) would otherwise vanish
-    // with the filter above, while [[connectedComponents]] keeps them as
-    // canonical singletons (the symmetric closure makes (a, a) a real
-    // vertex there) — capture them now and re-attach any the star forest
-    // doesn't surface. Checkpointed: referenced after the loop, long
-    // after p is unpersisted.
-    val selfIds = checkpointed(p.filter(col(aCol) === col(bCol))
-      .select(col(aCol).as("id")).distinct())
-    if (!callerPersisted) p.unpersist()
+    // ONE pass over `pairs`, oriented (larger, smaller) and distinct: its
+    // self-loops are the ids [[connectedComponents]] keeps as canonical
+    // singletons (re-attached after the loop), the rest the first edge set.
+    // Nulls go first: greatest/least skip them, making (null, a) a loop.
+    val oriented = checkpointed(pairs
+      .filter(col(aCol).isNotNull && col(bCol).isNotNull)
+      .select(greatest(col(aCol), col(bCol)).as("u"),
+        least(col(aCol), col(bCol)).as("v"))
+      .distinct(), reliableCheckpoints)
+    var edges = oriented.filter(col("u") =!= col("v"))
+    val selfIds = oriented.filter(col("u") === col("v")).select(col("u").as("id"))
     var iter = 0
     var converged = false
     // per-node star-forest violation test over the symmetric view: a node
@@ -1102,7 +1081,7 @@ object Dedup {
         .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .filter(col("u") =!= col("v"))
-        .distinct())
+        .distinct(), reliableCheckpoints)
       val bad = org.apache.spark.sql.GraftColumnBridge
         .observedOrEmpty(obs).get("bad") match {
         case Some(n: java.lang.Long) => n.longValue()
@@ -1121,7 +1100,7 @@ object Dedup {
           .select(col("v").as("u"), col("m").as("v"))
           .unionByName(ssMin.select(col("u"), col("m").as("v")))
           .filter(col("u") =!= col("v"))
-          .distinct())
+          .distinct(), reliableCheckpoints)
       }
       iter += 1
     }

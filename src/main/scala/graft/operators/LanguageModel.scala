@@ -33,12 +33,12 @@ import org.apache.spark.sql.functions._
   */
 object LanguageModel {
 
-  /** A model the scorers read several times: a frame the caller already
-    * persisted or checkpointed as it is, a derived plan as an eager local
-    * checkpoint, so its training explode runs once. */
+  /** A model the scorers read several times: a frame that already is a
+    * checkpoint (a `LogicalRDD` plan, as `CorpusStream.fit` returns) as it
+    * is, any other plan as an eager local checkpoint, so its training
+    * explode runs once. */
   private def materialized(model: DataFrame): DataFrame =
-    if (model.storageLevel != org.apache.spark.storage.StorageLevel.NONE ||
-        model.queryExecution.logical
+    if (model.queryExecution.logical
           .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) model
     else model.localCheckpoint(true)
 

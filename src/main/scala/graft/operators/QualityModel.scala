@@ -131,20 +131,24 @@ object QualityModel {
     * weights (length buckets+1, bias last).
     *
     * The whole trajectory is built as ONE chained plan — per step, the
-    * current one-row weight frame broadcast-crossJoins the persisted
-    * features, the gradient sums aggregate, and the next weights are a
-    * projection over that one row — and a single collect at the end
+    * current one-row weight frame broadcast-crossJoins the features, the
+    * gradient sums aggregate, and the next weights are a projection over
+    * that one row — and a single collect at the end
     * executes it. GD steps therefore cost exchanges inside one query, not
     * `iters` separate collect round-trips (the old shape: ~0.6 s of fixed
     * job latency per step at sf0.1, iteration- not data-bound). The
     * weight-update expression `w - lr * ((g / 1e6) / n)` runs the exact
     * IEEE ops the driver loop ran, on the same integer-exact gradient
     * sums, so the trajectory — and the unrolled-CTE oracle — is unchanged
-    * bit for bit. */
+    * bit for bit.
+    *
+    * The one query reads `feats` once per step, so pass a materialized
+    * frame (`TrainingDataQueries.qualityScored`, the one caller, passes a
+    * local checkpoint), not a plan that would recompute the features
+    * `iters` times. */
   def train(feats: DataFrame, buckets: Int, iters: Int, lr: Double)
       : Array[Double] = {
     require(iters >= 1, s"iters=$iters: need at least one step")
-    val f = feats.persist()
     val spark = feats.sparkSession
     // AQE off for the trajectory query only: every exchange here is a
     // 1-row aggregate or broadcast, and AQE's per-exchange query-stage
@@ -170,7 +174,7 @@ object QualityModel {
         // them through the aggregation to the next projection
         val carry = (0 to buckets).map(j => min(col(s"w$j")).as(s"w$j"))
         val all = gs ++ carry
-        wdf = f.crossJoin(broadcast(wdf))
+        wdf = feats.crossJoin(broadcast(wdf))
           .agg(all.head, all.tail: _*)
           .select((0 to buckets).map(j =>
             (col(s"w$j") - lit(lr) *
@@ -182,7 +186,6 @@ object QualityModel {
       Array.tabulate(buckets + 1)(row.getDouble)
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-      f.unpersist()
     }
   }
 

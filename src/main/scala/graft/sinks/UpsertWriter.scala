@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** S7 — uuid-keyed upsert sink (reference
@@ -90,6 +91,13 @@ object UpsertWriter {
     }
     else f.isFile && f.getName.endsWith(".parquet")
 
+  /** The partition columns Spark discovered in a store read back. */
+  private def partitionColumns(store: DataFrame): Seq[String] =
+    store.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        fs.partitionSchema.fieldNames.toSeq
+    }.getOrElse(Nil)
+
   def upsert(spark: SparkSession, batch: DataFrame, path: String,
              keys: Seq[String] = Seq("uuid", "type")): Unit = {
     val dir = new java.io.File(path)
@@ -97,16 +105,16 @@ object UpsertWriter {
     // restore it BEFORE the existence check or the merge would treat the
     // store as fresh and drop all history
     restoreInterrupted(dir)
-    val exists = hasParquet(dir)
-    val merged =
-      if (!exists) batch
-      else {
-        val current = spark.read.parquet(path)
-        val newKeys = batch.select(keys.map(col): _*).distinct()
-        current.join(newKeys, keys, "left_anti").unionByName(batch)
-      }
+    val current = if (hasParquet(dir)) Some(spark.read.parquet(path)) else None
+    val merged = current.fold(batch) { cur =>
+      val newKeys = batch.select(keys.map(col): _*).distinct()
+      cur.join(newKeys, keys, "left_anti").unionByName(batch)
+    }
+    // keep the store's partition layout (a DataWriter `type=…/epi_year=…` tree)
+    val layout = current.toSeq.flatMap(partitionColumns)
     val tmp = path + ".tmp"
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp)
+    (if (layout.isEmpty) merged else merged.repartition(layout.map(col): _*))
+      .write.mode(SaveMode.Overwrite).partitionBy(layout: _*).parquet(tmp)
     // atomic-ish swap (single-FS); object stores would overwrite in place or MERGE
     swapDir(new java.io.File(tmp), new java.io.File(path))
   }

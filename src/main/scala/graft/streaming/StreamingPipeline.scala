@@ -21,12 +21,10 @@ object StreamingPipeline {
     * output per micro-batch. `formName` identifies which form the stream
     * carries (the reference's {formId, data} envelope).
     *
-    * Each micro-batch calls [[DataPipeline.process]] once. The `data`
-    * upsert evaluates the pipeline and fills the result's shared cache; the
-    * `disregarded.isEmpty` probe and the `disregarded` upsert read that
-    * cache. `release()` runs in a `finally`, so no micro-batch, failed or
-    * not, leaves a cache entry behind (Spark's foreachBatch pattern for
-    * writing one batch to several sinks). */
+    * Each micro-batch calls [[DataPipeline.process]] once, which evaluates
+    * the pipeline into a local checkpoint that the `data` upsert, the
+    * `disregarded.isEmpty` probe and the `disregarded` upsert all read
+    * (Spark's foreachBatch pattern for writing one batch to several sinks). */
   def start(spark: SparkSession, stream: DataFrame, formName: String,
             cfg: DataPipeline.EngineConfig, dataPath: String,
             disregardedPath: String, checkpoint: String): StreamingQuery =
@@ -35,11 +33,9 @@ object StreamingPipeline {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val result = DataPipeline.process(spark, Map(formName -> batch), cfg)
-        try {
-          UpsertWriter.upsert(spark, result.data, dataPath)
-          if (!result.disregarded.isEmpty)
-            UpsertWriter.upsert(spark, result.disregarded, disregardedPath)
-        } finally result.release()
+        UpsertWriter.upsert(spark, result.data, dataPath)
+        if (!result.disregarded.isEmpty)
+          UpsertWriter.upsert(spark, result.disregarded, disregardedPath)
       }
       .start()
 

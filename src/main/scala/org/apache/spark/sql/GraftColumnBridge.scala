@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import scala.concurrent.duration._
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into the `private[sql]` classic Column↔Expression converters —
@@ -11,10 +12,13 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Non-blocking read of an [[Observation]]'s metrics (`getOrEmpty` is
-    * `private[sql]`; `get()` blocks forever if the metric event never
-    * arrives — wrong failure mode for a probe that has a cheap fallback). */
-  def observedOrEmpty(obs: Observation): Map[String, Any] = obs.getOrEmpty
+  /** Non-blocking read of an [[Observation]]'s metrics, empty unless they
+    * arrive within 100 ms (AQE prunes a `CollectMetrics` under an empty
+    * join): `get()` would block forever, and Spark's `getOrEmpty` throws
+    * on that timeout (its empty Row has no schema). */
+  def observedOrEmpty(obs: Observation): Map[String, Any] =
+    scala.util.Try(scala.concurrent.Await.result(obs.future, 100.millis))
+      .fold(_ => Map.empty, r => r.getValuesMap(r.schema.fieldNames.toSeq))
 
   /** DataFrame over a logical plan (`Dataset.ofRows` is `private[sql]`) —
     * for probes that time SUB-plans of a query (e.g. the pipeline below a

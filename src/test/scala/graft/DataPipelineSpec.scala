@@ -1,12 +1,13 @@
 package graft
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{CacheProbe, GraftColumnBridge, Row}
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.sql.{CacheProbe, DataFrame, GraftColumnBridge, Row}
 import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Expression, MapFromEntries}
-import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec,
+  LogicalRDD, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import graft.config._
 import graft.functions.EvalCatalog
@@ -17,7 +18,7 @@ import graft.sources.FormSource
   * QC → visit control → fan-out → codes → located, epi-tagged `data` rows,
   * including register multiple-row splitting and disregard routing.
   */
-class DataPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DataPipelineSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
   import spark.implicits._
 
@@ -78,16 +79,32 @@ class DataPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Map("demo_case" -> caseForm, "demo_register" -> registerForm)
   }
 
-  private var processed = false
-  private lazy val result = {
-    processed = true
-    DataPipeline.process(spark, forms, cfg)
-  }
-
-  override def afterAll(): Unit =
-    try { if (processed) result.release() } finally super.afterAll()
+  private lazy val result = DataPipeline.process(spark, forms, cfg)
 
   private object Plans extends AdaptiveSparkPlanHelper
+
+  /** [[DataPipeline.process]] and the executed plans of the local
+    * checkpoints it ran, caught by a listener: the job that evaluated the
+    * pipeline. */
+  private def processCaptured(forms: Map[String, DataFrame],
+                              cfg: DataPipeline.EngineConfig)
+      : (DataPipeline.Result, Seq[SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val res = DataPipeline.process(spark, forms, cfg)
+      GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      (res, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("location join resolves the hierarchy and drops unknown devices") {
     val rows = result.data.filter(col("type") === "case")
@@ -153,9 +170,8 @@ class DataPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("g3", Map("lng" -> "50.0", "lat" -> "50.0", "d" -> "2016-01-01"))
     ).toDF("uuid", "data")
     val res = DataPipeline.process(spark, Map("geo_form" -> form), cfg2)
-    val out = try res.data.select(col("uuid"), col("district"), col("region"))
+    val out = res.data.select(col("uuid"), col("district"), col("region"))
       .collect().map(r => r.getString(0) -> (r.getInt(1), r.getInt(2))).toMap
-      finally res.release()
     assert(out === Map("g1" -> ((3, 2)), "g2" -> ((6, 2)))) // g3 outside → dropped
   }
 
@@ -182,10 +198,9 @@ class DataPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     ).toDF("uuid", "data")
     val res = DataPipeline.process(spark,
       Map("demo_case" -> caseForm, "demo_followup" -> followups), linkCfg)
-    val out = try res.data.filter(col("type") === "case")
+    val out = res.data.filter(col("type") === "case")
       .select(col("uuid"), col("variables"))
       .as[(String, Map[String, String])].collect().toMap
-      finally res.release()
     assert(out("c1")("fu_count") === "2")
     assert(out("c1")("fu_any_lab") === "1")     // some linked row has lab=yes
     assert(!out("c1").contains("fu_last_lab"))  // last (by date) row has lab=no
@@ -210,13 +225,11 @@ class DataPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     ).toDF("uuid", "data")
     val res = DataPipeline.process(spark,
       Map("demo_case" -> caseForm, "demo_followup" -> followups), linkCfg)
-    try {
-      val out = res.data.filter(col("type") === "case")
-      assert(!out.columns.contains("data"))
-      val vars = out.select(col("variables"))
-        .as[Map[String, String]].head()
-      assert(vars("fu_count") === "1")
-    } finally res.release()
+    val out = res.data.filter(col("type") === "case")
+    assert(!out.columns.contains("data"))
+    val vars = out.select(col("variables"))
+      .as[Map[String, String]].head()
+    assert(vars("fu_count") === "1")
   }
 
   test("a link to a form that was not given fails naming the link and form") {
@@ -244,70 +257,54 @@ class DataPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(regs("r1:2") === (("1", "20")))
   }
 
-  test("data and disregarded read one cached evaluation until release()") {
+  test("data and disregarded read one evaluation") {
     // a catalog of ~70 codes: still one EvalCatalog per data type, planned
-    // once, inside the cached relation
+    // once, in the checkpoint's job
     val padded = cfg.copy(codes = cfg.codes ++
       (1 to 64).map(i => CodeDef(id = s"pad_$i",
         typ = "case", method = "match", dbColumn = "icd_code", condition = s"Z$i")))
-    def evaluators(plan: org.apache.spark.sql.execution.SparkPlan) =
+    def evaluators(plan: SparkPlan) =
       Plans.collect(plan) { case p => p }
         .flatMap(_.expressions.flatMap(_.collect { case e: EvalCatalog => e }))
     val entriesBefore = CacheProbe.entries(spark)
-    val res = DataPipeline.process(spark, forms, padded)
-    val (dataRows, disregardedRows, shared) =
-      try {
-        val plan = res.disregarded.queryExecution.executedPlan
-        val scans = Plans.collect(plan) { case s: InMemoryTableScanExec => s }
-        assert(scans.size === 1)
-        assert(evaluators(plan).isEmpty)
-        // one evaluator per data type (case, register)
-        val relation = scans.head.relation
-        assert(evaluators(relation.cachedPlan).size === padded.dataTypes.size)
-        val shared = relation.cacheBuilder.logicalPlan
-        assert(CacheProbe.holds(spark, shared))
-        // a second call over the same inputs gets its own frame: it does not
-        // read this unreleased result's rows
-        val again = DataPipeline.process(spark, forms, padded)
-        try assert(CacheProbe.entries(spark) === entriesBefore + 2)
-        finally again.release()
-        (res.data.collect().toSeq, res.disregarded.collect().toSeq, shared)
-      } finally res.release()
-    assert(!CacheProbe.holds(spark, shared))
+    val (res, evaluated) = processCaptured(forms, padded)
+    assert(evaluated.size === 1)
+    // one evaluator per data type (case, register), in the checkpoint only
+    assert(evaluators(evaluated.head).size === padded.dataTypes.size)
+    assert(evaluators(res.data.queryExecution.executedPlan).isEmpty)
+    assert(evaluators(res.disregarded.queryExecution.executedPlan).isEmpty)
+    val dataRows = res.data.collect().toSeq
+    val disregardedRows = res.disregarded.collect().toSeq
     assert(CacheProbe.entries(spark) === entriesBefore)
 
-    // content: the same routing as the uncached small-catalog run
+    // content: the same routing as the small-catalog run
     assert(disregardedRows.map(_.getAs[String]("uuid")) === Seq("u4"))
     assert(!dataRows.exists(_.getAs[String]("uuid") == "u4"))
-    // the two outputs partition exactly the rows of one unfiltered
-    // evaluation (run fresh, now that nothing caches it)
-    val unfiltered = GraftColumnBridge.ofRows(spark, shared)
+    // the two outputs partition exactly the checkpoint's rows
+    val checkpoint = res.data.queryExecution.analyzed.collect {
+      case r: LogicalRDD => r
+    }
+    assert(checkpoint.size === 1)
+    val coded = GraftColumnBridge.ofRows(spark, checkpoint.head)
       .select(res.data.columns.map(col).toSeq: _*).collect().toSeq
     def bag(rows: Seq[Row]) = rows.groupBy(identity).view.mapValues(_.size).toMap
-    assert(unfiltered.size === dataRows.size + disregardedRows.size)
-    assert(bag(unfiltered) === bag(dataRows ++ disregardedRows))
+    assert(coded.size === dataRows.size + disregardedRows.size)
+    assert(bag(coded) === bag(dataRows ++ disregardedRows))
   }
 
   test("a second process call over the same forms compiles no new class") {
-    // the call number that keeps each cached frame apart lives in the
-    // analyzed plan only, so every call generates the same code
-    def run(): DataPipeline.Result = {
+    def run(): Unit = {
       val res = DataPipeline.process(spark, forms, cfg)
       res.data.collect(); res.disregarded.collect()
-      res
     }
     val entriesBefore = CacheProbe.entries(spark)
-    val first = run()
-    try {
-      val compiled = org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME.getCount
-      val second = run()
-      try {
-        assert(org.apache.spark.metrics.source.CodegenMetrics
-          .METRIC_COMPILATION_TIME.getCount === compiled)
-        assert(CacheProbe.entries(spark) === entriesBefore + 2)
-      } finally second.release()
-    } finally first.release()
+    run()
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    run()
+    assert(org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount === compiled)
+    assert(CacheProbe.entries(spark) === entriesBefore)
   }
 
   test("CSV forms: QC and date filters read the columns, not a map build") {
@@ -327,26 +324,22 @@ class DataPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         calculation = "age", dbColumn = "age"),
       CodeDef(id = "qc_gender", method = "not_null", condition = "None",
         dbColumn = "gender", category = Seq("discard"))))
-    val res = DataPipeline.process(spark,
+    val (res, evaluated) = processCaptured(
       Map("demo_case" -> FormSource.csv(spark, dir.resolve("demo_case.csv").toString)),
       cfg.copy(dataTypes = cfg.dataTypes.take(1), qc = Map("demo_case" -> qc)))
-    try {
-      val cached = Plans.collect(res.data.queryExecution.executedPlan) {
-        case s: InMemoryTableScanExec => s.relation.cachedPlan
-      }
-      assert(cached.size === 1)
-      val filters: Seq[Expression] = Plans.collect(cached.head) {
-        case f: FilterExec => Seq(f.condition)
-        case s: FileSourceScanExec => s.dataFilters
-      }.flatten
-      assert(filters.nonEmpty)
-      val mapBuilds = filters.filter(_.exists(e =>
-        e.isInstanceOf[ArrayFilter] || e.isInstanceOf[MapFromEntries]))
-      assert(mapBuilds.isEmpty, mapBuilds.mkString("\n"))
-      // u3: unparseable visit date; u4: no gender (discarded)
-      val ages = res.data.select(col("uuid"), element_at(col("data"), "age"))
-        .as[(String, Option[String])].collect().toMap
-      assert(ages === Map("u1" -> Some("30"), "u2" -> None))
-    } finally res.release()
+    // the checkpoint's own execution carries the whole pipeline plan
+    assert(evaluated.size === 1)
+    val filters: Seq[Expression] = Plans.collect(evaluated.head) {
+      case f: FilterExec => Seq(f.condition)
+      case s: FileSourceScanExec => s.dataFilters
+    }.flatten
+    assert(filters.nonEmpty)
+    val mapBuilds = filters.filter(_.exists(e =>
+      e.isInstanceOf[ArrayFilter] || e.isInstanceOf[MapFromEntries]))
+    assert(mapBuilds.isEmpty, mapBuilds.mkString("\n"))
+    // u3: unparseable visit date; u4: no gender (discarded)
+    val ages = res.data.select(col("uuid"), element_at(col("data"), "age"))
+      .as[(String, Option[String])].collect().toMap
+    assert(ages === Map("u1" -> Some("30"), "u2" -> None))
   }
 }

@@ -622,6 +622,13 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.sorted.toSeq === Seq(
       ("u1", "alert", "keep"), ("u1", "case", "new"), ("u2", "case", "keep"),
       ("u3", "case", "keep"), ("u4", "case", "new")))
+    // the store keeps DataWriter's layout: every partition directory is
+    // still there and no parquet file sits at the top
+    for (part <- Seq("type=case/epi_year=2015", "type=case/epi_year=2016",
+                     "type=alert/epi_year=2015"))
+      assert(new java.io.File(s"$path/$part").isDirectory, s"$part is gone")
+    val top = new java.io.File(path).listFiles().map(_.getName)
+    assert(!top.exists(_.endsWith(".parquet")), top.mkString(", "))
   }
 
   test("partitioned upsert rewrites only the touched partitions") {
@@ -797,7 +804,7 @@ class StreamingSpec extends AnyFunSuite {
       dataPath, disregardedPath, tmpDir() + "/ckpt")
     q.awaitTermination(60000)
     assert(q.exception.isEmpty)
-    // every micro-batch released its shared pipeline frame
+    // no micro-batch leaves a cache entry behind
     assert(CacheProbe.entries(spark) === cachedBefore)
 
     val out = spark.read.parquet(dataPath)

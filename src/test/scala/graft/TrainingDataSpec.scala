@@ -748,16 +748,23 @@ class TrainingDataSpec extends AnyFunSuite {
   test("self-loop-only ids survive both component variants as singletons") {
     // (7,7) has no real neighbors: the BSP's symmetric closure keeps it, and
     // the star variant must re-attach it after dropping the self-loop edge;
-    // (1,1) ALSO has a real edge and must not be duplicated
-    val pairs = Seq((1L, 2L), (1L, 1L), (7L, 7L)).toDF("a", "b")
-    val want = Map(
-      1L -> ((1L, true)), 2L -> ((1L, false)), 7L -> ((7L, true)))
+    // (1,1) ALSO has a real edge and must not be duplicated. With only
+    // self-loops, or no pairs, the star variant has no edge to contract and
+    // its round probe, pruned with the empty join, never reports.
+    val cases = Seq(
+      Seq((1L, 2L), (1L, 1L), (7L, 7L)) ->
+        Map(1L -> ((1L, true)), 2L -> ((1L, false)), 7L -> ((7L, true))),
+      Seq((7L, 7L)) -> Map(7L -> ((7L, true))),
+      Seq.empty[(Long, Long)] -> Map.empty[Long, (Long, Boolean)])
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Boolean)].collect()
         .map { case (id, c, can) => id -> ((c, can)) }.toMap
-    assert(toMap(Dedup.connectedComponents(pairs)) === want) // local path
-    assert(toMap(Dedup.connectedComponents(pairs, maxLocalEdges = 0)) === want)
-    assert(toMap(Dedup.connectedComponentsStars(pairs)) === want)
+    cases.foreach { case (ps, want) =>
+      val pairs = ps.toDF("a", "b")
+      assert(toMap(Dedup.connectedComponents(pairs)) === want) // local path
+      assert(toMap(Dedup.connectedComponents(pairs, maxLocalEdges = 0)) === want)
+      assert(toMap(Dedup.connectedComponentsStars(pairs)) === want, ps)
+    }
   }
 
   test("components size gate routes exactly at the maxLocalEdges boundary") {
@@ -841,10 +848,11 @@ class TrainingDataSpec extends AnyFunSuite {
   }
 
   test("curation operators leave no cache entry behind") {
-    // each call below forces one intermediate that several branches read;
-    // it is an eager local checkpoint the returned frame owns, so no call
-    // adds an entry to the session's cache and a second call (nothing
-    // served from a cache) returns the same rows
+    // each call below forces one intermediate that several branches (or
+    // rounds, or GD steps) read; it is an eager local checkpoint the
+    // returned frame owns, or the caller's frame, so no call adds an entry
+    // to the session's cache and a second call (nothing served from a
+    // cache) returns the same rows
     val d = docs(1L -> "a b c d e f g", 2L -> "a b c d e f g",
       3L -> "x y z w q r s", 4L -> "a b c d e f h", 5L -> "the the the cat")
     val langed = d.withColumn("lang", lit("en"))
@@ -852,7 +860,16 @@ class TrainingDataSpec extends AnyFunSuite {
       concat(lit("s"), (col("doc_id") % 2).cast("string")).as("grp"),
       col("text"))
     val q = Seq((0, "a b"), (1, "x cat")).toDF("query_id", "text")
+    val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L), (6L, 6L)).toDF("a", "b")
+    val feats = QualityModel.features(d, 4,
+      array_contains(TextAnalysis.tokens(col("text")), "a"))
     val sites: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "connectedComponents" -> (() => Dedup.connectedComponents(pairs)),
+      "connectedComponents BSP" -> (() =>
+        Dedup.connectedComponents(pairs, maxLocalEdges = 0)),
+      "connectedComponentsStars" -> (() => Dedup.connectedComponentsStars(pairs)),
+      "QualityModel.train" -> (() =>
+        QualityModel.train(feats, 4, iters = 2, lr = 4.0).toSeq.toDF("w")),
       "cacheHashedPostings" -> (() => Dedup.cacheHashedPostings(d)),
       "jaccardPairs capped" -> (() =>
         Dedup.jaccardPairs(d, 0.5, maxShingleDf = Some(10))),
