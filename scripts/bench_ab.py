@@ -17,7 +17,11 @@ median and quartiles, the change/base ratio of the medians and the pairs
 the change won (ties count for neither side). A metric is a GAIN when the
 change won at least 9/10 of the pairs and its median is better than the
 base's by more than the base's interquartile range. It is WORSE when the
-median is worse by more than the metric's bound. Otherwise it is "flat".
+median is worse by more than the metric's bound. It is "unresolved" when the
+base's interquartile range is wider than the bound (as a share of the base
+median), so that a shift within the bound cannot be told from the spread,
+unless every change run reads better than every base run. Otherwise it is
+"flat".
 Every run's result line is appended to --log (JSON lines) when given. A
 run that prints no result keeps its exit code and its last 30 stderr
 lines in that entry's "error" field, and says so in one stderr line.
@@ -92,6 +96,9 @@ def report(runs, metrics):
         elif bound is not None and -gain > bound * mb:
             verdict = f"WORSE (beyond bound {bound})"
             worse = True
+        elif (bound is not None and b3 - b1 > bound * mb
+              and not (max(change) < min(base) if lower else min(change) > max(base))):
+            verdict = f"unresolved (base IQR beyond bound {bound})"
         else:
             verdict = "flat"
         # a base median of 0 (no spill on either side) has no ratio

@@ -22,8 +22,7 @@ object Session {
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
   /** Build (or join) the session. `confs` carry deployment paths only —
-    * the test warehouse, the bench's tmpfs `spark.local.dir` — and are
-    * applied after the base confs. */
+    * the test warehouse — and are applied after the base confs. */
   def build(cores: Int = cores,
             confs: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder()

@@ -43,7 +43,7 @@ object UpsertWriter {
     *     back before the next upsert reads the store — no history loss;
     *  3. after promote, before aside cleanup: the live dir is already the
     *     new state; the stale aside is hidden from readers (`_` prefix)
-    *     and deleted by the next swap or tree heal.
+    *     and deleted by the next swap.
     */
   private def restoreInterrupted(target: java.io.File): Unit = {
     val old = asideFor(target)
@@ -51,20 +51,6 @@ object UpsertWriter {
       throw new java.io.IOException(
         s"found interrupted swap ($old exists, $target missing) but could not restore")
   }
-
-  /** Partition-tree recovery for [[upsertPartitioned]]: restore any
-    * interrupted per-partition swap under `root`, and delete stale aside
-    * directories whose live twin survived. */
-  private def restoreInterruptedTree(root: java.io.File): Unit =
-    Option(root.listFiles()).getOrElse(Array.empty).foreach { f =>
-      if (f.isDirectory) {
-        if (f.getName.startsWith("_old_")) {
-          val live = new java.io.File(f.getParentFile,
-            f.getName.stripPrefix("_old_"))
-          if (live.exists()) rm(f) else restoreInterrupted(live)
-        } else restoreInterruptedTree(f)
-      }
-    }
 
   /** Promote `tmp` into `target`: rename the live directory ASIDE first,
     * promote, then delete the old copy — a failed rename restores the
@@ -117,67 +103,6 @@ object UpsertWriter {
       .write.mode(SaveMode.Overwrite).partitionBy(layout: _*).parquet(tmp)
     // atomic-ish swap (single-FS); object stores would overwrite in place or MERGE
     swapDir(new java.io.File(tmp), new java.io.File(path))
-  }
-
-  /** Partition-scoped upsert over the [[DataWriter]] `(type, epi_year)`
-    * layout: only the partitions the batch touches are read, merged and
-    * swapped — the rest of the store is never opened or rewritten. This is
-    * the MERGE-shaped path a nightly incremental run takes at 100 TB: a
-    * day's batch touches a handful of (type, epi_year) partitions, so the
-    * rewrite is bounded by batch-adjacent data, not store size.
-    *
-    * The touched-partition list is collected driver-side — it is partition
-    * METADATA (types × years, dozens of values), the same scale of state a
-    * Delta/Iceberg MERGE plans its file rewrite from. */
-  def upsertPartitioned(spark: SparkSession, batch: DataFrame, path: String,
-                        partitionCols: Seq[String] = Seq("type", "epi_year"),
-                        keys: Seq[String] = Seq("uuid", "type")): Unit = {
-    val root = new java.io.File(path)
-    if (!root.exists()) {
-      batch.repartition(partitionCols.map(col): _*)
-        .write.partitionBy(partitionCols: _*).parquet(path)
-      return
-    }
-    // heal any interrupted per-partition swap BEFORE reading the store —
-    // a missing live partition would silently read as "no previous rows"
-    restoreInterruptedTree(root)
-    val touched = batch.select(partitionCols.map(col): _*).distinct().collect()
-    if (touched.isEmpty) return // empty micro-batch: nothing to merge
-    // null-safe equality: a null partition value must select the
-    // __HIVE_DEFAULT_PARTITION__ rows, which plain === never matches
-    val prune = touched.map { row =>
-      partitionCols.zipWithIndex
-        .map { case (c, i) => col(c) <=> lit(row.get(i)) }
-        .reduce(_ && _)
-    }.reduce(_ || _)
-    // partition-pruned scan: only touched partitions are read (the filter is
-    // on partition columns, so it prunes directories, not rows)
-    val current = spark.read.parquet(path).filter(prune)
-    val newKeys = batch.select(keys.map(col): _*).distinct()
-    val merged = current.join(newKeys, keys, "left_anti")
-      .unionByName(batch.select(current.columns.toIndexedSeq.map(col): _*))
-    val tmp = path + ".tmp"
-    merged.repartition(partitionCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(tmp)
-    // swap ONLY the touched partition directories. Directory names use
-    // Spark's own partition-path encoding (percent-escaping; null →
-    // __HIVE_DEFAULT_PARTITION__) so the swap finds exactly what the write
-    // produced.
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    touched.foreach { row =>
-      val rel = partitionCols.zipWithIndex.map { case (c, i) =>
-        val v = row.get(i)
-        val str = if (v == null) null else v.toString
-        ExternalCatalogUtils.getPartitionPathString(c,
-          if (str == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME else str)
-      }.mkString("/")
-      val tmpPart = new java.io.File(s"$tmp/$rel")
-      val livePart = new java.io.File(s"$path/$rel")
-      livePart.getParentFile.mkdirs()
-      if (tmpPart.exists()) swapDir(tmpPart, livePart)
-      else if (livePart.exists()) rm(livePart) // batch emptied the partition
-    }
-    rm(new java.io.File(tmp))
   }
 
   /** Dead-letter quarantine (reference step_failures, model.py:47-54 +

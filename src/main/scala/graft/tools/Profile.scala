@@ -115,16 +115,13 @@ object Profile {
     }
   }
 
-  private def runOnce(spark: SparkSession, sfDir: String, query: String): Double = {
-    val t0 = System.nanoTime()
-    SparkEntry.queries(query)(spark, sfDir).queryExecution.toRdd.count()
-    (System.nanoTime() - t0) / 1e9
-  }
+  private def runOnce(spark: SparkSession, sfDir: String, query: String): Unit =
+    SparkEntry.queries(query)(spark, sfDir).queryExecution.toRdd.count(): Unit
 
-  /** A warm run, then a measured run with the recorder installed. */
-  private def measure(spark: SparkSession, sfDir: String,
-                      query: String): (Double, Recorder) = {
-    runOnce(spark, sfDir, query)
+  /** One run of `body` with the recorder installed: its wall seconds and
+    * the recorder. The listener bus is drained before and after, so the
+    * recorder sees the events of this run only. */
+  private def recorded(spark: SparkSession)(body: => Unit): (Double, Recorder) = {
     val sc = spark.sparkContext
     GraftListenerBridge.waitUntilListenerBusEmpty(sc)
     val stack = Thread.currentThread.getStackTrace.map(_.toString)
@@ -132,10 +129,24 @@ object Profile {
       .getOrElse(stack.find(_.startsWith("graft.")).get))
     sc.addSparkListener(rec)
     try {
-      val wall = runOnce(spark, sfDir, query)
+      val t0 = System.nanoTime()
+      body
+      val wall = (System.nanoTime() - t0) / 1e9
       GraftListenerBridge.waitUntilListenerBusEmpty(sc)
       (wall, rec)
     } finally sc.removeSparkListener(rec)
+  }
+
+  /** The `--jobs` counters of one run of `body`, reported under `query`
+    * (Bench records one timed rep of each gate with it). */
+  def jobs(spark: SparkSession, query: String)(body: => Unit): Jobs = {
+    val (wall, r) = recorded(spark)(body)
+    val ss = r.stages.values.toSeq
+    def mb(f: Acc => Long) = ss.map(f).sum / 1048576.0
+    Jobs(query, wall, r.jobs, ss.count(_.done), ss.map(_.tasks).sum,
+      ss.map(_.taskMs).sum / 1000.0, ss.map(_.deserMs).sum / 1000.0,
+      ss.map(_.gcMs).sum / 1000.0, mb(_.shuffleRead), mb(_.shuffleWrite),
+      mb(_.spill))
   }
 
   private def audit(spark: SparkSession, sfDir: String, query: String): Plan = {
@@ -164,15 +175,11 @@ object Profile {
              mode: String = "--jobs"): Report = mode match {
     case "--plan" => audit(spark, sfDir, query)
     case "--jobs" =>
-      val (wall, r) = measure(spark, sfDir, query)
-      val ss = r.stages.values.toSeq
-      def mb(f: Acc => Long) = ss.map(f).sum / 1048576.0
-      Jobs(query, wall, r.jobs, ss.count(_.done), ss.map(_.tasks).sum,
-        ss.map(_.taskMs).sum / 1000.0, ss.map(_.deserMs).sum / 1000.0,
-        ss.map(_.gcMs).sum / 1000.0, mb(_.shuffleRead), mb(_.shuffleWrite),
-        mb(_.spill))
+      runOnce(spark, sfDir, query)
+      jobs(spark, query)(runOnce(spark, sfDir, query))
     case "--stages" =>
-      val (wall, r) = measure(spark, sfDir, query)
+      runOnce(spark, sfDir, query)
+      val (wall, r) = recorded(spark)(runOnce(spark, sfDir, query))
       val done = r.stages.toSeq.filter(_._2.done)
       Stages(query, wall, done.size, done.sortBy(-_._2.wallMs).take(30).map {
         case (id, s) => Stage(id, s.wallMs, s.tasks, s.taskMs, s.deserMs, s.gcMs,

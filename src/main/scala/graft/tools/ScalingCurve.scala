@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Session, SparkEntry, Tables}
+import graft.{Bench, Session, SparkEntry, Tables}
 
 /** Measured scaling curves across the three testdata decades
   * (sf0.001 → sf0.01 → sf0.1, 10× data each step) for the headline
@@ -8,8 +8,9 @@ import graft.{Session, SparkEntry, Tables}
   * shapes: the 100× claim should ride on BOTH "the plan is the same
   * shape" and "wall time grows at-or-under the data growth".
   *
-  * Method: one JVM, primed (same pass the bench uses), per (query, sf):
-  * one warm construction+run, then `reps` timed runs, min reported.
+  * Method: one JVM, primed by [[Bench.prime]], per (query, sf): one warm
+  * construction+run, then `reps` runs timed by [[Bench.time]], min
+  * reported.
   * Expect ratios well UNDER 10× per decade at these toy sizes — fixed
   * per-job scheduling dominates small SFs; a ratio NEAR or
   * ABOVE 10× flags a super-linear stage (quadratic pair blowup, a
@@ -39,36 +40,23 @@ object ScalingCurve {
       val li = Tables.lineitem(spark, dir).count()
       println(s"SCALING sf=$dir documents=$docs lineitem=$li")
     }
-    // priming (the bench's discipline): drain infra JIT before timing
-    Seq("q1_pricing_summary", "q3_top_orders", "q_window_analytics")
-      .flatMap(SparkEntry.queries.get).foreach { fn =>
-        (1 to 4).foreach { _ =>
-          try fn(spark, sfs.last).queryExecution.toRdd.count()
-          catch { case _: Throwable => () }
-        }
-      }
-    def timeOnce(name: String, dir: String): Double = {
-      System.gc()
-      val t0 = System.nanoTime()
-      // a failed query must NOT report its time-to-failure as a
-      // measurement — NaN poisons the min and the ratio columns so the
-      // table shows the failure instead of a fast bogus number
-      val ok =
-        try { SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[scaling] $name @ $dir FAILED: ${e.getMessage}")
-          false
-        }
-      if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
-    }
+    Bench.prime(spark, sfs.last)
     println(f"${"query"}%-24s ${"sf0.001"}%8s ${"sf0.01"}%8s ${"sf0.1"}%8s ${"x01/001"}%8s ${"x1/01"}%8s")
     names.foreach { name =>
       if (!SparkEntry.queries.contains(name))
         println(s"SCALING $name: unknown query")
       else {
+        val gate = SparkEntry.queries(name)
         val mins = sfs.map { dir =>
-          timeOnce(name, dir) // warm: codegen + first-contact JIT
-          (1 to reps).map(_ => timeOnce(name, dir)).min
+          // a failed gate must NOT report its time-to-failure: NaN poisons
+          // the min and the ratio columns, so the table shows the failure
+          try {
+            Bench.time(spark, dir, gate) // warm: codegen + first-contact JIT
+            (1 to reps).map(_ => Bench.time(spark, dir, gate)).min
+          } catch { case e: Throwable =>
+            System.err.println(s"[scaling] $name @ $dir FAILED: ${e.getMessage}")
+            Double.NaN
+          }
         }
         println(f"SCALING ${name}%-24s ${mins(0)}%8.2f ${mins(1)}%8.2f ${mins(2)}%8.2f " +
           f"${mins(1) / mins(0)}%8.2f ${mins(2) / mins(1)}%8.2f")

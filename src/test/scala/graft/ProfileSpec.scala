@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.Profile
 
 /** The profiler stays runnable: each mode reports on a real gate in the
-  * shared session, and leaves the session running with its confs as found. */
+  * shared session, and leaves the session running with its confs as found.
+  * Bench's in-process core records one rep per gate through it. */
 class ProfileSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
   private val sfDir = "/root/testdata/sf0.001"
@@ -37,6 +38,22 @@ class ProfileSpec extends AnyFunSuite {
     assert(r.expressionNodes >= 1 && r.render.contains("expressionNodes="), r.render)
     assert(r.formatted.contains("Exchange"))
     assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    assert(!spark.sparkContext.isStopped)
+    assert(spark.range(3).count() === 3L)
+  }
+
+  test("Bench times a gate with Profile's counters and names a gate that throws") {
+    val boom: Bench.Gate = (_, _) => throw new IllegalStateException("injected gate failure")
+    val suite = Bench.run(spark, sfDir, Seq(
+      "q1_pricing_summary" -> SparkEntry.queries("q1_pricing_summary"), "boom" -> boom))
+    assert(suite.failed === Seq("boom"))
+    val Seq(t) = suite.timings
+    assert(t.name === "q1_pricing_summary" && t.reps.size === 4)
+    val c = t.counters
+    assert(c.jobs >= 1 && c.tasks >= 1 && c.deserS >= 0 && c.gcS >= 0, c.render)
+    assert(suite.total === t.min && suite.totalMedian === t.median)
+    assert(suite.line.contains(""""n_queries":1,"failed":["boom"]"""))
+    assert(!suite.detail.contains(""""boom":{"""), suite.detail)
     assert(!spark.sparkContext.isStopped)
     assert(spark.range(3).count() === 3L)
   }

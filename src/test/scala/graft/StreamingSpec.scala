@@ -631,25 +631,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(!top.exists(_.endsWith(".parquet")), top.mkString(", "))
   }
 
-  test("partitioned upsert rewrites only the touched partitions") {
-    val path = tmpDir() + "/store"
-    val v1 = Seq(("u1", "case", 2015, "a"), ("u2", "case", 2016, "b"))
-      .toDF("uuid", "type", "epi_year", "v")
-    UpsertWriter.upsertPartitioned(spark, v1, path)
-    val p2015 = new java.io.File(s"$path/type=case/epi_year=2015")
-    def snapshot() = p2015.listFiles()
-      .map(f => (f.getName, f.lastModified())).toSet
-    val before = snapshot()
-    // this batch touches ONLY (case, 2016): u2 replaced, u3 added
-    val v2 = Seq(("u2", "case", 2016, "B"), ("u3", "case", 2016, "c"))
-      .toDF("uuid", "type", "epi_year", "v")
-    UpsertWriter.upsertPartitioned(spark, v2, path)
-    assert(snapshot() === before) // untouched partition's files unchanged
-    val out = spark.read.parquet(path).select(col("uuid"), col("v"))
-      .as[(String, String)].collect().toMap
-    assert(out === Map("u1" -> "a", "u2" -> "B", "u3" -> "c"))
-  }
-
   test("upsert crash-safety: a failed stage write leaves the live store intact and a retry converges") {
     val path = tmpDir() + "/store"
     val v1 = Seq(("u1", "case", "v1"), ("u2", "case", "v1"))
@@ -677,27 +658,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(healed === Map("u1" -> "v1", "u2" -> "v2", "u3" -> "v2"))
   }
 
-  test("partitioned upsert crash-safety: failed batch never reaches live partitions") {
-    val path = tmpDir() + "/store"
-    val v1 = Seq(("u1", "case", 2015, "a"), ("u2", "case", 2016, "b"))
-      .toDF("uuid", "type", "epi_year", "v")
-    UpsertWriter.upsertPartitioned(spark, v1, path)
-    val bad = Seq(("u2", "case", 2016, "B"), ("u3", "case", 2016, "boom"))
-      .toDF("uuid", "type", "epi_year", "v")
-      .withColumn("v", when(col("v") === "boom",
-        raise_error(lit("injected write failure"))).otherwise(col("v")))
-    intercept[Exception] { UpsertWriter.upsertPartitioned(spark, bad, path) }
-    val after = spark.read.parquet(path).select(col("uuid"), col("v"))
-      .as[(String, String)].collect().toMap
-    assert(after === Map("u1" -> "a", "u2" -> "b"))
-    val good = Seq(("u2", "case", 2016, "B"), ("u3", "case", 2016, "c"))
-      .toDF("uuid", "type", "epi_year", "v")
-    UpsertWriter.upsertPartitioned(spark, good, path)
-    val healed = spark.read.parquet(path).select(col("uuid"), col("v"))
-      .as[(String, String)].collect().toMap
-    assert(healed === Map("u1" -> "a", "u2" -> "B", "u3" -> "c"))
-  }
-
   test("upsert heals a swap interrupted between move-aside and promote") {
     val path = tmpDir() + "/store"
     val v1 = Seq(("u1", "case", "v1")).toDF("uuid", "type", "payload")
@@ -715,63 +675,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(out === Map("u1" -> "v1", "u2" -> "v2"))
   }
 
-  test("partitioned upsert heals wedged partition swaps and clears stale .old dirs") {
-    val path = tmpDir() + "/store"
-    val v1 = Seq(("u1", "case", 2015, "a"), ("u2", "case", 2016, "b"))
-      .toDF("uuid", "type", "epi_year", "v")
-    UpsertWriter.upsertPartitioned(spark, v1, path)
-    // wedge one partition mid-swap (live gone, the aside holds the data)
-    // and plant a stale aside next to a surviving live partition — the
-    // stale copy must stay invisible to reads (underscore prefix) and be
-    // cleaned by the heal
-    val p2015 = new java.io.File(s"$path/type=case/epi_year=2015")
-    val aside2015 = new java.io.File(p2015.getParentFile, "_old_" + p2015.getName)
-    assert(p2015.renameTo(aside2015))
-    val p2016 = new java.io.File(s"$path/type=case/epi_year=2016")
-    val stale = new java.io.File(p2016.getParentFile, "_old_" + p2016.getName)
-    assert(stale.mkdirs())
-    java.nio.file.Files.copy(
-      p2016.listFiles().filter(_.getName.endsWith(".parquet")).head.toPath,
-      new java.io.File(stale, "part-stale.parquet").toPath)
-    val v2 = Seq(("u3", "case", 2016, "c")).toDF("uuid", "type", "epi_year", "v")
-    UpsertWriter.upsertPartitioned(spark, v2, path)
-    val out = spark.read.parquet(path).select(col("uuid"), col("v"))
-      .as[(String, String)].collect().toMap
-    assert(out === Map("u1" -> "a", "u2" -> "b", "u3" -> "c"))
-    assert(!aside2015.exists())
-    assert(!stale.exists())
-  }
-
-  test("partitioned upsert never confuses a partition VALUE ending in .old with a swap artifact") {
-    // '.' is not percent-escaped in partition paths, so a string value
-    // literally ending in ".old" writes a directory like type=case.old —
-    // the heal must leave it alone (the aside convention is the
-    // underscore-prefixed sibling, which no col=value dir can collide with)
-    val path = tmpDir() + "/store"
-    val v1 = Seq(("u1", "case.old", 2015, "a"), ("u2", "case", 2015, "b"))
-      .toDF("uuid", "type", "epi_year", "v")
-    UpsertWriter.upsertPartitioned(spark, v1, path)
-    val v2 = Seq(("u2", "case", 2015, "B")).toDF("uuid", "type", "epi_year", "v")
-    UpsertWriter.upsertPartitioned(spark, v2, path)
-    val out = spark.read.parquet(path).select(col("uuid"), col("type"), col("v"))
-      .as[(String, String, String)].collect().toSet
-    assert(out === Set(("u1", "case.old", "a"), ("u2", "case", "B")))
-  }
-
-  test("partitioned upsert handles empty batches and null partition values") {
-    val path = tmpDir() + "/store2"
-    val v1 = Seq(("u1", "case", Some(2015), "a"), ("u2", "case", None, "b"))
-      .toDF("uuid", "type", "epi_year", "v")
-    UpsertWriter.upsertPartitioned(spark, v1, path)
-    // empty batch: no-op, store intact
-    UpsertWriter.upsertPartitioned(spark, v1.limit(0), path)
-    // replace the null-partition row (unparseable-date records land there)
-    val v2 = Seq(("u2", "case", Option.empty[Int], "B"))
-      .toDF("uuid", "type", "epi_year", "v")
-    UpsertWriter.upsertPartitioned(spark, v2, path)
-    val out = spark.read.parquet(path).select(col("uuid"), col("v"))
-      .as[(String, String)].collect().toMap
-    assert(out === Map("u1" -> "a", "u2" -> "B"))
+  test("upsert over a DataWriter store: a moved epi_year, a null epi_year and an empty batch") {
+    import graft.sinks.DataWriter
+    val path = tmpDir() + "/data"
+    val cols = Seq("uuid", "type", "epi_year", "clinic", "date", "payload")
+    val history = Seq(
+      ("u1", "case", Some(2015), "c1", "2015-12-30", "old"),
+      ("u2", "case", Some(2016), "c1", "2016-01-06", "keep"),
+      ("u3", "case", Option.empty[Int], "c2", "not a date", "old")).toDF(cols: _*)
+    DataWriter.write(history, path)
+    def rows() = spark.read.parquet(path)
+      .select("uuid", "type", "epi_year", "payload")
+      .as[(String, String, Option[Int], String)].collect().sorted.toSeq
+    val before = rows()
+    // an empty batch leaves the store as it was
+    UpsertWriter.upsert(spark, history.limit(0), path)
+    assert(rows() === before)
+    // u1's corrected visit date moves it to 2016; u3 (null epi_year, the
+    // partition of unparseable dates) is re-submitted
+    val batch = Seq(
+      ("u1", "case", Some(2016), "c1", "2016-01-02", "new"),
+      ("u3", "case", Option.empty[Int], "c2", "still not a date", "new")).toDF(cols: _*)
+    UpsertWriter.upsert(spark, batch, path)
+    assert(rows() === Seq(
+      ("u1", "case", Some(2016), "new"), ("u2", "case", Some(2016), "keep"),
+      ("u3", "case", None, "new")))
   }
 
   test("streaming foreachBatch reuses the batch pipeline and upserts") {
