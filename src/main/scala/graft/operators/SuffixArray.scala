@@ -37,7 +37,11 @@ import org.apache.spark.sql.functions._
   * single-task window anywhere. Every round ends in an eager checkpoint
   * (the BSP lineage discipline); intermediate rank tables are RETAINED —
   * they are exactly the binary-lifting tables that answer LCP queries in
-  * log rounds ([[lcpAdjacent]]), the same reuse Flick & Sundar make.
+  * log rounds ([[lcpAdjacent]]), the same reuse Flick & Sundar make. The
+  * rounds run on the first read of the model's rank tables ([[Model]]):
+  * a `.sa` reader, or a consumer above the size gate. Under the gate the
+  * consumers replay the doubling on the driver ([[LocalSa]]) and no
+  * round runs at all.
   *
   * Scale shape (100 TB): every frame is (doc_id, pos)-keyed and
   * corpus-token-sized; each round is ONE doc-keyed window (the partner
@@ -50,14 +54,22 @@ import org.apache.spark.sql.functions._
   */
 object SuffixArray {
 
-  /** Rank tables by doubling level (k → (doc_id, pos, rank)), the final
-    * suffix array frame (`sa`, level maxPrefix), per-doc token lengths,
-    * and the (doc_id, pos, token) frame that built them. `maxPrefix` and
-    * `nSuffixes` (the fit's own count) let the consumers' size-gated
-    * local fast paths replay the doubling trajectory without a job. */
-  final case class Model(levels: Seq[(Int, DataFrame)], sa: DataFrame,
-                         lens: DataFrame, toks: DataFrame,
-                         maxPrefix: Int = 0, nSuffixes: Long = -1L)
+  /** A fitted suffix array: the (doc_id, pos, token) frame that builds
+    * it (checkpointed by [[fit]]), the prefix budget and the fit's own
+    * suffix count. The rank tables by doubling level (`levels`, k →
+    * (doc_id, pos, rank)), the final suffix array frame (`sa`, the last
+    * level) and the per-doc token lengths (`lens`) are built on their
+    * first read: by a `.sa` reader such as [[saIndex]], or by
+    * [[lcpAdjacent]] or [[crossMaxMatch]] above the size gate. Under the
+    * gate those two replay the doubling from `toks` on the driver and
+    * read none of the three. */
+  final case class Model(toks: DataFrame, maxPrefix: Int, nSuffixes: Long) {
+    lazy val levels: Seq[(Int, DataFrame)] =
+      doubling(toks, maxPrefix, nSuffixes)
+    lazy val sa: DataFrame = levels.last._2
+    lazy val lens: DataFrame = toks.groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("len")).localCheckpoint(true)
+  }
 
   /** Global dense rank of `df` rows by `keys`, appended as column `out`
     * (long, 1-based; equal keys share a rank).
@@ -108,9 +120,11 @@ object SuffixArray {
       .drop("__pid", "__lr", "__off"), total)
   }
 
-  /** Build the suffix array (and its doubling rank tables) over the
-    * corpus. `maxPrefix` (a power of two ≥ the longest document's token
-    * count) bounds the compared prefix: ranks are exact suffix ranks for
+  /** Fit the suffix array over the corpus: one checkpoint of its
+    * (doc_id, pos, token) rows and their count; the doubling rounds run
+    * on the first read of the model's rank tables ([[Model]]).
+    * `maxPrefix` (a power of two ≥ the longest document's token count)
+    * bounds the compared prefix: ranks are exact suffix ranks for
     * documents up to maxPrefix tokens, and longer documents compare by
     * their first maxPrefix tokens (callers chunk or raise the budget —
     * rounds grow as log₂, so 4096 costs 12). */
@@ -124,9 +138,13 @@ object SuffixArray {
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         col("col").as("token"))
       .localCheckpoint(true)
-    val lens = toks.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("len")).localCheckpoint(true)
-    val nSuffixes = toks.count()
+    Model(toks, maxPrefix, toks.count())
+  }
+
+  /** The distributed prefix-doubling rounds over `toks`: the rank table
+    * of every level, ascending in k, the last one the suffix array. */
+  private def doubling(toks: DataFrame, maxPrefix: Int,
+                       nSuffixes: Long): Seq[(Int, DataFrame)] = {
     val (r0, d0) = rankWithCount(toks, Seq("token"), "rank")
     var cur = r0.select(col("doc_id"), col("pos"), col("rank"))
       .localCheckpoint(true)
@@ -158,7 +176,7 @@ object SuffixArray {
       done = dist == lastDistinct || dist == nSuffixes
       lastDistinct = dist
     }
-    Model(levels, cur, lens, toks, maxPrefix, nSuffixes)
+    levels
   }
 
   /** Size gate for the consumers' local fast paths ([[lcpAdjacent]],
@@ -171,77 +189,71 @@ object SuffixArray {
     * always false. */
   val DefaultMaxLocalSuffixes = 1000000L
 
+  /** Bits of a packed sort key that hold the suffix index: the driver
+    * replay numbers at most 2^20 - 1 suffixes, above that the size gate
+    * sends every model to the distributed rounds. */
+  private val IdxBits = 20
+  private val IdxMask = (1L << IdxBits) - 1
+
   /** Driver-side replay of the doubling trajectory + SA order + adjacent
-    * LCP descent — the same integer semantics as the distributed rounds:
-    * dense ranks (UTF-8-binary token order — [[BpeLearn.utf8Less]], how
-    * the engine compares strings), the fit's exact convergence rule, the
-    * greedy top-down descent over retained levels, and the final clamp to
-    * both suffixes' remaining lengths. */
+    * LCP descent, from the model's `toks` alone: it reads none of the
+    * model's rank tables, so none is built. The same integer semantics
+    * as the distributed rounds: dense ranks (UTF-8-binary token order —
+    * [[BpeLearn.utf8Less]], how the engine compares strings), the fit's
+    * exact convergence rule, the greedy top-down descent over retained
+    * levels, and the final clamp to both suffixes' remaining lengths.
+    *
+    * On primitive arrays: suffixes are numbered 0..n-1 in (doc_id, pos)
+    * order, `end(i)` is one past the last suffix of i's document, and a
+    * level is an `Array[Long]` of ranks, so the partner at pos+k is i+k
+    * while i+k < end(i) and rank 0 (absent) past the document end. A
+    * dense re-rank is one sort of the keys r1·(n+1)+r2, each packed
+    * with its suffix index into one long (< 2^60 while n < 2^20). */
   private final class LocalSa(model: Model) {
     private val rows = model.toks
       .select(col("doc_id"), col("pos"), col("token")).collect()
-    val docs: java.util.HashMap[Long, Array[String]] = {
-      val m = new java.util.HashMap[Long, Array[String]]()
-      val lens = new java.util.HashMap[Long, Int]()
-      rows.foreach { r =>
-        val d = r.getLong(0)
-        lens.put(d, math.max(lens.getOrDefault(d, 0), r.getLong(1).toInt + 1))
-      }
-      lens.forEach((d, n) => m.put(d, new Array[String](n)))
-      rows.foreach(r => m.get(r.getLong(0))(r.getLong(1).toInt) = r.getString(2))
-      m
-    }
+      .sortBy(r => (r.getLong(0), r.getLong(1)))
     private val n = rows.length
-    private val keys: Array[(Long, Long)] = {
-      val a = new Array[(Long, Long)](n)
-      var i = 0
-      docs.forEach { (d, toks) =>
-        var p = 0
-        while (p < toks.length) { a(i) = (d, p.toLong); i += 1; p += 1 }
+    val doc: Array[Long] = rows.map(_.getLong(0))
+    val pos: Array[Long] = rows.map(_.getLong(1))
+    private val end: Array[Int] = {
+      val e = new Array[Int](n)
+      var i = n - 1
+      while (i >= 0) {
+        e(i) = if (i == n - 1 || doc(i + 1) != doc(i)) i + 1 else e(i + 1)
+        i -= 1
       }
-      java.util.Arrays.sort(a, Ordering.Tuple2[Long, Long])
-      a
+      e
     }
-    /** levels in ASCENDING k, exactly the fit's retained trajectory.
-      * Values are boxed Longs so an absent (doc, pos) reads as null, the
-      * distributed rows' "no rank row past the document end". */
-    val levels: Seq[(Int, java.util.HashMap[(Long, Long), java.lang.Long])] = {
-      def dense[K: scala.reflect.ClassTag](key: (Long, Long) => K,
-                                           lt: (K, K) => Boolean)
-        : (java.util.HashMap[(Long, Long), java.lang.Long], Long) = {
-        val ks = keys.map { case (d, p) => key(d, p) }
-        val distinct = ks.distinct
-        scala.util.Sorting.stableSort(distinct,
-          (a: K, b: K) => lt(a, b))
-        val rankOf = new java.util.HashMap[K, java.lang.Long]()
-        var i = 0
-        while (i < distinct.length) {
-          rankOf.put(distinct(i), java.lang.Long.valueOf(i + 1L)); i += 1
-        }
-        val out = new java.util.HashMap[(Long, Long), java.lang.Long]()
-        var j = 0
-        while (j < keys.length) {
-          out.put(keys(j), rankOf.get(ks(j))); j += 1
-        }
-        (out, distinct.length.toLong)
+    /** dense 1-based ranks of `key` and their distinct count */
+    private def dense(key: Array[Long]): (Array[Long], Long) = {
+      val packed = Array.tabulate(n)(i => key(i) << IdxBits | i)
+      java.util.Arrays.sort(packed)
+      val out = new Array[Long](n)
+      var r = 0L
+      var i = 0
+      while (i < n) {
+        if (i == 0 || packed(i) >>> IdxBits != packed(i - 1) >>> IdxBits) r += 1
+        out((packed(i) & IdxMask).toInt) = r
+        i += 1
       }
-      val (r0, d0) = dense[String](
-        (d, p) => docs.get(d)(p.toInt), BpeLearn.utf8Less)
+      (out, r)
+    }
+    /** levels in ASCENDING k, exactly the fit's trajectory */
+    private val levels: Seq[(Int, Array[Long])] = {
+      val vocab = rows.map(_.getString(2)).distinct.sortWith(BpeLearn.utf8Less)
+      val tokRank = new java.util.HashMap[String, Int]()
+      vocab.indices.foreach(j => tokRank.put(vocab(j), j))
+      val (r0, d0) = dense(rows.map(r => tokRank.get(r.getString(2)).toLong))
       var cur = r0
       var lvls = Seq(1 -> cur)
       var k = 1
       var lastDistinct = d0
       var done = d0 == n
       while (k < model.maxPrefix && !done) {
-        val kk = k
-        val c = cur
-        val (nxt, dist) = dense[(Long, Long)](
-          (d, p) => {
-            val r2 = c.get((d, p + kk))
-            (c.get((d, p)).longValue,
-              if (r2 == null) 0L else r2.longValue)
-          },
-          Ordering.Tuple2[Long, Long].lt)
+        val (c, kk) = (cur, k)
+        val (nxt, dist) = dense(Array.tabulate(n)(i =>
+          c(i) * (n + 1) + (if (i + kk < end(i)) c(i + kk) else 0L)))
         cur = nxt
         k *= 2
         lvls :+= k -> cur
@@ -250,26 +262,23 @@ object SuffixArray {
       }
       lvls
     }
-    private val levelsDesc = levels.sortBy(-_._1)
-    /** all (doc, pos) in SA order: (final rank, doc_id, pos) ascending */
-    val order: Array[(Long, Long)] = {
+    private val levelsDesc = levels.reverse
+    /** suffix indices in SA order: final rank, ties by (doc_id, pos) */
+    val order: Array[Int] = {
       val fin = levels.last._2
-      val a = keys.clone()
-      java.util.Arrays.sort(a, Ordering.by[(Long, Long), (Long, Long, Long)] {
-        case (d, p) => (fin.get((d, p)).longValue, d, p)
-      })
-      a
+      val packed = Array.tabulate(n)(i => fin(i) << IdxBits | i)
+      java.util.Arrays.sort(packed)
+      packed.map(p => (p & IdxMask).toInt)
     }
     /** the descent, verbatim: greedy top-down over retained levels, both
       * ranks present and equal → advance by k; clamp to remaining. */
-    def lcp(d1: Long, p1: Long, d2: Long, p2: Long): Long = {
+    def lcp(a: Int, b: Int): Long = {
       var acc = 0L
       levelsDesc.foreach { case (k, rk) =>
-        val ra = rk.get((d1, p1 + acc))
-        val rb = rk.get((d2, p2 + acc))
-        if (ra != null && rb != null && ra.longValue == rb.longValue) acc += k
+        if (a + acc < end(a) && b + acc < end(b) &&
+            rk((a + acc).toInt) == rk((b + acc).toInt)) acc += k
       }
-      math.min(acc, math.min(docs.get(d1).length - p1, docs.get(d2).length - p2))
+      math.min(acc, math.min(end(a) - a, end(b) - b))
     }
   }
 
@@ -291,22 +300,21 @@ object SuffixArray {
                   maxLocalSuffixes: Long = DefaultMaxLocalSuffixes): DataFrame =
     if (localGate(model, maxLocalSuffixes)) {
       val ls = new LocalSa(model)
-      val out = (0 until ls.order.length - 1).map { i =>
-        val (d1, p1) = ls.order(i)
-        val (d2, p2) = ls.order(i + 1)
-        (d1, p1, d2, p2, i + 1L, ls.lcp(d1, p1, d2, p2))
+      val o = ls.order
+      val out = (0 until o.length - 1).map { i =>
+        val (a, b) = (o(i), o(i + 1))
+        (ls.doc(a), ls.pos(a), ls.doc(b), ls.pos(b), i + 1L, ls.lcp(a, b))
       }
       val spark = model.toks.sparkSession
       import spark.implicits._
       out.toDF("d1", "p1", "d2", "p2", "sa_idx", "lcp")
     } else lcpAdjacentFrom(model, saIndex(model))
 
-  /** True when the model is small enough for the driver replay AND the
-    * fit recorded its size (models from older constructions run the
-    * distributed rounds unchanged). */
+  /** True when the model is small enough for the driver replay: at most
+    * `maxLocalSuffixes` suffixes, and fewer than 2^20 whatever the caller
+    * passes (the replay's packed sort keys hold the index in 20 bits). */
   private def localGate(model: Model, maxLocalSuffixes: Long): Boolean =
-    maxLocalSuffixes > 0 && model.nSuffixes >= 0 && model.maxPrefix > 0 &&
-      model.nSuffixes <= maxLocalSuffixes
+    maxLocalSuffixes > 0 && model.nSuffixes <= math.min(maxLocalSuffixes, IdxMask)
 
   /** The suffix array's total order as a dense 1-based index per suffix —
     * ranks tie-broken by (doc_id, pos), materialized once so both the
@@ -518,55 +526,35 @@ object SuffixArray {
     isTrain.select(col("doc_id"),
         col("is_train").cast("boolean").as("__tr")).collect()
       .foreach(r => trMap.put(r.getLong(0), r.getBoolean(1)))
-    val sub = ls.order.filter { case (d, _) => trMap.containsKey(d) }
+    val sub = ls.order.filter(i => trMap.containsKey(ls.doc(i)))
     val n = sub.length
-    val tr = sub.map { case (d, _) => trMap.get(d).booleanValue }
+    val tr = sub.map(i => trMap.get(ls.doc(i)).booleanValue)
     // adjacent LCPs within the tagged subset (the descent runs over the
     // FULL corpus's rank tables, exactly like lcpAdjacentFrom over the
     // subset's sa_idx frame)
-    val lead = new Array[Long](math.max(n - 1, 0))
-    var i = 0
-    while (i < n - 1) {
-      val (d1, p1) = sub(i); val (d2, p2) = sub(i + 1)
-      lead(i) = ls.lcp(d1, p1, d2, p2)
-      i += 1
+    val lead = Array.tabulate(math.max(n - 1, 0))(i => ls.lcp(sub(i), sub(i + 1)))
+    // one pass per direction: the running min of the masked lag (forward,
+    // within each __ca segment) or lead (backward, within each __cb
+    // segment — __cb changes value exactly when the scan passes a train
+    // row going down). A train row resets it and contributes nothing; a
+    // row before the first train row in scan order, or with no minimum
+    // yet, reads the coalesced 0.
+    val none = Long.MaxValue
+    def scan(rows: Range, nb: Int => Long): Array[Long] = {
+      val out = new Array[Long](n)
+      var curMin = none
+      var seen = false
+      rows.foreach { i =>
+        if (tr(i)) { seen = true; curMin = none }
+        else curMin = math.min(curMin, nb(i))
+        out(i) = if (seen && curMin != none) curMin else 0L
+      }
+      out
     }
-    // forward pass: running min of masked lag within each __ca segment
-    val above = new Array[java.lang.Long](n)
-    var curMin: java.lang.Long = null
-    var ca = 0L
-    i = 0
-    while (i < n) {
-      if (tr(i)) { ca += 1; curMin = null } // train row opens its segment
-      val lag: java.lang.Long =
-        if (tr(i) || i == 0) null else java.lang.Long.valueOf(lead(i - 1))
-      if (lag != null && (curMin == null || lag.longValue < curMin.longValue))
-        curMin = lag
-      above(i) = if (ca >= 1) curMin else null
-      i += 1
-    }
-    val totalTrain = ca
-    // backward pass: running min of masked lead within each __cb segment
-    // (__cb = totalTrain - __ca + __trf changes value exactly when the
-    // scan passes a train row going down)
-    val below = new Array[java.lang.Long](n)
-    curMin = null
-    var cb = 0L
-    i = n - 1
-    while (i >= 0) {
-      if (tr(i)) { cb += 1; curMin = null }
-      val ld: java.lang.Long =
-        if (tr(i) || i == n - 1) null else java.lang.Long.valueOf(lead(i))
-      if (ld != null && (curMin == null || ld.longValue < curMin.longValue))
-        curMin = ld
-      below(i) = if (cb >= 1) curMin else null
-      i -= 1
-    }
+    val above = scan(0 until n, i => if (i == 0) none else lead(i - 1))
+    val below = scan(n - 1 to 0 by -1, i => if (i == n - 1) none else lead(i))
     val out = (0 until n).filter(j => !tr(j)).map { j =>
-      val (d, p) = sub(j)
-      val a = if (above(j) == null) 0L else above(j).longValue
-      val b = if (below(j) == null) 0L else below(j).longValue
-      (d, p, math.max(a, b))
+      (ls.doc(sub(j)), ls.pos(sub(j)), math.max(above(j), below(j)))
     }
     val spark = model.toks.sparkSession
     import spark.implicits._

@@ -1304,7 +1304,9 @@ object TrainingDataQueries extends QueryPack {
     "alpha beta gamma delta epsilon zeta eta theta"
 
   /** The suffix array over [[saCorpus]] behind the `suffix_array`,
-    * `sa_longest_dup` and `dedup_substring_sa` gates; each gate fits it. */
+    * `sa_longest_dup` and `dedup_substring_sa` gates; each gate fits it
+    * (a checkpoint and a count), and only `suffix_array`'s `.sa` runs
+    * the doubling rounds. */
   private def saFit(s: SparkSession, dir: String): SuffixArray.Model =
     SuffixArray.fit(saCorpus(s, dir), maxPrefix = 64)
 

@@ -5064,6 +5064,9 @@ class TrainingDataSpec extends AnyFunSuite {
     // unchanged distributed windows — both routes must be bit-equal,
     // including cap-tied LCPs (identical docs longer than the compared
     // prefix would be, at maxPrefix beyond doc length: full ties clamp).
+    // The rank tables are built on first read: trials 1 and 3 call a
+    // local consumer first, trial 2 reads `.sa` before any consumer, so
+    // both initialisation orders must give the same rows.
     val rnd = new scala.util.Random(20260819)
     (1 to 3).foreach { trial =>
       val rows = (1L to 12L).map { id =>
@@ -5071,6 +5074,7 @@ class TrainingDataSpec extends AnyFunSuite {
         id -> Seq.fill(n)(s"w${rnd.nextInt(6)}").mkString(" ")
       } :+ (13L -> "w1 w2 w3 w1 w2 w3") :+ (14L -> "w1 w2 w3 w1 w2 w3")
       val model = SuffixArray.fit(docs(rows: _*), maxPrefix = 16)
+      if (trial == 2) model.sa.count()
       def canon(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toString).sorted.toSeq
       assert(canon(SuffixArray.lcpAdjacent(model)) ===
@@ -5088,6 +5092,34 @@ class TrainingDataSpec extends AnyFunSuite {
         canon(SuffixArray.leakageReport(model, tags, minLen = 2,
           maxLocalSuffixes = 0)), s"trial=$trial leakageReport")
     }
+  }
+
+  test("suffix-array local fast paths run no doubling round (job-count pin)") {
+    // under the size gate the consumers replay the doubling on the driver
+    // from the fit's token rows, so a corpus that needs 5 doubling rounds
+    // runs exactly as many jobs as one that converges at round 0; with
+    // the gate forced off (maxLocalSuffixes = 0) the deep corpus pays for
+    // its rounds, which shows the pin can fail
+    val shallow = docs((1L to 4L).map(id =>
+      id -> (1 to 16).map(j => s"t${id}_$j").mkString(" ")): _*)
+    val deep = docs((1L to 4L).map(id => id -> Seq.fill(16)("x").mkString(" ")): _*)
+    assert(SuffixArray.fit(shallow, maxPrefix = 64).levels.size === 1)
+    assert(SuffixArray.fit(deep, maxPrefix = 64).levels.size === 6)
+    val tags = Seq((1L, true), (2L, true), (3L, false), (4L, false))
+      .toDF("doc_id", "is_train")
+    def jobs(body: => Unit): Int =
+      graft.tools.Profile.jobs(spark, "suffix_array_pin")(body).jobs
+    def leak(d: org.apache.spark.sql.DataFrame, gate: Long) = jobs(
+      SuffixArray.leakageReport(SuffixArray.fit(d, maxPrefix = 64), tags,
+        minLen = 2, maxLocalSuffixes = gate).collect(): Unit)
+    def adj(d: org.apache.spark.sql.DataFrame, gate: Long) = jobs(
+      SuffixArray.lcpAdjacent(SuffixArray.fit(d, maxPrefix = 64),
+        maxLocalSuffixes = gate).collect(): Unit)
+    val local = SuffixArray.DefaultMaxLocalSuffixes
+    assert(leak(deep, local) === leak(shallow, local))
+    assert(adj(deep, local) === adj(shallow, local))
+    assert(leak(deep, 0) > leak(shallow, 0))
+    assert(adj(deep, 0) > adj(shallow, 0))
   }
 
   // ---- winnowing fingerprints (L123) ----
